@@ -34,3 +34,23 @@ def duck():
 @pytest.fixture(scope="session")
 def sf_dir():
     return SF_DIR
+
+
+@pytest.fixture
+def write_embeddings(tmp_path):
+    """write(seed) -> (sf_dir, vectors): (over)writes a seeded 200x64
+    `embeddings.parquet` in the TESTDATA layout under tmp_path."""
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    def write(seed: int, n: int = 200, dim: int = 64):
+        x = np.random.default_rng(seed).standard_normal(
+            (n, dim)).astype(np.float32)
+        pq.write_table(pa.table({
+            "vec_id": pa.array(range(n), pa.int64()),
+            "embedding": pa.array(list(x), pa.list_(pa.float32())),
+            "label": pa.array([i % 10 for i in range(n)], pa.int32()),
+        }), str(tmp_path / "embeddings.parquet"))
+        return str(tmp_path), x
+    return write

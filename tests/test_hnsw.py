@@ -7,7 +7,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-from unified_vector_database_spark import tables
+from unified_vector_database_spark import artifacts, tables
 from unified_vector_database_spark.functions import distance as D
 from unified_vector_database_spark.operators import hnsw
 from unified_vector_database_spark.operators.knn import knn
@@ -22,6 +22,13 @@ def _query(spark, sf_dir, vid=0):
     emb = tables.load_parallel(spark, sf_dir, "embeddings", "vec_id")
     return (emb.where(F.col("vec_id") == vid)
                .select(D.vec_double("embedding").alias("qvec")))
+
+
+def _drop_session_art(monkeypatch, sf_dir):
+    """Force the next session_art call to rebuild the resident copy
+    (the graph itself stays cached); restored after the test."""
+    monkeypatch.delitem(artifacts._CACHE, (
+        "hnsw_session", tables.table_path(sf_dir, "embeddings")))
 
 
 def _plain(spark, sf_dir):
@@ -148,7 +155,7 @@ def test_registered_route_equality(spark, sf_dir, monkeypatch):
     drv = [(r.vec_id, r.score) for r in
            hnsw.hnsw_knn(spark, sf_dir).collect()]
     monkeypatch.setattr(hnsw, "DRIVER_BEAM_MAX_NODES", 0)
-    monkeypatch.setattr(hnsw, "_SESSION_ART", {})
+    _drop_session_art(monkeypatch, sf_dir)
     dist = [(r.vec_id, r.score) for r in
             hnsw.hnsw_knn(spark, sf_dir).collect()]
     assert drv == dist
@@ -210,7 +217,7 @@ def test_filtered_knn_respects_filter_and_routes_agree(spark, sf_dir,
     assert {r.vec_id for r in rows} != unfiltered
     drv = [(r.vec_id, r.score) for r in rows]
     monkeypatch.setattr(hnsw, "DRIVER_BEAM_MAX_NODES", 0)
-    monkeypatch.setattr(hnsw, "_SESSION_ART", {})
+    _drop_session_art(monkeypatch, sf_dir)
     dist = [(r.vec_id, r.score) for r in
             hnsw.hnsw_filtered_knn(spark, sf_dir).collect()]
     assert drv == dist
@@ -240,7 +247,7 @@ def test_sq8_route_equality(spark, sf_dir, monkeypatch):
     drv = [(r.vec_id, r.approx, r.score) for r in
            hnsw.hnsw_sq8_knn(spark, sf_dir).collect()]
     monkeypatch.setattr(hnsw, "DRIVER_BEAM_MAX_NODES", 0)
-    monkeypatch.setattr(hnsw, "_SESSION_ART", {})
+    _drop_session_art(monkeypatch, sf_dir)
     dist = [(r.vec_id, r.approx, r.score) for r in
             hnsw.hnsw_sq8_knn(spark, sf_dir).collect()]
     assert drv == dist
@@ -561,6 +568,28 @@ def test_degenerate_tiny_corpus(spark):
     got = hnsw.hnsw_probe(spark, corpus, art, q, k=10).collect()
     assert 1 <= len(got) <= 3
     assert got[0].score == max(r.score for r in got)
+
+
+def _exact_top10(x, qid=0):
+    """Exact cosine top-10 ids of row qid, ties by id."""
+    import numpy as np
+
+    x = x.astype(np.float64)
+    sc = x @ x[qid] / (np.linalg.norm(x, axis=1) * np.linalg.norm(x[qid]))
+    return sorted(range(len(x)), key=lambda i: (-sc[i], i))[:10]
+
+
+def test_overwrite_then_probe_rebuilds_graph(spark, write_embeddings):
+    """Overwriting the embeddings table must rebuild the cached graph
+    and its resident copy: the second probe answers from the NEW
+    vectors (200 nodes: the beam visits enough to be exact here)."""
+    d, x1 = write_embeddings(seed=1)
+    first = [r.vec_id for r in hnsw.hnsw_knn(spark, d).collect()]
+    assert first == _exact_top10(x1)
+    _, x2 = write_embeddings(seed=2)
+    want = _exact_top10(x2)
+    assert want != first
+    assert [r.vec_id for r in hnsw.hnsw_knn(spark, d).collect()] == want
 
 
 def test_oracle_sql_is_registered():

@@ -8,8 +8,8 @@ from pyspark.sql import functions as F
 from unified_vector_database_spark import tables
 from unified_vector_database_spark.functions import distance as D
 from unified_vector_database_spark.operators.index import (
-    KMEANS_K, assign_cells, ivf_probe, kmeans_fit, lsh_bucket_knn,
-    lsh_planes, sq8_bounds, sq8_quantize,
+    KMEANS_K, assign_cells, centroids_for, ivf_probe, kmeans_fit,
+    lsh_bucket_knn, lsh_planes, sq8_bounds, sq8_quantize,
 )
 from unified_vector_database_spark.operators.knn import knn
 
@@ -212,3 +212,21 @@ def test_pq_entry_scans_parquet_artifact(spark, sf_dir):
     t2 = plan_text(ivfpq_knn(spark, sf_dir))
     assert artifact_path("ivfpq_codes", sf_dir).rsplit("/", 1)[-1] in t2, t2
     assert "PartitionFilters" in t2 and "cid" in t2  # pruned at listing
+
+
+def test_centroids_refit_after_overwrite(spark, write_embeddings):
+    """centroids_for caches the fit per embeddings file; overwriting
+    the file must refit from the new vectors."""
+    def fit(d):
+        corpus, _ = _corpus_query(spark, d)
+        cached = sorted(tuple(r) for r in
+                        centroids_for(spark, d, corpus).collect())
+        fresh = sorted(tuple(r) for r in kmeans_fit(corpus).collect())
+        return cached, fresh
+
+    d, _ = write_embeddings(seed=1)
+    first, fresh = fit(d)
+    assert first == fresh
+    write_embeddings(seed=2)
+    second, fresh = fit(d)
+    assert second == fresh and second != first

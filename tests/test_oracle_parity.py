@@ -66,12 +66,6 @@ def test_parity(name, spark, duck, sf_dir):
         raise AssertionError(f"{name}: value mismatch, first diffs: {diff}")
 
 
-def test_all_queries_return_rows(spark, sf_dir):
-    for name, fn in QUERIES.items():
-        n = fn(spark, sf_dir).count()
-        assert n >= 0, name
-
-
 def test_entry_smoke(spark):
     df = entrymod.entry(spark)
     assert df.count() == 10

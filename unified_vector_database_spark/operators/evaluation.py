@@ -22,7 +22,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from .. import tables
+from .. import artifacts, tables
 from ..functions import distance as D
 from ..registry import register
 
@@ -498,7 +498,6 @@ def err_rank_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
 # -------------------------------------- k-means training introspection
 
 INERTIA_ITERS = (0, 1, 3)   # seed, one Lloyd step, the shipped fit
-_INERTIA_FIT_CACHE: dict[str, object] = {}  # bounded sample fit per corpus
 
 
 def _inertia_oracle() -> str:
@@ -506,22 +505,13 @@ def _inertia_oracle() -> str:
     _lloyd_history), embedded as literals; per-snapshot inertia is
     min-over-centroids squared L2 summed over the WHOLE corpus with a
     DECIMAL fold so the sum is exact and order-free on both engines."""
-    import duckdb
-    import numpy as np
-
     from .index import (
-        KMEANS_ITERS, KMEANS_K, KMEANS_SAMPLE, _dlist, _l2_sql,
+        KMEANS_ITERS, KMEANS_K, _dlist, _fit_sample, _l2_sql,
         _lloyd_history, _oracle_sf,
     )
 
     assert max(INERTIA_ITERS) == KMEANS_ITERS
-    sf = _oracle_sf()
-    con = duckdb.connect()
-    rows = con.execute(
-        f"SELECT embedding FROM '{sf}/embeddings.parquet' "
-        f"ORDER BY vec_id LIMIT {KMEANS_SAMPLE}").fetchall()
-    con.close()
-    x = np.array([r[0] for r in rows], dtype=np.float64)
+    x, _ = _fit_sample(tables.table_path(_oracle_sf(), "embeddings"))
     hist = _lloyd_history(x, KMEANS_K, KMEANS_ITERS)
     mins = []
     for it in INERTIA_ITERS:
@@ -573,16 +563,17 @@ def kmeans_inertia_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     emb = tables.load_parallel(spark, sf_dir, "embeddings", "vec_id")
     corpus = emb.select(D.vec_double("embedding").alias("vec"))
-    if sf_dir not in _INERTIA_FIT_CACHE:
-        rows = (corpus.sparkSession.read
-                .parquet(f"{sf_dir}/embeddings.parquet")
+    path = tables.table_path(sf_dir, "embeddings")
+
+    def build():
+        rows = (spark.read.parquet(path)
                 .orderBy("vec_id").limit(KMEANS_SAMPLE)
                 .select(D.vec_double("embedding").alias("v")).collect())
         x = np.array([r.v for r in rows], dtype=np.float64)
-        _INERTIA_FIT_CACHE[sf_dir] = (
-            None if not len(rows)
-            else _lloyd_history(x, KMEANS_K, KMEANS_ITERS))
-    hist = _INERTIA_FIT_CACHE[sf_dir]
+        return (None if not len(rows)
+                else _lloyd_history(x, KMEANS_K, KMEANS_ITERS))
+
+    hist = artifacts.get("inertia_fit", path, build)
     if hist is None:  # degenerate corpus: nothing to fit or score
         return spark.createDataFrame(
             [], "iter int, inertia double, mean_sq_dist double")

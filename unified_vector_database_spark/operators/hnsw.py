@@ -79,7 +79,7 @@ import re
 
 from pyspark.sql import DataFrame, SparkSession, Window as W, functions as F
 
-from .. import tables
+from .. import artifacts, tables
 from ..functions import distance as D
 from ..registry import register
 
@@ -458,22 +458,16 @@ def _corpus_for(spark: SparkSession, sf_dir: str) -> DataFrame:
     return emb.select("vec_id", D.vec_double("embedding").alias("vec"))
 
 
-# graph artifacts cache per (application, sf_dir), like index.py's
-# _CENTROID_CACHE: the build is the offline path, probes are the
-# online path. The corpus is derived from sf_dir internally, so the
-# cache can never return a graph built from a different corpus than
-# the key names (ADVICE r7 #3).
-_ART_CACHE: dict[tuple[str, str], dict] = {}
-
-
 def art_for(spark: SparkSession, sf_dir: str) -> dict:
     """Build-or-reuse the WRITTEN artifact for sf_dir: the graph is
     built collect-free, materialized via hnsw_write into a session
     temp dir, and handed back as hnsw_read's lazy handles — every
     registered probe therefore exercises the real on-disk artifact
     path (write → bucket-partitioned parquet → read)."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _ART_CACHE:
+    # the build is the offline path, probes are the online path; the
+    # corpus is derived from sf_dir internally, so the graph always
+    # matches the embeddings file its cache entry fingerprints
+    def build() -> dict:
         import atexit
         import shutil
         import tempfile
@@ -486,8 +480,10 @@ def art_for(spark: SparkSession, sf_dir: str) -> dict:
         # via hnsw_write directly and owns the lifecycle)
         atexit.register(shutil.rmtree, path, ignore_errors=True)
         hnsw_write(built, path)
-        _ART_CACHE[key] = hnsw_read(spark, path)
-    return _ART_CACHE[key]
+        return hnsw_read(spark, path)
+
+    return artifacts.get(
+        "hnsw_art", tables.table_path(sf_dir, "embeddings"), build, spark)
 
 
 # Per-session resident twins of the artifact: the beam touches the
@@ -496,12 +492,8 @@ def art_for(spark: SparkSession, sf_dir: str) -> dict:
 # Checkpointing them once per session is the index-resident posture
 # every serving backend has — the graph and vectors live loaded,
 # queries pay only the beam joins.
-_SESSION_ART: dict[tuple[str, str], dict] = {}
-
-
 def session_art(spark: SparkSession, sf_dir: str) -> dict:
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _SESSION_ART:
+    def build() -> dict:
         art = art_for(spark, sf_dir)
         sart = {
             "L": art["L"], "n": art["n"],
@@ -519,8 +511,10 @@ def session_art(spark: SparkSession, sf_dir: str) -> dict:
         # driver-side beam; larger ones keep every edge distributed.
         if art["n"] <= DRIVER_BEAM_MAX_NODES:
             sart["plain"] = collect_art(art)
-        _SESSION_ART[key] = sart
-    return _SESSION_ART[key]
+        return sart
+
+    return artifacts.get(
+        "hnsw_session", tables.table_path(sf_dir, "embeddings"), build, spark)
 
 
 def _score_ids(corpus: DataFrame, qcol: F.Column, ids) -> dict:
@@ -963,8 +957,6 @@ def hnsw_filtered_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
 # recovers it with a bounded exact pass.
 HNSW_SQ8_OVERSAMPLE = 3
 
-_SQ8_CORPUS: dict[tuple[str, str], DataFrame] = {}
-
 
 def sq8_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The quantized-resident corpus the SQ8 beam scores against:
@@ -975,8 +967,7 @@ def sq8_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     map-side inside each scoring join; the session-resident copy here
     caches the decoded frame once, the same serving-time trade
     session_art makes for the raw corpus."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _SQ8_CORPUS:
+    def build() -> DataFrame:
         from .index import sq8_bounds, sq8_quantize
 
         corpus = _corpus_for(spark, sf_dir)
@@ -988,12 +979,13 @@ def sq8_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
                                                hi.alias("hi"))),
             lambda c, bb: bb.lo + c.cast("double")
             * ((bb.hi - bb.lo) / F.lit(255.0)))
-        _SQ8_CORPUS[key] = (
-            sq8_quantize(corpus, bounds).select("vec_id", "codes")
-            .crossJoin(F.broadcast(bounds))
-            .withColumn("vec", dec).select("vec_id", "vec")
-            .coalesce(4).localCheckpoint(eager=False))
-    return _SQ8_CORPUS[key]
+        return (sq8_quantize(corpus, bounds).select("vec_id", "codes")
+                .crossJoin(F.broadcast(bounds))
+                .withColumn("vec", dec).select("vec_id", "vec")
+                .coalesce(4).localCheckpoint(eager=False))
+
+    return artifacts.get(
+        "hnsw_sq8", tables.table_path(sf_dir, "embeddings"), build, spark)
 
 
 @register("hnsw_sq8_knn", oracle=lambda: _hnsw_sq8_oracle())
@@ -1149,15 +1141,11 @@ def hnsw_merge(spark: SparkSession, base_art: dict, base_corpus: DataFrame,
     return {"L": base_art["L"], "n": n_full, "tops": tops, "adj": adj}
 
 
-_MERGED_CACHE: dict[tuple[str, str], dict] = {}
-
-
 def merged_art_for(spark: SparkSession, sf_dir: str) -> dict:
     """Base graph over vec_id >= MERGE_SPLIT, then the vec_id <
     MERGE_SPLIT slice ingested via hnsw_merge — cached per session
     like session_art, with a resident corpus copy."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _MERGED_CACHE:
+    def build() -> dict:
         corpus = _corpus_for(spark, sf_dir)
         base = corpus.where(F.col("vec_id") >= MERGE_SPLIT)
         batch = corpus.where(F.col("vec_id") < MERGE_SPLIT)
@@ -1171,8 +1159,10 @@ def merged_art_for(spark: SparkSession, sf_dir: str) -> dict:
         }
         if art["n"] <= DRIVER_BEAM_MAX_NODES:
             cached["plain"] = collect_art(art)
-        _MERGED_CACHE[key] = cached
-    return _MERGED_CACHE[key]
+        return cached
+
+    return artifacts.get(
+        "hnsw_merged", tables.table_path(sf_dir, "embeddings"), build, spark)
 
 
 @register("hnsw_merge_knn", oracle=lambda: _hnsw_merge_oracle())
@@ -1198,8 +1188,6 @@ def hnsw_merge_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ----------------------------------------------------- numpy twin
-
-_TWIN_CACHE: dict[str, dict] = {}
 
 
 def _seq_cos(X, nrm, si, di):
@@ -1276,32 +1264,30 @@ def _twin_layer_edges(ids, X, nrm, idx_of):
     return sorted((s, d) for s, ds in edges.items() for d in ds)
 
 
-_TWIN_CORPUS_CACHE: dict[str, tuple] = {}
-
-
 def _twin_corpus(sf: str) -> tuple:
     """(ids, X, nrm, idx_of, lvl) for sf's embeddings, DuckDB-loaded."""
-    import duckdb
-    import numpy as np
+    def build() -> tuple:
+        import duckdb
+        import numpy as np
 
-    if sf in _TWIN_CORPUS_CACHE:
-        return _TWIN_CORPUS_CACHE[sf]
-    con = duckdb.connect()
-    rows = con.execute(
-        f"SELECT vec_id, embedding FROM '{sf}/embeddings.parquet' "
-        "ORDER BY vec_id").fetchall()
-    con.close()
-    ids = [int(r[0]) for r in rows]
-    X = np.array([r[1] for r in rows], dtype=np.float64)
-    idx_of = {i: n for n, i in enumerate(ids)}
-    nrm2 = np.zeros(len(ids), dtype=np.float64)
-    for j in range(X.shape[1]):
-        nrm2 = nrm2 + X[:, j] * X[:, j]
-    nrm = np.sqrt(nrm2)
-    lvl = {i: len(re.match("0*", hashlib.md5(
-        str(i).encode()).hexdigest()).group(0)) for i in ids}
-    _TWIN_CORPUS_CACHE[sf] = (ids, X, nrm, idx_of, lvl)
-    return _TWIN_CORPUS_CACHE[sf]
+        con = duckdb.connect()
+        rows = con.execute(
+            f"SELECT vec_id, embedding FROM '{sf}/embeddings.parquet' "
+            "ORDER BY vec_id").fetchall()
+        con.close()
+        ids = [int(r[0]) for r in rows]
+        X = np.array([r[1] for r in rows], dtype=np.float64)
+        idx_of = {i: n for n, i in enumerate(ids)}
+        nrm2 = np.zeros(len(ids), dtype=np.float64)
+        for j in range(X.shape[1]):
+            nrm2 = nrm2 + X[:, j] * X[:, j]
+        nrm = np.sqrt(nrm2)
+        lvl = {i: len(re.match("0*", hashlib.md5(
+            str(i).encode()).hexdigest()).group(0)) for i in ids}
+        return ids, X, nrm, idx_of, lvl
+
+    return artifacts.get(
+        "hnsw_twin_corpus", tables.table_path(sf, "embeddings"), build)
 
 
 def _twin_art(ids, X, nrm, idx_of, lvl) -> dict:
@@ -1324,11 +1310,8 @@ def _twin_build(sf_dir: str | None = None) -> dict:
     """Spark-free rebuild of the exact graph hnsw_build produces."""
     sf = sf_dir or os.environ.get("UVDB_SIM_SF_DIR",
                                   "/root/testdata/sf0.01")
-    if sf in _TWIN_CACHE:
-        return _TWIN_CACHE[sf]
-    ids, X, nrm, idx_of, lvl = _twin_corpus(sf)
-    _TWIN_CACHE[sf] = _twin_art(ids, X, nrm, idx_of, lvl)
-    return _TWIN_CACHE[sf]
+    return artifacts.get("hnsw_twin", tables.table_path(sf, "embeddings"),
+                         lambda: _twin_art(*_twin_corpus(sf)))
 
 
 def _twin_visited(art: dict, X, nrm, idx_of, q: int,
@@ -1366,23 +1349,22 @@ def _twin_visited(art: dict, X, nrm, idx_of, q: int,
     return visited
 
 
-_TWIN_MERGE_CACHE: dict[str, dict] = {}
-
-
 def _twin_merge(sf_dir: str | None = None) -> dict:
     """Spark-free mirror of merged_art_for: base build over vec_id >=
     MERGE_SPLIT, then hnsw_merge's candidate/reverse wiring step for
     the vec_id < MERGE_SPLIT batch — bit-for-bit the merged graph."""
     sf = sf_dir or os.environ.get("UVDB_SIM_SF_DIR",
                                   "/root/testdata/sf0.01")
-    if sf in _TWIN_MERGE_CACHE:
-        return _TWIN_MERGE_CACHE[sf]
-    ids, X, nrm, idx_of, lvl = _twin_corpus(sf)
-    base_ids = sorted(i for i in ids if i >= MERGE_SPLIT)
-    new_ids = sorted(i for i in ids if i < MERGE_SPLIT)
-    _TWIN_MERGE_CACHE[sf] = _twin_merge_parts(
-        ids, X, nrm, idx_of, lvl, base_ids, new_ids)
-    return _TWIN_MERGE_CACHE[sf]
+
+    def build() -> dict:
+        ids, X, nrm, idx_of, lvl = _twin_corpus(sf)
+        base_ids = sorted(i for i in ids if i >= MERGE_SPLIT)
+        new_ids = sorted(i for i in ids if i < MERGE_SPLIT)
+        return _twin_merge_parts(ids, X, nrm, idx_of, lvl, base_ids,
+                                 new_ids)
+
+    return artifacts.get(
+        "hnsw_twin_merge", tables.table_path(sf, "embeddings"), build)
 
 
 def _twin_merge_parts(ids, X, nrm, idx_of, lvl,

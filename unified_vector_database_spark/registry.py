@@ -36,18 +36,22 @@ def register(name: str, oracle: str | Callable[[], str] | None = None):
     return deco
 
 
+class OracleBuildError(RuntimeError):
+    """A lazy oracle raised while rendering its SQL."""
+
+
 def resolved_oracles() -> dict[str, str]:
     """ORACLES with lazy entries rendered to SQL. A lazy oracle that
-    fails to build (corpus unreadable) drops out — the driver then
-    records the weaker rows-only check for it instead of erroring
-    every other entry."""
+    fails to build raises OracleBuildError naming the query: dropping
+    it would quietly downgrade that query to a rows-only check."""
     out: dict[str, str] = {}
     for name, o in ORACLES.items():
         if callable(o):
             try:
                 out[name] = o()
-            except Exception:  # pragma: no cover - defensive
-                continue
+            except Exception as e:
+                raise OracleBuildError(
+                    f"oracle for {name!r} failed to build: {e}") from e
         else:
             out[name] = o
     return out

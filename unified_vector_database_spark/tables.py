@@ -9,47 +9,22 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from . import artifacts
+
 TABLES = ["region", "nation", "customer", "supplier", "part", "orders",
           "lineitem", "events", "documents", "embeddings"]
 
-# Per-(application, sf_dir, table) memo of the LAZY loader DataFrames.
-# DataFrames are immutable plan handles, so handing every caller the
-# same object is semantics-free — what it saves is real and per-call:
-# spark.read.parquet re-reads footers for schema inference (~0.1 s)
-# and load_parallel's .rdd partition probe forces a full physical
-# planning of the scan (~0.15 s), measured r9. Most of the 286
-# registered queries call these 1-3x per run, so this was a fixed
-# ~0.2-0.3 s tax on nearly every query. No DATA is cached — plans
-# stay lazy and every action still computes from the parquet inputs.
-_DF_MEMO: dict[tuple, DataFrame] = {}
 
-
-def _mtime(path: str) -> float:
-    """Staleness key: tests (and the degenerate-corpus gates) overwrite
-    table files in their synthetic sf dirs between loads; a memoized
-    plan holds the old file listing. One stat() per call buys exact
-    invalidation — an overwrite bumps the file/dir mtime and the memo
-    rebuilds."""
-    import os
-    try:
-        return os.path.getmtime(path)
-    except OSError:
-        return -1.0
-
-
-def _memo(spark: SparkSession, path: str, key: tuple, build) -> DataFrame:
-    k = (spark.sparkContext.applicationId, _mtime(path), *key)
-    if k not in _DF_MEMO:
-        _DF_MEMO[k] = build()
-    return _DF_MEMO[k]
+def table_path(sf_dir: str, name: str) -> str:
+    return f"{sf_dir}/{name}.parquet"
 
 
 def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     if name == "events":
         return load_events(spark, sf_dir)
-    path = f"{sf_dir}/{name}.parquet"
-    return _memo(spark, path, ("load", sf_dir, name),
-                 lambda: spark.read.parquet(path))
+    path = table_path(sf_dir, name)
+    return artifacts.get("load", path, lambda: spark.read.parquet(path),
+                         spark)
 
 
 def load_parallel(spark: SparkSession, sf_dir: str, name: str,
@@ -70,13 +45,13 @@ def load_parallel(spark: SparkSession, sf_dir: str, name: str,
             df = df.repartition(target, key)
         return df
 
-    return _memo(spark, f"{sf_dir}/{name}.parquet",
-                 ("par", sf_dir, name, key), build)
+    return artifacts.get(("load_parallel", key), table_path(sf_dir, name),
+                         build, spark)
 
 
 def load_events(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _memo(spark, f"{sf_dir}/events.parquet", ("events", sf_dir),
-                 lambda: _load_events_uncached(spark, sf_dir))
+    return artifacts.get("load", table_path(sf_dir, "events"),
+                         lambda: _load_events_uncached(spark, sf_dir), spark)
 
 
 def _load_events_uncached(spark: SparkSession, sf_dir: str) -> DataFrame:
