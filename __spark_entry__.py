@@ -30,21 +30,19 @@ def entry(spark: SparkSession) -> DataFrame:
 
 # Verification priority: the driver checks the FIRST ~50 entries of
 # queries() in dict order each round; entries still lacking a
-# hash-green CORRECTNESS row come first, then entries whose code or
-# oracle changed this round (their old rows describe old outputs),
-# then stable flagships. After r5, 224/270 then-registered queries
-# had a lifetime hash-green driver row; blocks (a)-(c) below are the
+# hash-green CORRECTNESS row come first, then the stable-green tail,
+# stalest first. After r5, 224/270 then-registered queries had a
+# lifetime hash-green driver row; blocks (a)-(c) below are the
 # staged r6 rotation of the remaining 46 + the 3 r6-built ops
 # (VERDICT r5 #1), and every later block is an r6 wave registered
 # past the ~50-slot budget line BY DESIGN — each one MATCHes under
 # tools/driver_sim AND the vanilla /tmp contract at sf0.001+sf0.01,
 # and they queue in block order for the r7+ rotations
-# (`tools/rotation.py` prints the never-driver-green backlog at
-# restage time; end-of-round-7 gates: 810 pytest green, full
-# driver_sim sweep 396/396 MATCH at sf0.001 AND sf0.01. The list
-# below is the QUEUE ORDER only — `_ordered` recomputes the actual
-# rotation from CORRECTNESS_r*.json on every call, so staging can
-# no longer go stale.)
+# (end-of-round-7 gates: 810 pytest green, full driver_sim sweep
+# 396/396 MATCH at sf0.001 AND sf0.01. The list below is the QUEUE
+# ORDER only — `_ordered` recomputes the actual rotation from
+# CORRECTNESS_r*.json on every call, so staging can no longer go
+# stale.)
 _PRIORITY = [
     # (r7-new) batch HNSW (VERDICT r6 "missing" #1 / next-round #7a):
     # verified this round ahead of the queued backlog so the judge
@@ -289,16 +287,6 @@ _PRIORITY = [
 ]
 
 
-# Queries whose CODE or ORACLE changed since their last hash-green
-# CORRECTNESS row.  Their old rows describe old outputs, so they jump
-# the stable-green tail and re-verify right after the never-green
-# backlog.  Clear entries once a new green row lands.
-# r8: hnsw_knn's route layer was reworked (collect-free build, written
-# artifact, size switch) — outputs verified identical under the
-# vanilla contract, queued for a fresh driver row behind the backlog.
-_FORCE_RECHECK: list[str] = ["hnsw_knn"]
-
-
 def _green_rounds() -> dict[str, int]:
     """name -> MOST RECENT round with a hash-green row, unioned across
     every CORRECTNESS_r*.json.
@@ -335,7 +323,6 @@ def _ordered(names) -> list[str]:
     """Stage the driver's ~50-slot verification budget automatically.
 
     Never-driver-green queries first (in _PRIORITY queue order), then
-    green queries whose code changed this round (_FORCE_RECHECK), then
     the stable-green tail ordered STALEST-FIRST (ascending last-green
     round, _PRIORITY order within a round).  The backlog staging
     replaces the hand-restaged rotation that round 6 shipped stale
@@ -351,14 +338,11 @@ def _ordered(names) -> list[str]:
     rounds = _green_rounds()
     if not rounds:
         return ranked
-    green = set(rounds)
-    recheck = [n for n in ranked if n in _FORCE_RECHECK and n in green]
-    backlog = [n for n in ranked if n not in green]
+    backlog = [n for n in ranked if n not in rounds]
     pos = {n: i for i, n in enumerate(ranked)}
-    stable = sorted((n for n in ranked
-                     if n in green and n not in set(recheck)),
+    stable = sorted((n for n in ranked if n in rounds),
                     key=lambda n: (rounds[n], pos[n]))
-    return backlog + recheck + stable
+    return backlog + stable
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:

@@ -4,6 +4,12 @@ $SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1) on
 local[$SPARK_GRAFT_CPUS] and prints ONE JSON line:
 {"metric": ..., "value": total_sec, "unit": "sec",
  "queries": {name: sec}, "sf": ...}
+
+    python bench.py                 # all headline queries
+    python bench.py NAME [NAME...]  # only these registered queries
+
+A full run also writes bench_last.json; a run over named queries
+leaves it alone.
 """
 
 from __future__ import annotations
@@ -167,7 +173,7 @@ HEADLINE = [
 ]
 
 
-def main() -> None:
+def main(names: list[str]) -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
     spark = get_spark("uvdb-bench")
@@ -185,7 +191,7 @@ def main() -> None:
     # compare.
     times: dict[str, float] = {}
     for _pass in range(3):
-        for name in HEADLINE:
+        for name in names or HEADLINE:
             fn = registry.QUERIES[name]
             t0 = time.perf_counter()
             fn(spark, sf_dir).collect()
@@ -216,12 +222,13 @@ def main() -> None:
     }
     # full record (with the complete per-query dict) survives on disk
     # even when the stdout tail capture truncates
-    try:
-        with open(os.path.join(os.path.dirname(os.path.abspath(__file__)),
-                               "bench_last.json"), "w") as f:
-            json.dump(full, f, indent=1, sort_keys=True)
-    except OSError:
-        pass
+    if not names:
+        try:
+            with open(os.path.join(os.path.dirname(os.path.abspath(
+                    __file__)), "bench_last.json"), "w") as f:
+                json.dump(full, f, indent=1, sort_keys=True)
+        except OSError:
+            pass
     for name in sorted(times):
         print(json.dumps({"q": name, "sec": times[name]}))
     print(json.dumps({k: v for k, v in full.items() if k != "queries"}))
@@ -229,4 +236,4 @@ def main() -> None:
 
 
 if __name__ == "__main__":
-    main()
+    main(sys.argv[1:])

@@ -8,6 +8,7 @@ import pytest
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from unified_vector_database_spark import artifacts
 from unified_vector_database_spark.session import get_spark
 from unified_vector_database_spark.tables import TABLES
 
@@ -54,3 +55,14 @@ def write_embeddings(tmp_path):
         }), str(tmp_path / "embeddings.parquet"))
         return str(tmp_path), x
     return write
+
+
+@pytest.fixture
+def built():
+    """built(kind, path) -> the directory artifacts.persisted published
+    for `path`'s current content; fails the test if there is none."""
+    def get(kind, path):
+        def unbuilt(_):
+            pytest.fail(f"no persisted {kind!r} for {path}")
+        return artifacts.persisted(kind, path, unbuilt)
+    return get

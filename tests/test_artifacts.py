@@ -1,11 +1,15 @@
 """The one artifact cache: rebuild on a changed input file or session,
-one entry per (kind, path), and no private cache dicts elsewhere."""
+one entry per (kind, path), on disk as in memory, and no private cache
+dicts elsewhere."""
 
 from __future__ import annotations
 
 import ast
 import os
 import pathlib
+import subprocess
+import sys
+import tempfile
 from types import SimpleNamespace
 
 import pytest
@@ -74,7 +78,124 @@ def test_directory_fingerprint_sees_each_file(tmp_path):
     assert artifacts.fingerprint(str(tmp_path / "missing")) is None
 
 
-def _empty_dict_bindings(tree: ast.Module):
+KIND = ("replay", "toy", 4)
+
+
+@pytest.fixture
+def disk(tmp_path, monkeypatch):
+    """(src, tmp, persist): persist(build=copy) -> (dir, builds so far)
+    for artifacts.persisted over the one-file input `src`, with the
+    temp dir moved to `tmp`."""
+    tmp = tmp_path / "tmp"
+    tmp.mkdir()
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp))
+    src = tmp_path / "t.parquet"
+    src.write_bytes(b"a")
+    builds = []
+
+    def copy(d):
+        os.makedirs(d)
+        (pathlib.Path(d) / "out").write_bytes(src.read_bytes())
+        builds.append(d)
+
+    def persist(build=copy):
+        return artifacts.persisted(KIND, str(src), build), len(builds)
+    return src, tmp, persist
+
+
+def test_persisted_builds_once(disk):
+    _, tmp, persist = disk
+    out, n = persist()
+    assert persist() == (out, 1) and n == 1
+    assert (pathlib.Path(out) / "out").read_bytes() == b"a"
+    assert os.listdir(tmp) == [os.path.basename(out)]
+
+
+def test_persisted_touched_input_rebuilds_and_drops_old(disk):
+    src, tmp, persist = disk
+    old, _ = persist()
+    st = os.stat(src)
+    os.utime(src, ns=(st.st_atime_ns, st.st_mtime_ns + 1))
+    new, n = persist()
+    assert new != old and n == 2
+    assert os.listdir(tmp) == [os.path.basename(new)]
+
+
+def test_persisted_raising_build_leaves_nothing(disk):
+    _, tmp, persist = disk
+
+    def dies(d):
+        os.makedirs(d)
+        (pathlib.Path(d) / "half").write_bytes(b"x")
+        raise RuntimeError("killed mid-build")
+
+    with pytest.raises(RuntimeError, match="killed mid-build"):
+        persist(dies)
+    assert os.listdir(tmp) == []
+    out, n = persist()
+    assert n == 1 and (pathlib.Path(out) / "out").read_bytes() == b"a"
+
+
+def test_persisted_keeps_race_winner(disk):
+    _, tmp, persist = disk
+
+    def loses(d):
+        winner = pathlib.Path(d.rsplit(".build.", 1)[0])
+        winner.mkdir()
+        (winner / "out").write_bytes(b"winner")
+        os.makedirs(d)
+        (pathlib.Path(d) / "out").write_bytes(b"loser")
+
+    out, _ = persist(loses)
+    assert (pathlib.Path(out) / "out").read_bytes() == b"winner"
+    assert os.listdir(tmp) == [os.path.basename(out)]
+
+
+def test_persisted_name_is_stable_across_hash_seeds(disk):
+    """The name must not depend on str hash salting: a process with
+    another PYTHONHASHSEED finds the directory already published."""
+    src, tmp, persist = disk
+    out, _ = persist()
+    code = ("import sys, tempfile\n"
+            "from unified_vector_database_spark import artifacts\n"
+            "tempfile.tempdir = sys.argv[1]\n"
+            "def build(d): raise SystemExit('rebuilt')\n"
+            f"print(artifacts.persisted({KIND!r}, sys.argv[2], build))\n")
+    for seed in ("1", "2"):
+        env = dict(os.environ, PYTHONHASHSEED=seed,
+                   PYTHONPATH=str(PKG.parent))
+        got = subprocess.run(
+            [sys.executable, "-c", code, str(tmp), str(src)], env=env,
+            capture_output=True, text=True, check=True).stdout.strip()
+        assert got == out
+
+
+def test_interrupted_collection_build_is_rebuilt(spark, duck, sf_dir,
+                                                 tmp_path, monkeypatch):
+    """A reindex whose upsert dies after the destination collection was
+    created publishes nothing, so the next call rebuilds it and returns
+    the oracle's rows."""
+    from unified_vector_database_spark.operators.lifecycle import (
+        reindex_transform,
+    )
+    from unified_vector_database_spark.sources.catalog import Collection
+
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    upsert = Collection.upsert
+
+    def dies_once(self, df):
+        monkeypatch.setattr(Collection, "upsert", upsert)
+        raise RuntimeError("killed mid-build")
+
+    monkeypatch.setattr(Collection, "upsert", dies_once)
+    with pytest.raises(RuntimeError, match="killed mid-build"):
+        reindex_transform(spark, sf_dir)
+    got = sorted(tuple(r) for r in reindex_transform(spark, sf_dir).collect())
+    oracle = registry.ORACLES["reindex_transform"]
+    assert got == sorted(duck.execute(oracle).fetchall())
+
+
+def _empty_container_bindings(tree: ast.Module):
     for node in tree.body:
         if isinstance(node, ast.Assign):
             targets, value = node.targets, node.value
@@ -83,23 +204,25 @@ def _empty_dict_bindings(tree: ast.Module):
         else:
             continue
         empty = (isinstance(value, ast.Dict) and not value.keys) or (
+            isinstance(value, ast.List) and not value.elts) or (
             isinstance(value, ast.Call) and isinstance(value.func, ast.Name)
-            and value.func.id == "dict"
+            and value.func.id in ("dict", "set", "list")
             and not value.args and not value.keywords)
         if empty:
             yield from (ast.unparse(t) for t in targets)
 
 
 def test_no_private_cache_dicts():
-    """A module-level name bound to an empty dict is a cache in all but
-    name; artifacts.get is the one place for those."""
+    """A module-level name bound to an empty dict, set or list is a
+    cache in all but name; artifacts.get and artifacts.persisted are
+    the one place for those."""
     allowed = {("registry.py", "QUERIES"), ("registry.py", "ORACLES")}
     found = []
     for p in sorted(PKG.rglob("*.py")):
         rel = p.relative_to(PKG).as_posix()
         if rel == "artifacts.py":
             continue
-        for name in _empty_dict_bindings(ast.parse(p.read_text())):
+        for name in _empty_container_bindings(ast.parse(p.read_text())):
             if (rel, name) not in allowed:
                 found.append(f"{rel}: {name}")
     assert not found, found

@@ -84,7 +84,7 @@ def test_opq_rotation_decorrelates_subspace_variance(spark, sf_dir):
     assert off < np.diag(cov).max() * 1e-6
 
 
-def test_opq_probe_reads_codes_artifact_not_vectors(spark, sf_dir):
+def test_opq_probe_reads_codes_artifact_not_vectors(spark, sf_dir, built):
     from unified_vector_database_spark.operators.index import (
         _opq_artifacts, opq_codes_artifact, pq_adc_scores, _rotate_col,
     )
@@ -103,7 +103,8 @@ def test_opq_probe_reads_codes_artifact_not_vectors(spark, sf_dir):
     plan = _plan(pq_adc_scores(codes, qvec, cbs)
                  .orderBy("adc", "vec_id").limit(64))
     # the ADC shortlist pass scans the codes artifact, not embeddings
-    assert "opq_codes" in plan
+    art = built("opq_codes", tables.table_path(sf_dir, "embeddings"))
+    assert art.rsplit("/", 1)[-1] in plan
     assert "embeddings.parquet" not in plan
 
 

@@ -44,31 +44,30 @@ def test_merge_equals_single_index_with_same_centroids(spark, sf_dir):
     assert merged == mono
 
 
-def test_merge_generations_are_disjoint_and_complete(spark, sf_dir):
-    from unified_vector_database_spark.operators.index import (
-        artifact_path, ivf_merge_knn,
-    )
+def test_merge_generations_are_disjoint_and_complete(spark, sf_dir, built):
+    from unified_vector_database_spark import tables
+    from unified_vector_database_spark.operators.index import ivf_merge_knn
 
     ivf_merge_knn(spark, sf_dir).collect()  # ensure artifacts exist
-    g0 = spark.read.parquet(artifact_path("ivfmerge_gen0", sf_dir))
-    g1 = spark.read.parquet(artifact_path("ivfmerge_gen1", sf_dir))
+    emb = tables.table_path(sf_dir, "embeddings")
+    g0 = spark.read.parquet(built("ivfmerge_gen0", emb))
+    g1 = spark.read.parquet(built("ivfmerge_gen1", emb))
     n0, n1 = g0.count(), g1.count()
     total = spark.read.parquet(f"{sf_dir}/embeddings.parquet").count()
     assert n0 + n1 == total
     assert g0.join(g1, "vec_id").count() == 0
 
 
-def test_merge_probe_prunes_partitions(spark, sf_dir):
+def test_merge_probe_prunes_partitions(spark, sf_dir, built):
     """The probe over each generation must prune at the file listing
     (PartitionFilters on cid), not scan-and-filter."""
     from unified_vector_database_spark import tables
     from unified_vector_database_spark.functions import distance as D
-    from unified_vector_database_spark.operators.index import (
-        artifact_path, ivf_merge_knn,
-    )
+    from unified_vector_database_spark.operators.index import ivf_merge_knn
 
     ivf_merge_knn(spark, sf_dir).collect()
-    df = (spark.read.parquet(artifact_path("ivfmerge_gen0", sf_dir))
+    emb = tables.table_path(sf_dir, "embeddings")
+    df = (spark.read.parquet(built("ivfmerge_gen0", emb))
           .where(F.col("cid").isin([0, 1])))
     plan = _plan(df)
     assert "PartitionFilters" in plan and "cid" in plan, plan

@@ -408,7 +408,7 @@ def test_hex_rounding_picks_nearest_center_hypothesis():
 
 
 def test_pit_page_is_isolated_from_head_mutations(spark, sf_dir):
-    from unified_vector_database_spark.operators.index import artifact_path
+    from unified_vector_database_spark import artifacts
     from unified_vector_database_spark.operators.lifecycle import (
         PIT_PAGE, pit_search_after,
     )
@@ -421,7 +421,7 @@ def test_pit_page_is_isolated_from_head_mutations(spark, sf_dir):
     # PINNED page must still contain them (snapshot isolation), and
     # the live head must not
     assert any(k % 5 == 0 for k, _ in page2)
-    root = artifact_path("pit_page", sf_dir)
+    root = artifacts.dir_for("pit_page", sf_dir)
     head = Collection.open(spark, root, "orders_pit").read()
     head_keys = {r.o_orderkey for r in head.collect()}
     from unified_vector_database_spark.operators.lifecycle import PIT_MAX
@@ -432,8 +432,7 @@ def test_pit_page_is_isolated_from_head_mutations(spark, sf_dir):
 
 
 def test_rollover_generations_partition_the_stream(spark, sf_dir):
-    from unified_vector_database_spark import tables
-    from unified_vector_database_spark.operators.index import artifact_path
+    from unified_vector_database_spark import artifacts, tables
     from unified_vector_database_spark.operators.lifecycle import (
         ROLL_MAX_DOCS, alias_rollover,
     )
@@ -448,7 +447,7 @@ def test_rollover_generations_partition_the_stream(spark, sf_dir):
     for r in rows[:-1]:
         assert r.n_events >= ROLL_MAX_DOCS
     # the write alias points at the LAST generation
-    root = artifact_path("rollover", sf_dir)
+    root = artifacts.dir_for("rollover", sf_dir)
     assert Collection.list_aliases(root)["events_write"] \
         == f"events_{rows[-1].gen:06d}"
 

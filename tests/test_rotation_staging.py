@@ -35,16 +35,14 @@ def _green_union() -> set[str]:
 
 def test_first_slots_drain_the_backlog():
     """While a never-green backlog exists, the driver's budget window
-    must contain zero already-green entries (minus _FORCE_RECHECK,
-    which re-proves changed code on purpose)."""
+    must contain zero already-green entries."""
     names = list(entrymod.queries())
     green = _green_union()
     backlog = [n for n in names if n not in green]
     if not backlog:
         return  # fully drained: any staging is fine
     window = names[:min(DRIVER_SLOTS, len(backlog))]
-    stale = [n for n in window
-             if n in green and n not in entrymod._FORCE_RECHECK]
+    stale = [n for n in window if n in green]
     assert not stale, (
         f"rotation stale: {len(stale)} already-green entries occupy "
         f"driver slots while {len(backlog)} never-green queries queue "
@@ -78,16 +76,15 @@ def _green_last_round() -> dict[str, int]:
 
 
 def test_stable_tail_is_stalest_first():
-    """VERDICT r8 #5: after the backlog and force-recheck slots, the
-    stable-green tail must be ordered by ascending last-green round —
-    the oldest proofs re-verify first, so every query re-proves at
+    """VERDICT r8 #5: after the backlog slots, the stable-green tail
+    must be ordered by ascending last-green round — the oldest proofs
+    re-verify first, so every query re-proves at
     least every ~ceil(|registry|/50) rounds."""
     names = list(entrymod.queries())
     last = _green_last_round()
     if not last:
         return
-    tail = [n for n in names
-            if n in last and n not in entrymod._FORCE_RECHECK]
+    tail = [n for n in names if n in last]
     tail_rounds = [last[n] for n in tail]
     assert tail_rounds == sorted(tail_rounds), (
         "stable tail not stalest-first; first inversions: "

@@ -1,6 +1,8 @@
-"""One cache for everything built from an input file: lazy table-loader
-frames, index fits (centroids, codebooks, PCA/OPQ rotations) and HNSW
-graphs with their resident copies.
+"""One cache for everything built from an input file: in memory, lazy
+table-loader frames, index fits (centroids, codebooks, PCA/OPQ
+rotations) and HNSW graphs with their resident copies (`get`); on
+disk, index codes, cell layouts, collections and stream sources
+(`persisted`).
 
 An entry is keyed by (kind, path). It stores the fingerprint of `path`
 — (size, mtime_ns) of the file, or of each file under a directory —
@@ -18,12 +20,22 @@ and `tables.load_parallel`'s partition probe forces a full physical
 planning of the scan (~0.15 s). Most registered queries load 1-3
 tables, so that was ~0.2-0.3 s on nearly every query. The frames stay
 lazy; every action still computes from the parquet inputs.
+
+On disk, `persisted(kind, path, build)` names a directory by md5 of
+(kind, path) and of `fingerprint(path)`, so an overwritten input gets
+a new directory and the old one is removed. Every derived directory
+is named here: `scratch` hands out the stable-named, emptied directory
+of work that its caller redoes on every call.
 """
 
 from __future__ import annotations
 
+import glob
+import hashlib
 import os
+import shutil
 import stat
+import tempfile
 
 _CACHE: dict[tuple, tuple] = {}
 
@@ -58,3 +70,53 @@ def get(kind, path: str, build, spark=None):
     value = build()
     _CACHE[(kind, path)] = (app, fp, value)
     return value
+
+
+def _md5(value) -> str:
+    return hashlib.md5(repr(value).encode()).hexdigest()[:16]
+
+
+def dir_for(kind, path: str) -> str:
+    """The stable directory name for `kind` derived from `path`, under
+    the temp dir. md5, not hash(): str hashes are salted per process."""
+    return os.path.join(tempfile.gettempdir(), f"uvdb_{_md5((kind, path))}")
+
+
+def scratch(kind, path: str) -> str:
+    """dir_for(kind, path), emptied: for work redone on every call."""
+    out = dir_for(kind, path)
+    shutil.rmtree(out, ignore_errors=True)
+    return out
+
+
+def persisted(kind, path: str, build) -> str:
+    """The directory holding `build(dir)`'s output for the current
+    content of `path`, built on first use.
+
+    Its name carries md5(fingerprint(path)), and its existence is the
+    commit marker: `build` writes into a pid-suffixed temp dir that one
+    rename publishes. A build that raises leaves nothing behind; a
+    rename that loses a race keeps the winner's directory. Publishing
+    removes this (kind, path)'s directories for other fingerprints."""
+    stem = dir_for(kind, path)
+    out = f"{stem}_{_md5(fingerprint(path))}"
+    if os.path.isdir(out):
+        return out
+    tmp = f"{out}.build.{os.getpid()}"
+    shutil.rmtree(tmp, ignore_errors=True)  # left by a killed build
+    try:
+        build(tmp)
+    except BaseException:
+        shutil.rmtree(tmp, ignore_errors=True)
+        raise
+    try:
+        os.rename(tmp, out)
+    except OSError:  # lost a race: keep the winner's directory
+        shutil.rmtree(tmp, ignore_errors=True)
+        if not os.path.isdir(out):
+            raise
+        return out
+    for old in glob.glob(glob.escape(stem) + "_" + "?" * 16):
+        if old != out:
+            shutil.rmtree(old, ignore_errors=True)
+    return out

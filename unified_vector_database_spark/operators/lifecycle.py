@@ -20,19 +20,27 @@ only by pytest (VERDICT r4 "Next round" #5, #9):
 
 from __future__ import annotations
 
-import os
-import shutil
-
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from .. import flags, tables
+from .. import artifacts, flags, tables
 from ..registry import register
 from ..sources.catalog import Collection
-from .index import artifact_path
 from .search_more import PAYLOAD_K_LO, PAYLOAD_K_HI
 
 CAT_MAX_ID = 500
 CAT_BATCH_ID = 50
+
+
+def _persisted_collection(spark: SparkSession, sf_dir: str, table: str,
+                          kind: str, name: str, df: DataFrame,
+                          **create) -> Collection:
+    """Collection `name` holding `df`, built once per content of
+    `table` into an artifacts.persisted directory."""
+    def build(base: str) -> None:
+        Collection.create(spark, base, name, **create).upsert(df)
+
+    base = artifacts.persisted(kind, tables.table_path(sf_dir, table), build)
+    return Collection.open(spark, base, name)
 
 
 @register("catalog_semantics", oracle=f"""
@@ -67,9 +75,7 @@ def catalog_semantics(spark: SparkSession, sf_dir: str) -> DataFrame:
     if flags.SCHEMA_ONLY:
         final = emb.limit(0)
     else:
-        base = artifact_path("catalog_census", sf_dir)
-        if os.path.exists(base):
-            shutil.rmtree(base)  # deterministic rebuild per call
+        base = artifacts.scratch("catalog_census", sf_dir)
         c = Collection.create(spark, base, "census", id_col="vec_id")
         c.upsert(emb)
         c.upsert(emb.where(F.col("vec_id") < CAT_BATCH_ID)
@@ -122,15 +128,9 @@ def nested_payload_typed(spark: SparkSession, sf_dir: str) -> DataFrame:
     if flags.SCHEMA_ONLY:
         t = typed.limit(0)
     else:
-        base = artifact_path("typed_payload", sf_dir)
-        try:
-            col = Collection.open(spark, base, "events_typed")
-        except ValueError:
-            col = Collection.create(spark, base, "events_typed",
-                                    id_col="event_id",
-                                    partition_by=["event_type"])
-            col.upsert(typed)
-        t = col.read()
+        t = _persisted_collection(
+            spark, sf_dir, "events", "typed_payload", "events_typed", typed,
+            id_col="event_id", partition_by=["event_type"]).read()
     return (t.where(F.col("k").between(PAYLOAD_K_LO, PAYLOAD_K_HI))
              .groupBy("event_type")
              .agg(F.count("*").alias("n"),
@@ -171,15 +171,9 @@ def tenant_scoped_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     if flags.SCHEMA_ONLY:
         t = typed.limit(0)
     else:
-        base = artifact_path("tenant_events", sf_dir)
-        try:
-            col = Collection.open(spark, base, "events_tenant")
-        except ValueError:
-            col = Collection.create(spark, base, "events_tenant",
-                                    id_col="event_id",
-                                    partition_by=["event_type"])
-            col.upsert(typed)
-        t = col.read()
+        t = _persisted_collection(
+            spark, sf_dir, "events", "tenant_events", "events_tenant", typed,
+            id_col="event_id", partition_by=["event_type"]).read()
     return (t.where(F.col("event_type") == TENANT)
              .agg(F.count("*").alias("n"),
                   F.countDistinct("user_id").cast("long").alias("n_users"),
@@ -222,9 +216,7 @@ def snapshot_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
         v1 = emb.limit(0)
         v2 = v1.select("vec_id", upd_label.alias("label"))
     else:
-        base = artifact_path("catalog_tt", sf_dir)
-        if os.path.exists(base):
-            shutil.rmtree(base)  # deterministic rebuild per call
+        base = artifacts.scratch("catalog_tt", sf_dir)
         c = Collection.create(spark, base, "tt", id_col="vec_id")
         c.upsert(emb)
         c.snapshot("pinned")
@@ -283,9 +275,7 @@ def pit_search_after(spark: SparkSession, sf_dir: str) -> DataFrame:
     if flags.SCHEMA_ONLY:
         pinned = base_df.limit(0)
     else:
-        root = artifact_path("pit_page", sf_dir)
-        if os.path.exists(root):
-            shutil.rmtree(root)  # deterministic rebuild per call
+        root = artifacts.scratch("pit_page", sf_dir)
         c = Collection.create(spark, root, "orders_pit",
                               id_col="o_orderkey")
         c.upsert(base_df)
@@ -362,9 +352,7 @@ def alias_rollover(spark: SparkSession, sf_dir: str) -> DataFrame:
     if flags.SCHEMA_ONLY:
         gens: list[tuple[int, DataFrame]] = [(1, ev.limit(0))]
     else:
-        root = artifact_path("rollover", sf_dir)
-        if os.path.exists(root):
-            shutil.rmtree(root)  # deterministic rebuild per call
+        root = artifacts.scratch("rollover", sf_dir)
         gen = 1
         c = Collection.create(spark, root, f"events_{gen:06d}",
                               id_col="event_id")
@@ -493,14 +481,9 @@ def reindex_transform(spark: SparkSession, sf_dir: str) -> DataFrame:
     if flags.SCHEMA_ONLY:
         dest = script.limit(0)
     else:
-        base = artifact_path("reindex_dest", sf_dir)
-        try:
-            col = Collection.open(spark, base, "documents_v2")
-        except ValueError:
-            col = Collection.create(spark, base, "documents_v2",
-                                    id_col="doc_id")
-            col.upsert(script)
-        dest = col.read()
+        dest = _persisted_collection(
+            spark, sf_dir, "documents", "reindex_dest", "documents_v2",
+            script, id_col="doc_id").read()
     return (dest.groupBy("lang_up", "wclass")
                 .agg(F.count("*").alias("n"),
                      F.sum("n_chars").cast("long").alias("total_chars"))
@@ -547,17 +530,17 @@ def filtered_alias_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count("*").alias("n"),
             F.sum("n_chars").cast("long").alias("total_chars"))]
         return parts[0]
-    base = artifact_path("filtered_alias", sf_dir)
-    try:
-        Collection.open(spark, base, "docs")
-    except ValueError:
-        c = Collection.create(spark, base, "docs", id_col="doc_id")
-        c.upsert(docs)
-    Collection.set_alias(base, "all_docs", "docs")
-    Collection.set_alias(base, "en_docs", "docs",
-                         filter_sql=f"lang = '{FA_LANG}'")
-    Collection.set_alias(base, "long_docs", "docs",
-                         filter_sql=f"n_chars >= {FA_MIN_CHARS}")
+
+    def build(base: str) -> None:
+        Collection.create(spark, base, "docs", id_col="doc_id").upsert(docs)
+        Collection.set_alias(base, "all_docs", "docs")
+        Collection.set_alias(base, "en_docs", "docs",
+                             filter_sql=f"lang = '{FA_LANG}'")
+        Collection.set_alias(base, "long_docs", "docs",
+                             filter_sql=f"n_chars >= {FA_MIN_CHARS}")
+
+    base = artifacts.persisted(
+        "filtered_alias", tables.table_path(sf_dir, "documents"), build)
     outs = []
     for alias in ("all_docs", "en_docs", "long_docs"):
         d = Collection.read_alias(spark, base, alias)
@@ -609,9 +592,7 @@ def snapshot_restore(spark: SparkSession, sf_dir: str) -> DataFrame:
     if flags.SCHEMA_ONLY:
         final = emb.limit(0)
     else:
-        base = artifact_path("snap_restore", sf_dir)
-        if os.path.exists(base):
-            shutil.rmtree(base)  # deterministic rebuild per call
+        base = artifacts.scratch("snap_restore", sf_dir)
         c = Collection.create(spark, base, "sr", id_col="vec_id")
         c.upsert(emb)
         c.snapshot("clean")
@@ -681,9 +662,7 @@ def collection_cdc_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
         v0 = emb.limit(0)
         v1 = emb.limit(0)
     else:
-        base = artifact_path("cdc_diff", sf_dir)
-        if os.path.exists(base):
-            shutil.rmtree(base)
+        base = artifacts.scratch("cdc_diff", sf_dir)
         c = Collection.create(spark, base, "cdc", id_col="vec_id")
         c.upsert(emb)
         ver0 = c.describe().version

@@ -45,6 +45,13 @@ def _ship_package(spark: SparkSession) -> None:
     spark._uvdb_pkg_shipped = True
 
 
+def _half_host_memory() -> str:
+    """Half of physical memory, capped at 90g: a bigger heap lets the
+    driver JVM grow past what the host can give one process."""
+    half = os.sysconf("SC_PHYS_PAGES") * os.sysconf("SC_PAGE_SIZE") // 2
+    return f"{min(half >> 20, 90 << 10)}m"
+
+
 def get_spark(app: str = "unified_vector_database_spark",
               cpus: int | None = None,
               shuffle_partitions: int | None = None) -> SparkSession:
@@ -76,7 +83,8 @@ def get_spark(app: str = "unified_vector_database_spark",
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.files.maxPartitionBytes", "134217728")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "90g"))
+        .config("spark.driver.memory",
+                os.environ.get("SPARK_GRAFT_DRIVER_MEM", _half_host_memory()))
         .config("spark.ui.enabled", "false")
         # events.parquet carries TIMESTAMP(NANOS) which vanilla Spark
         # rejects; read as long and convert (tables.load_events).

@@ -12,7 +12,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from .. import tables
+from .. import artifacts, tables
 from ..registry import register
 
 
@@ -151,8 +151,6 @@ def stream_join_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     exercising the streaming state machine. (Production uses the
     tight-horizon default of `click_purchase_join`; state eviction is
     then the POINT, not a bug.)"""
-    import os
-    import tempfile
     import uuid
 
     from .. import flags
@@ -168,11 +166,14 @@ def stream_join_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
         return (joined.select("click_id", "purchase_id", "c_ts",
                               F.col("p_ts").alias("p_ts"))
                       .orderBy("click_id", "purchase_id"))
-    base = os.path.join(tempfile.gettempdir(),
-                        f"uvdb_sjoin_src_{abs(hash(sf_dir)) % 10 ** 8}")
-    for etype in ("click", "purchase"):
-        (ev.where(F.col("event_type") == etype).repartition(2)
-           .write.mode("overwrite").parquet(f"{base}/{etype}"))
+
+    def build(base: str) -> None:
+        for etype in ("click", "purchase"):
+            (ev.where(F.col("event_type") == etype).repartition(2)
+               .write.parquet(f"{base}/{etype}"))
+
+    base = artifacts.persisted(
+        "sjoin_src", tables.table_path(sf_dir, "events"), build)
     sch = "event_id bigint, ts timestamp, user_id bigint, event_type string"
     clicks = (spark.readStream.schema(sch)
               .option("maxFilesPerTrigger", 1).parquet(f"{base}/click"))
@@ -191,21 +192,18 @@ def stream_join_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
             .orderBy("click_id", "purchase_id"))
 
 
-_REPLAY_WRITTEN: set[str] = set()
-
-
-def _replay(spark: SparkSession, df: DataFrame, sf_dir: str, tag: str,
-            schema: str, n_files: int = 4) -> DataFrame:
-    """A frame rewritten once as an n-file parquet dir and opened as
-    a maxFilesPerTrigger=1 file stream — the replay harness every
-    streaming oracle query shares (events and documents alike).
+def _replay(spark: SparkSession, df: DataFrame, sf_dir: str, table: str,
+            tag: str, schema: str, n_files: int = 4) -> DataFrame:
+    """`df`, derived from `table`, written once per content of that
+    table as an n-file parquet dir and opened as a maxFilesPerTrigger=1
+    file stream — the replay harness every streaming oracle query
+    shares (events and documents alike).
 
     Under flags.SCHEMA_ONLY the parquet rewrite is skipped and an
     empty BATCH frame with the same schema is returned instead; the
     downstream transformations are batch-compatible, so schema-only
     consumers pay nothing (ADVICE r4)."""
     import os
-    import tempfile
 
     from .. import flags
     if flags.SCHEMA_ONLY:
@@ -216,16 +214,9 @@ def _replay(spark: SparkSession, df: DataFrame, sf_dir: str, tag: str,
     # to 2 (the multi-batch state path still exercises) while the
     # correctness driver keeps the default 4.
     n_files = int(os.environ.get("UVDB_STREAM_REPLAY_FILES", n_files))
-    src = os.path.join(tempfile.gettempdir(),
-                       f"uvdb_{tag}_src_{n_files}f_"
-                       f"{abs(hash(sf_dir)) % 10 ** 8}")
-    # the source content is a deterministic function of (tag, sf_dir)
-    # and the path is per-process (salted hash), so repeated calls in
-    # one process can reuse the first write — a production stream
-    # doesn't re-materialize its source per query either
-    if src not in _REPLAY_WRITTEN:
-        df.repartition(n_files).write.mode("overwrite").parquet(src)
-        _REPLAY_WRITTEN.add(src)
+    src = artifacts.persisted(
+        ("replay", tag, n_files), tables.table_path(sf_dir, table),
+        lambda p: df.repartition(n_files).write.parquet(p))
     return (spark.readStream.schema(schema)
             .option("maxFilesPerTrigger", 1).parquet(src))
 
@@ -234,7 +225,7 @@ def _replay_events(spark: SparkSession, sf_dir: str, tag: str,
                    n_files: int = 4) -> DataFrame:
     ev = tables.load_events(spark, sf_dir) \
         .select("event_id", "ts", "user_id", "event_type", "value")
-    return _replay(spark, ev, sf_dir, tag,
+    return _replay(spark, ev, sf_dir, "events", tag,
                    "event_id bigint, ts timestamp, user_id bigint, "
                    "event_type string, value double", n_files)
 
@@ -451,7 +442,7 @@ def _replay_docs(spark: SparkSession, sf_dir: str, tag: str,
                  n_files: int = 4) -> DataFrame:
     docs = tables.load(spark, sf_dir, "documents") \
         .select("doc_id", "text", "lang", "source", "n_chars")
-    return _replay(spark, docs, sf_dir, tag,
+    return _replay(spark, docs, sf_dir, "documents", tag,
                    "doc_id bigint, text string, lang string, "
                    "source string, n_chars bigint", n_files)
 
@@ -646,8 +637,6 @@ def _replay_quartile(spark: SparkSession, sf_dir: str, tag: str,
     column expression (0 for in-order arrival). Batch files are
     written sequentially so the file source's modification-time order
     replays them as separate micro-batches."""
-    import os
-    import tempfile
     import time as _time
 
     from pyspark.sql import Window as W
@@ -657,9 +646,8 @@ def _replay_quartile(spark: SparkSession, sf_dir: str, tag: str,
         .select("event_id", "ts", "user_id", "event_type", "value")
     if flags.SCHEMA_ONLY:
         return ev.limit(0)
-    src = os.path.join(tempfile.gettempdir(),
-                       f"uvdb_{tag}_src_{abs(hash(sf_dir)) % 10 ** 8}")
-    if src not in _REPLAY_WRITTEN:
+
+    def build(src: str) -> None:
         w = W.orderBy("ts", "event_id")
         bno = F.least(F.lit(LATE_BATCHES - 1),
                       F.ntile(LATE_BATCHES).over(w) - 1 + shift)
@@ -671,11 +659,13 @@ def _replay_quartile(spark: SparkSession, sf_dir: str, tag: str,
             evb.count()
             for b in range(LATE_BATCHES):
                 (evb.where(F.col("bno") == b).drop("bno").coalesce(1)
-                    .write.mode("append" if b else "overwrite").parquet(src))
+                    .write.mode("append").parquet(src))
                 _time.sleep(0.25)  # distinct mtimes fix the replay order
         finally:
             evb.unpersist()
-        _REPLAY_WRITTEN.add(src)
+
+    src = artifacts.persisted(("replay_quartile", tag),
+                              tables.table_path(sf_dir, "events"), build)
     return (spark.readStream
             .schema("event_id bigint, ts timestamp, user_id bigint, "
                     "event_type string, value double")
@@ -874,13 +864,11 @@ def stream_upsert_collection(spark: SparkSession, sf_dir: str) -> DataFrame:
     touched partitions; the replay harness only fabricates arrival
     order."""
     import os
-    import shutil
     import tempfile
     import uuid
 
     from pyspark.sql import Window as W
 
-    from ..operators.index import artifact_path
     from ..sources.catalog import Collection
 
     stream = _replay_quartile(spark, sf_dir, "upsertcol", F.lit(0))
@@ -890,9 +878,7 @@ def stream_upsert_collection(spark: SparkSession, sf_dir: str) -> DataFrame:
         return spark.createDataFrame(
             [], "event_type string, n_users bigint, total_value double,"
                 " last_ts timestamp, version bigint")
-    base = artifact_path("stream_upsert", sf_dir)
-    if os.path.exists(base):
-        shutil.rmtree(base)  # deterministic rebuild per call
+    base = artifacts.scratch("stream_upsert", sf_dir)
     col = Collection.create(spark, base, "users", id_col="user_id")
     wl = W.partitionBy("user_id").orderBy(F.desc("ts"),
                                           F.desc("event_id"))

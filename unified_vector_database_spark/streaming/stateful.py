@@ -8,8 +8,6 @@ O(keys * k) forever.
 
 from __future__ import annotations
 
-import os
-
 from collections.abc import Iterator
 
 import pandas as pd
@@ -21,7 +19,7 @@ from pyspark.sql.types import (
     ArrayType, DoubleType, LongType, StringType, StructField, StructType,
 )
 
-from .. import tables
+from .. import artifacts, tables
 from ..registry import register
 
 OUTPUT_SCHEMA = StructType([
@@ -91,8 +89,6 @@ def stateful_topk_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     posexploded to (key, rank, topv) rows: the driver's pandas
     canonicalizer cannot sort/hash array cells (r3 ERR), so arrays
     never appear in a final queries() output schema."""
-    import tempfile
-
     from .. import flags
 
     if flags.SCHEMA_ONLY:
@@ -103,9 +99,9 @@ def stateful_topk_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         emissions = spark.createDataFrame([], OUTPUT_SCHEMA)
     else:
         ev = tables.load_events(spark, sf_dir).select("event_type", "value")
-        src = os.path.join(tempfile.gettempdir(),
-                           f"uvdb_topk_src_{abs(hash(sf_dir)) % 10 ** 8}")
-        ev.repartition(4).write.mode("overwrite").parquet(src)
+        src = artifacts.persisted(
+            "topk_src", tables.table_path(sf_dir, "events"),
+            lambda p: ev.repartition(4).write.parquet(p))
         stream = (spark.readStream.schema("event_type string, value double")
                   .option("maxFilesPerTrigger", 1).parquet(src))
         from .ingest import _run_to_memory
