@@ -2,6 +2,7 @@ from __future__ import annotations
 
 import os
 import sys
+import tempfile
 
 import duckdb
 import pytest
@@ -15,9 +16,23 @@ from unified_vector_database_spark.tables import TABLES
 SF_DIR = os.environ.get("UVDB_TEST_SF_DIR", "/root/testdata/sf0.001")
 
 
+@pytest.fixture(scope="session", autouse=True)
+def session_tempdir(tmp_path_factory):
+    """The temp dir of this run, under pytest's basetemp: persisted
+    builds, stream checkpoints and the package zip then go away with
+    pytest's retention instead of piling up in the system temp dir."""
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(tempfile, "tempdir", str(tmp_path_factory.mktemp("tmp")))
+        yield tempfile.tempdir
+
+
 @pytest.fixture(scope="session")
-def spark():
+def spark(session_tempdir):
     s = get_spark("uvdb-tests", cpus=8, shuffle_partitions=8)
+    # Plan-text tests look for artifact directories in a scan's
+    # Location, which Spark abbreviates to this many characters; paths
+    # under basetemp are ~30 characters longer than under /tmp.
+    s.conf.set("spark.sql.maxMetadataStringLength", "400")
     yield s
     s.stop()
 

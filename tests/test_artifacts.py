@@ -7,9 +7,11 @@ from __future__ import annotations
 import ast
 import os
 import pathlib
+import shutil
 import subprocess
 import sys
 import tempfile
+import zipfile
 from types import SimpleNamespace
 
 import pytest
@@ -236,3 +238,30 @@ def test_broken_lazy_oracle_raises_named_error(monkeypatch):
     with pytest.raises(registry.OracleBuildError, match="broken_probe") as e:
         registry.resolved_oracles()
     assert isinstance(e.value.__cause__, FileNotFoundError)
+
+
+def test_package_zip_named_by_sources(tmp_path):
+    """Processes on one source tree ship one zip; a copy of the tree
+    with one edited file gets another zip, which holds the edit."""
+    code = ("import sys, tempfile\n"
+            "tempfile.tempdir = sys.argv[1]\n"
+            "from unified_vector_database_spark.session import package_zip\n"
+            "print(package_zip())\n")
+
+    def zip_for(root):
+        env = dict(os.environ, PYTHONPATH=str(root))
+        return subprocess.run(
+            [sys.executable, "-c", code, str(tmp_path)], env=env,
+            cwd=tmp_path, capture_output=True, text=True,
+            check=True).stdout.strip()
+
+    first = zip_for(PKG.parent)
+    assert zip_for(PKG.parent) == first
+    copy = tmp_path / "copy" / PKG.name
+    shutil.copytree(PKG, copy, ignore=shutil.ignore_patterns("__pycache__"))
+    with open(copy / "registry.py", "a") as f:
+        f.write("# edited\n")
+    edited = zip_for(copy.parent)
+    assert edited != first
+    with zipfile.ZipFile(edited) as zf:
+        assert zf.read(f"{PKG.name}/registry.py").endswith(b"# edited\n")

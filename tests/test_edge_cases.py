@@ -157,7 +157,7 @@ def test_autocut_short_corpus_keeps_all(spark, sf_dir):
     """Fewer rows than the autocut window — including 1 and 0 rows —
     must not raise under ANSI mode (try_element_at paths), and a flat
     short window keeps every row."""
-    from unified_vector_database_spark.operators.search_extras import (
+    from unified_vector_database_spark.operators.query_dsl import (
         autocut_cut)
     flat = spark.createDataFrame(
         [Row(vec_id=i, score=1.0 - 0.001 * i) for i in range(3)])
@@ -174,8 +174,8 @@ def test_autocut_short_corpus_keeps_all(spark, sf_dir):
     cut = autocut_cut(jump).collect()
     assert [r["vec_id"] for r in cut] == [0, 1]
     # the registered op still behaves on the real corpus
-    from unified_vector_database_spark.operators import search_extras as se
-    real = se.autocut_search(spark, sf_dir).collect()
+    from unified_vector_database_spark.operators import query_dsl as DSL
+    real = DSL.autocut_search(spark, sf_dir).collect()
     assert len(real) >= 1
     assert [r["rank"] for r in real] == list(range(1, len(real) + 1))
 
@@ -201,7 +201,7 @@ def test_anomaly_flat_series_no_flags(spark):
     """A constant daily series has zero variance -> z is NULL and
     nothing is flagged (no divide-by-zero)."""
     import datetime
-    from unified_vector_database_spark.operators.esagg import ANOM_WIN
+    from unified_vector_database_spark.operators.aggregations import ANOM_WIN
     rows = [Row(event_type="t",
                 ts=datetime.datetime(2024, 1, 1 + d, 12, 0, 0),
                 value=10.0)
@@ -233,7 +233,7 @@ def test_r4b_ops_survive_degenerate_corpora(spark, tmp_path):
     import os
     from pyspark.sql import Row
     from unified_vector_database_spark.operators import (
-        quality as Q, search_more as SM, stats as ST)
+        quality as Q, query_dsl as DSL, stats as ST)
 
     def mk(name, rows):
         sf = str(tmp_path / name)
@@ -249,9 +249,9 @@ def test_r4b_ops_survive_degenerate_corpora(spark, tmp_path):
                                source="s", n_chars=1)])
     whitespace = mk("ws", [Row(doc_id=0, text="   ", lang="en",
                                source="s", n_chars=3)])
-    ops = [SM.match_phrase_prefix_search, SM.regexp_search,
-           SM.span_near_search, SM.combined_fields_search,
-           SM.values_count_filter, SM.edge_ngram_index,
+    ops = [DSL.match_phrase_prefix_search, DSL.regexp_search,
+           DSL.span_near_search, DSL.combined_fields_search,
+           DSL.values_count_filter, DSL.edge_ngram_index,
            Q.gopher_quality_rules, Q.dsir_importance,
            ST.string_stats_agg]
     for sf in (empty, single, whitespace):
@@ -261,7 +261,7 @@ def test_r4b_ops_survive_degenerate_corpora(spark, tmp_path):
     assert Q.gopher_quality_rules(spark, empty).collect() == []
     rows = Q.gopher_quality_rules(spark, single).collect()
     assert len(rows) == 1 and not rows[0].keep  # too short to keep
-    assert SM.span_near_search(spark, whitespace).collect() == []
+    assert DSL.span_near_search(spark, whitespace).collect() == []
 
 
 def test_r4b_event_aggs_survive_degenerate_corpora(spark, tmp_path):
@@ -273,7 +273,7 @@ def test_r4b_event_aggs_survive_degenerate_corpora(spark, tmp_path):
     import os
     from pyspark.sql import Row
     from unified_vector_database_spark.operators import (
-        esagg2 as E2, stats as ST, stats_more as SM2)
+        aggregations as AGG, stats as ST)
 
     def mk(name, rows):
         sf = str(tmp_path / name)
@@ -297,22 +297,22 @@ def test_r4b_event_aggs_survive_degenerate_corpora(spark, tmp_path):
         Row(event_id=i, ts=t0 + datetime.timedelta(days=i), user_id=i,
             event_type="click", value=0.0, props='{"k": 1}')
         for i in range(3)])
-    ops = [SM2.change_point_agg, SM2.stats_bucket_agg,
-           SM2.percentiles_bucket_agg, SM2.serial_diff_agg,
-           SM2.t_test_agg, SM2.percentile_histogram_sketch,
+    ops = [ST.change_point_agg, ST.stats_bucket_agg,
+           ST.percentiles_bucket_agg, ST.serial_diff_agg,
+           ST.t_test_agg, ST.percentile_histogram_sketch,
            ST.extended_stats_agg, ST.mad_value, ST.boxplot_value,
            ST.top_hits_agg, ST.auto_date_histogram,
-           E2.range_agg, E2.normalize_agg, E2.top_metrics_agg,
-           E2.cumulative_cardinality_agg, E2.bucket_sort_agg]
+           AGG.range_agg, AGG.normalize_agg, AGG.top_metrics_agg,
+           AGG.cumulative_cardinality_agg, AGG.bucket_sort_agg]
     for sf in (empty, single, one_day, zero_vals):
         for op in ops:
             op(spark, sf).collect()  # must not raise
     # the review's exact crash class: < 2 days -> zero rows, not a
     # divide-by-zero
-    assert SM2.change_point_agg(spark, one_day).collect() == []
-    assert SM2.change_point_agg(spark, empty).collect() == []
+    assert ST.change_point_agg(spark, one_day).collect() == []
+    assert ST.change_point_agg(spark, empty).collect() == []
     # zero grand total -> NULL share, matching the oracle
-    rows = E2.normalize_agg(spark, zero_vals).collect()
+    rows = AGG.normalize_agg(spark, zero_vals).collect()
     assert rows and all(r.pct_of_value is None for r in rows)
 
 
@@ -323,7 +323,7 @@ def test_r4b_vector_ops_survive_degenerate_corpora(spark, tmp_path):
     broadcast joins yield zero rows, not errors)."""
     import os
     from pyspark.sql import Row
-    from unified_vector_database_spark.operators import search_more as SM
+    from unified_vector_database_spark.operators import query_dsl as DSL
     from unified_vector_database_spark.operators.quality import (
         hard_negative_mining,
     )
@@ -341,8 +341,8 @@ def test_r4b_vector_ops_survive_degenerate_corpora(spark, tmp_path):
         Row(vec_id=901 + i, embedding=[float(i + 1), 1.0, 0.5, 2.0],
             label=i % 2) for i in range(3)])
     for sf in (empty, tiny):
-        assert SM.knn_by_id(spark, sf).collect() == []
-        assert SM.context_search(spark, sf).collect() == []
+        assert DSL.knn_by_id(spark, sf).collect() == []
+        assert DSL.context_search(spark, sf).collect() == []
         assert hard_negative_mining(spark, sf).collect() == []
 
 
@@ -354,9 +354,9 @@ def test_r6_ops_survive_degenerate_corpora(spark, tmp_path):
     import os
     from pyspark.sql import Row
     from unified_vector_database_spark.operators import (
-        cleanup as CL, esagg4 as E4, inverted as IV, multimodal as MM,
+        aggregations as AGG, cleanup as CL, inverted as IV, multimodal as MM,
         sampling as SA, sketches as SK, suggest as SG)
-    from unified_vector_database_spark.operators.search_extras2 import (
+    from unified_vector_database_spark.operators.query_dsl import (
         gauss_decay_search, span_not_search,
     )
 
@@ -383,7 +383,7 @@ def test_r6_ops_survive_degenerate_corpora(spark, tmp_path):
                                            source="s", n_chars=1)])
     d_ws = mk_docs("r6_d_ws", [Row(doc_id=0, text="   ", lang="en",
                                    source="s", n_chars=3)])
-    doc_ops = [span_not_search, E4.categorize_text_agg,
+    doc_ops = [span_not_search, AGG.categorize_text_agg,
                CL.length_bucket_batching, SK.bloom_membership,
                SK.countmin_term_freq, SG.suggest_context,
                IV.bm25_batch_search, SA.temperature_mix_sample,
@@ -401,11 +401,11 @@ def test_r6_ops_survive_degenerate_corpora(spark, tmp_path):
         Row(event_id=i, ts=t0 + datetime.timedelta(minutes=i), user_id=i,
             event_type="click", value=float(i), props="{}")
         for i in range(5)])
-    from unified_vector_database_spark.operators.stats_more import (
+    from unified_vector_database_spark.operators.stats import (
         bucket_ks_test,
     )
-    ev_ops = [E4.bucket_script_agg, E4.scripted_metric_agg,
-              E4.bucket_correlation_agg, gauss_decay_search,
+    ev_ops = [AGG.bucket_script_agg, AGG.scripted_metric_agg,
+              AGG.bucket_correlation_agg, gauss_decay_search,
               bucket_ks_test]
     for sf in (e_empty, e_single, e_oneday):
         for op in ev_ops:
@@ -430,7 +430,7 @@ def test_r6_ops_survive_degenerate_corpora(spark, tmp_path):
     # the guard classes, pinned: a 1-bucket series has no variance ->
     # NULL correlation (not NaN); an empty corpus -> no near-image
     # query -> zero rows (not a crash); empty bloom census has no rows
-    row = E4.bucket_correlation_agg(spark, e_oneday).collect()[0]
+    row = AGG.bucket_correlation_agg(spark, e_oneday).collect()[0]
     assert row.n_buckets == 1 and row.correlation is None
     assert MM.near_image_search(spark, d_empty).collect() == []
     assert SK.bloom_membership(spark, d_empty).collect() == []

@@ -1,7 +1,7 @@
 """ES|QL v2 translator units: the string/pattern/multivalue function
 surface, INLINESTATS (with and without BY), SAMPLE determinism,
 computed BY keys, and the new statistics aggregates — exercised at
-the parser/plan level (the registered esql2.py queries prove the
+the parser/plan level (the registered queries in esql.py prove the
 end-to-end oracle parity; these pin the pieces a hash can't isolate).
 """
 

@@ -36,8 +36,8 @@ def test_scroll_cursor_pushdown(spark, sf_dir):
 
 
 def test_q6_all_predicates_pushed(spark, sf_dir):
-    from unified_vector_database_spark.operators import analytics
-    df = analytics.q6_forecast_revenue(spark, sf_dir)
+    from unified_vector_database_spark.operators import tpch
+    df = tpch.q6_forecast_revenue(spark, sf_dir)
     text = plan_text(df)
     assert "PushedFilters" in text
     for frag in ("GreaterThanOrEqual(l_shipdate", "LessThan(l_quantity,24.0)"):
@@ -68,8 +68,8 @@ def test_q19_disjunction_pushed_per_side(spark, sf_dir):
     # Catalyst extracts each side's projection of the OR-of-brackets
     # and pushes it into that side's scan (quantity ranges to
     # lineitem, brand/size to part)
-    from unified_vector_database_spark.operators import analytics
-    df = analytics.q19_bracket_filters(spark, sf_dir)
+    from unified_vector_database_spark.operators import tpch
+    df = tpch.q19_bracket_filters(spark, sf_dir)
     text = plan_text(df)
     assert "LessThanOrEqual(l_quantity,50.0)" in text
     assert "EqualTo(p_brand,Brand#11)" in text
@@ -77,15 +77,15 @@ def test_q19_disjunction_pushed_per_side(spark, sf_dir):
 
 
 def test_q14_broadcast_and_pushdown(spark, sf_dir):
-    from unified_vector_database_spark.operators import analytics
-    df = analytics.q14_promo_share(spark, sf_dir)
+    from unified_vector_database_spark.operators import tpch
+    df = tpch.q14_promo_share(spark, sf_dir)
     assert_filter_pushed(df, "GreaterThanOrEqual(l_shipdate")
     assert_broadcast_join(df)
 
 
 def test_q8_star_dims_broadcast(spark, sf_dir):
-    from unified_vector_database_spark.operators import tpch_extra
-    df = tpch_extra.q8_market_share(spark, sf_dir)
+    from unified_vector_database_spark.operators import tpch
+    df = tpch.q8_market_share(spark, sf_dir)
     text = plan_text(df)
     # part, customer-semi, supplier+nation all broadcast; only the
     # lineitem x orders fact join and the yearly agg may shuffle
@@ -94,15 +94,15 @@ def test_q8_star_dims_broadcast(spark, sf_dir):
 
 
 def test_q17_brand_pushed_and_broadcast(spark, sf_dir):
-    from unified_vector_database_spark.operators import tpch_extra
-    df = tpch_extra.q17_small_qty_revenue(spark, sf_dir)
+    from unified_vector_database_spark.operators import tpch
+    df = tpch.q17_small_qty_revenue(spark, sf_dir)
     assert_filter_pushed(df, "EqualTo(p_brand,Brand#3)")
     assert_broadcast_join(df)
 
 
 def test_q21_semi_anti_no_cartesian(spark, sf_dir):
-    from unified_vector_database_spark.operators import tpch_extra
-    df = tpch_extra.q21_solo_returner(spark, sf_dir)
+    from unified_vector_database_spark.operators import tpch
+    df = tpch.q21_solo_returner(spark, sf_dir)
     text = plan_text(df)
     # both existence checks stay equi-joins on l_orderkey (the suppkey
     # inequality rides along as a residual condition) — never a
@@ -194,13 +194,13 @@ def test_r3_ops_plan_shapes(spark, sf_dir):
 
 
 def test_r4_ops_plan_shapes(spark, sf_dir):
-    from unified_vector_database_spark.operators.esagg import (
+    from unified_vector_database_spark.operators.aggregations import (
         value_histogram,
     )
     from unified_vector_database_spark.operators.index import (
         diversified_sample,
     )
-    from unified_vector_database_spark.operators.search_extras import (
+    from unified_vector_database_spark.operators.query_dsl import (
         autocut_search, rescore_topn, span_first_search, wildcard_search,
     )
     from unified_vector_database_spark.operators.sketches import (
@@ -250,20 +250,20 @@ def test_r4_ops_plan_shapes(spark, sf_dir):
 
 
 def test_r4b_ops_plan_shapes(spark, sf_dir):
-    from unified_vector_database_spark.operators.esagg2 import (
+    from unified_vector_database_spark.operators.aggregations import (
         range_agg, top_metrics_agg,
     )
     from unified_vector_database_spark.operators.quality import (
         gopher_quality_rules,
     )
-    from unified_vector_database_spark.operators.search_more import (
+    from unified_vector_database_spark.operators.query_dsl import (
         knn_by_id, knn_where_document, match_phrase_prefix_search,
         rank_feature_search, span_near_search,
     )
     from unified_vector_database_spark.operators.stats import (
         extended_stats_agg, string_stats_agg,
     )
-    from unified_vector_database_spark.operators.stats_more import (
+    from unified_vector_database_spark.operators.stats import (
         percentile_histogram_sketch, t_test_agg,
     )
     from unified_vector_database_spark.plans.asserts import (
@@ -356,10 +356,10 @@ def test_r5_agg_plan_shapes(spark, sf_dir):
     (single aggregate, no union re-scan), geohash_grid stays pure JVM
     (no Python eval in the plan), significant_terms broadcasts its
     totals, ewma/moving_percentiles never use a window operator."""
-    from unified_vector_database_spark.operators.esagg3 import (
+    from unified_vector_database_spark.operators.aggregations import (
         filters_agg, geohash_grid_agg, significant_terms_agg,
     )
-    from unified_vector_database_spark.operators.stats_more import (
+    from unified_vector_database_spark.operators.stats import (
         ewma_smoothing, moving_percentiles,
     )
 
@@ -392,7 +392,7 @@ def test_r6_ops_plan_shapes(spark, sf_dir):
         length_bucket_batching,
     )
     from unified_vector_database_spark.operators.dedup import semdedup
-    from unified_vector_database_spark.operators.esagg4 import (
+    from unified_vector_database_spark.operators.aggregations import (
         geotile_grid_agg,
     )
     from unified_vector_database_spark.operators.evaluation import (
@@ -402,7 +402,7 @@ def test_r6_ops_plan_shapes(spark, sf_dir):
     from unified_vector_database_spark.operators.inverted import (
         bm25_batch_search,
     )
-    from unified_vector_database_spark.operators.search_extras2 import (
+    from unified_vector_database_spark.operators.query_dsl import (
         has_parent_search, hybrid_dbsf,
     )
 
@@ -443,16 +443,16 @@ def test_r6b_ops_plan_shapes(spark, sf_dir):
     from unified_vector_database_spark.operators.analytics import (
         session_paths_agg,
     )
-    from unified_vector_database_spark.operators.esagg4 import (
+    from unified_vector_database_spark.operators.aggregations import (
         terms_partition_agg,
     )
     from unified_vector_database_spark.operators.index import (
         ivf_filtered_knn,
     )
-    from unified_vector_database_spark.operators.search_extras2 import (
+    from unified_vector_database_spark.operators.query_dsl import (
         gauss_decay_search,
     )
-    from unified_vector_database_spark.operators.stats_more import (
+    from unified_vector_database_spark.operators.stats import (
         holt_winters_smoothing,
     )
 
@@ -485,13 +485,13 @@ def test_r6c_ops_plan_shapes(spark, sf_dir):
     is WindowGroupLimit-pruned, the nested/children agg joins are
     co-keyed or broadcast (never cartesian), and the moving_fn models
     run window-free over one collected-array row."""
-    from unified_vector_database_spark.operators.esagg5 import (
+    from unified_vector_database_spark.operators.aggregations import (
         children_agg, nested_terms_agg, reverse_nested_agg,
     )
     from unified_vector_database_spark.operators.sampling import (
         sampler_agg,
     )
-    from unified_vector_database_spark.operators.stats_more import (
+    from unified_vector_database_spark.operators.stats import (
         moving_fn_lin_wavg, moving_fn_min_max, weighted_median_sketch,
     )
 

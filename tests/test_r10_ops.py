@@ -113,7 +113,7 @@ def test_opq_probe_reads_codes_artifact_not_vectors(spark, sf_dir, built):
 def test_mvt_tile_matches_python_model(spark, sf_dir):
     import duckdb
 
-    from unified_vector_database_spark.operators.esagg4 import (
+    from unified_vector_database_spark.operators.aggregations import (
         MVT_GRID_BITS, MVT_X, MVT_Y, _MVT_FINE_N, _MVT_FINE_Z,
         _slippy_xy, search_mvt_tile,
     )

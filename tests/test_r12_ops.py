@@ -114,7 +114,7 @@ def test_counter_reset_contributes_new_value():
 # -------------------------------------------------------- mode_agg
 
 def test_mode_tie_breaks_to_smallest_value(spark, duck, sf_dir):
-    from unified_vector_database_spark.operators.esagg7 import mode_agg
+    from unified_vector_database_spark.operators.aggregations import mode_agg
 
     rows = duck.execute(
         "SELECT lang, n_chars FROM documents").fetchall()

@@ -136,7 +136,7 @@ def test_esql_output_has_no_decimals(spark, sf_dir):
 # ---------------------------------------- sigterms_background_filter
 
 def test_background_filter_scopes_the_comparison(spark, duck, sf_dir):
-    from unified_vector_database_spark.operators.esagg7 import (
+    from unified_vector_database_spark.operators.aggregations import (
         SBF_LANG, SBF_MIN_CHARS, SBF_TOP, sigterms_background_filter,
     )
 

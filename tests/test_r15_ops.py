@@ -97,7 +97,7 @@ def test_filtered_alias_injects_predicate(spark, sf_dir, tmp_path):
 def test_shard_error_bound_contract(spark, duck, sf_dir):
     """The ES promise: est <= true <= est + doc_count_error_upper_bound,
     and the bound is 0 for a term every shard reported."""
-    from unified_vector_database_spark.operators.esagg7 import (
+    from unified_vector_database_spark.operators.aggregations import (
         TSE_SHARDS, terms_shard_error,
     )
 
@@ -115,7 +115,7 @@ def test_shard_error_exact_when_all_shards_report(spark, duck, sf_dir):
     regime where ES's terms agg IS exact."""
     import hashlib
 
-    from unified_vector_database_spark.operators.esagg7 import TSE_SHARDS
+    from unified_vector_database_spark.operators.aggregations import TSE_SHARDS
 
     rows = duck.execute("""
         WITH dt AS (SELECT DISTINCT doc_id,

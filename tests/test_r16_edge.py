@@ -43,7 +43,7 @@ def _mk_emb(spark, tmp_path, name, rows):
 
 def test_r16_doc_ops_survive_degenerate_corpora(spark, tmp_path):
     from unified_vector_database_spark.operators import (
-        cleanup as CL, esagg7 as E7, graph as G, sampling as SA,
+        aggregations as AGG, cleanup as CL, graph as G, sampling as SA,
     )
 
     empty = _mk_docs(spark, tmp_path, "d_empty", [])
@@ -53,8 +53,8 @@ def test_r16_doc_ops_survive_degenerate_corpora(spark, tmp_path):
     ws = _mk_docs(spark, tmp_path, "d_ws",
                   [Row(doc_id=0, text="   ", lang="en",
                        source="s", n_chars=3)])
-    ops = [G.graph_explore, E7.sigterms_background_filter,
-           E7.mode_agg, E7.terms_shard_error,
+    ops = [G.graph_explore, AGG.sigterms_background_filter,
+           AGG.mode_agg, AGG.terms_shard_error,
            CL.span_corruption_census, SA.curriculum_schedule]
     for sf in (empty, single, ws):
         for op in ops:

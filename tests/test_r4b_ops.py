@@ -18,7 +18,7 @@ from pyspark.sql import Row, functions as F
 
 from unified_vector_database_spark import tables
 from unified_vector_database_spark.operators import (
-    quality as Q, search_more as SM, stats as ST)
+    quality as Q, query_dsl as DSL, stats as ST)
 
 SF = os.environ.get("UVDB_TEST_SF_DIR", "/root/testdata/sf0.001")
 
@@ -119,7 +119,7 @@ def test_match_phrase_prefix_semantics(spark, tmp_path):
         "slow fast table fast table",  # 2 matches
     ])
     out = {r.doc_id: r.n_matches
-           for r in SM.match_phrase_prefix_search(spark, sf).collect()}
+           for r in DSL.match_phrase_prefix_search(spark, sf).collect()}
     assert out == {0: 1, 3: 2}
 
 
@@ -131,7 +131,7 @@ def test_span_near_unordered(spark, tmp_path):
         "vector table vector",   # pairs: (1,2)=1, (3,2)=1 -> 2 pairs
     ])
     out = {r.doc_id: (r.n_pairs, r.min_gap)
-           for r in SM.span_near_search(spark, sf).collect()}
+           for r in DSL.span_near_search(spark, sf).collect()}
     assert out == {0: (1, 2), 1: (1, 2), 3: (2, 1)}
 
 
@@ -142,7 +142,7 @@ def test_regexp_search_anchored(spark, tmp_path):
         "scan slow",        # none end in t
     ])
     out = {r.doc_id: (r.n_occurrences, r.n_terms)
-           for r in SM.regexp_search(spark, sf).collect()}
+           for r in DSL.regexp_search(spark, sf).collect()}
     assert out == {0: (3, 2), 1: (1, 1)}
 
 
@@ -153,22 +153,22 @@ def test_combined_fields_title_boost(spark, tmp_path):
         filler + " y vector",          # same length, term in body
     ])
     rows = {r.doc_id: r.score
-            for r in SM.combined_fields_search(spark, sf).collect()}
+            for r in DSL.combined_fields_search(spark, sf).collect()}
     assert rows[0] > rows[1] > 0  # title hit outranks body hit
 
 
 def test_knn_by_id_excludes_self(spark):
-    rows = SM.knn_by_id(spark, SF).collect()
+    rows = DSL.knn_by_id(spark, SF).collect()
     assert len(rows) == 10
-    assert all(r.vec_id != SM.NEAR_OBJECT_ID for r in rows)
+    assert all(r.vec_id != DSL.NEAR_OBJECT_ID for r in rows)
     scores = [r.score for r in rows]
     assert scores == sorted(scores, reverse=True)
 
 
 def test_nested_payload_filter_bounds(spark):
-    rows = SM.nested_payload_filter(spark, SF).collect()
+    rows = DSL.nested_payload_filter(spark, SF).collect()
     for r in rows:
-        assert SM.PAYLOAD_K_LO <= r.min_k <= r.max_k <= SM.PAYLOAD_K_HI
+        assert DSL.PAYLOAD_K_LO <= r.min_k <= r.max_k <= DSL.PAYLOAD_K_HI
         assert r.min_k <= r.avg_k <= r.max_k
 
 
@@ -193,9 +193,9 @@ def test_gopher_rules_reject_short_and_dominated(spark, tmp_path):
 
 
 def test_stats_bucket_consistency(spark):
-    from unified_vector_database_spark.operators import stats_more as SM2
-    r = SM2.stats_bucket_agg(spark, SF).collect()[0]
-    d = SM2._daily(spark, SF).collect()
+    from unified_vector_database_spark.operators import stats as ST
+    r = ST.stats_bucket_agg(spark, SF).collect()[0]
+    d = ST._daily(spark, SF).collect()
     assert r.n_buckets == len(d)
     assert abs(r.sum_total - sum(x.total for x in d)) < 1e-6
     assert r.min_total == min(x.total for x in d)
@@ -203,14 +203,14 @@ def test_stats_bucket_consistency(spark):
 
 
 def test_percentiles_bucket_ordered(spark):
-    from unified_vector_database_spark.operators import stats_more as SM2
-    r = SM2.percentiles_bucket_agg(spark, SF).collect()[0]
+    from unified_vector_database_spark.operators import stats as ST
+    r = ST.percentiles_bucket_agg(spark, SF).collect()[0]
     assert r.p25 <= r.p50 <= r.p75 <= r.p90
 
 
 def test_serial_diff_recompute(spark):
-    from unified_vector_database_spark.operators import stats_more as SM2
-    rows = SM2.serial_diff_agg(spark, SF).collect()
+    from unified_vector_database_spark.operators import stats as ST
+    rows = ST.serial_diff_agg(spark, SF).collect()
     assert rows
     ev = tables.load(spark, SF, "events")
     daily = {(r.event_type, r.day): r.total for r in (
@@ -225,8 +225,8 @@ def test_serial_diff_recompute(spark):
         days = sorted(d for (t, d) in daily if t == et)
         emitted = {r.day: r for r in series}
         for i, d in enumerate(days):
-            if i >= SM2.SERIAL_LAG:
-                want = daily[(et, d)] - daily[(et, days[i - SM2.SERIAL_LAG])]
+            if i >= ST.SERIAL_LAG:
+                want = daily[(et, d)] - daily[(et, days[i - ST.SERIAL_LAG])]
                 assert abs(emitted[d].diff - want) < 2e-6
             else:
                 assert d not in emitted  # lag not yet available
@@ -234,12 +234,12 @@ def test_serial_diff_recompute(spark):
 
 def test_t_test_matches_numpy(spark):
     from unified_vector_database_spark import tables
-    from unified_vector_database_spark.operators import stats_more as SM2
-    r = SM2.t_test_agg(spark, SF).collect()[0]
+    from unified_vector_database_spark.operators import stats as ST
+    r = ST.t_test_agg(spark, SF).collect()[0]
     pdf = tables.load(spark, SF, "events").select(
         "event_type", "value").toPandas()
-    a = pdf[pdf.event_type == SM2.TTEST_A]["value"].to_numpy()
-    b = pdf[pdf.event_type == SM2.TTEST_B]["value"].to_numpy()
+    a = pdf[pdf.event_type == ST.TTEST_A]["value"].to_numpy()
+    b = pdf[pdf.event_type == ST.TTEST_B]["value"].to_numpy()
     t = ((a.mean() - b.mean())
          / np.sqrt(a.var(ddof=1) / len(a) + b.var(ddof=1) / len(b)))
     assert r.n1 == len(a) and r.n2 == len(b)
@@ -247,18 +247,18 @@ def test_t_test_matches_numpy(spark):
 
 
 def test_geo_line_shape(spark):
-    from unified_vector_database_spark.operators import stats_more as SM2
-    for r in SM2.geo_line_agg(spark, SF).collect():
+    from unified_vector_database_spark.operators import stats as ST
+    for r in ST.geo_line_agg(spark, SF).collect():
         pts = r.line.split(";")
-        assert len(pts) == min(r.n_points, SM2.GEO_LINE_POINTS)
+        assert len(pts) == min(r.n_points, ST.GEO_LINE_POINTS)
         for p in pts:
             lat, lon = map(float, p.split(" "))
             assert -90 <= lat <= 90 and -180 <= lon <= 180
 
 
 def test_rank_feature_boosts_monotonically(spark):
-    from unified_vector_database_spark.operators import search_more as SMO
-    rows = SMO.rank_feature_search(spark, SF).collect()
+    from unified_vector_database_spark.operators import query_dsl as DSL
+    rows = DSL.rank_feature_search(spark, SF).collect()
     assert rows
     scores = [r.rf_score for r in rows]
     assert scores == sorted(scores, reverse=True)
@@ -302,8 +302,8 @@ def test_dsir_prefers_target_domain_vocabulary(spark, tmp_path):
 
 
 def test_top_metrics_is_latest(spark):
-    from unified_vector_database_spark.operators import esagg2 as E2
-    out = {r.event_type: r for r in E2.top_metrics_agg(spark, SF).collect()}
+    from unified_vector_database_spark.operators import aggregations as AGG
+    out = {r.event_type: r for r in AGG.top_metrics_agg(spark, SF).collect()}
     ev = tables.load(spark, SF, "events").select(
         "event_type", "ts", "event_id", "value").toPandas()
     for et, grp in ev.groupby("event_type"):
@@ -312,25 +312,25 @@ def test_top_metrics_is_latest(spark):
 
 
 def test_range_agg_partitions_everything(spark):
-    from unified_vector_database_spark.operators import esagg2 as E2
-    rows = E2.range_agg(spark, SF).collect()
+    from unified_vector_database_spark.operators import aggregations as AGG
+    rows = AGG.range_agg(spark, SF).collect()
     total = sum(r.n for r in rows)
     assert total == tables.load(spark, SF, "events").count()
     assert all(r.bucket[0] in "abcd" for r in rows)
 
 
 def test_bucket_sort_page(spark):
-    from unified_vector_database_spark.operators import esagg2 as E2
-    rows = E2.bucket_sort_agg(spark, SF).collect()
+    from unified_vector_database_spark.operators import aggregations as AGG
+    rows = AGG.bucket_sort_agg(spark, SF).collect()
     assert [r.rnk for r in rows] == list(range(
-        E2.BSORT_OFFSET + 1, E2.BSORT_OFFSET + 1 + len(rows)))
+        AGG.BSORT_OFFSET + 1, AGG.BSORT_OFFSET + 1 + len(rows)))
     totals = [r.total for r in rows]
     assert totals == sorted(totals, reverse=True)
 
 
 def test_cumulative_cardinality_monotone_and_exact(spark):
-    from unified_vector_database_spark.operators import esagg2 as E2
-    rows = E2.cumulative_cardinality_agg(spark, SF).collect()
+    from unified_vector_database_spark.operators import aggregations as AGG
+    rows = AGG.cumulative_cardinality_agg(spark, SF).collect()
     cums = [r.cum_users for r in rows]
     assert cums == sorted(cums)
     n_users = tables.load(spark, SF, "events").select(
@@ -340,9 +340,10 @@ def test_cumulative_cardinality_monotone_and_exact(spark):
 
 
 def test_geo_bounds_contains_centroid(spark):
-    from unified_vector_database_spark.operators import esagg2 as E2
+    from unified_vector_database_spark.operators import aggregations as AGG
     from unified_vector_database_spark.operators import stats as ST2
-    bounds = {r.c_mktsegment: r for r in E2.geo_bounds_agg(spark, SF).collect()}
+    bounds = {r.c_mktsegment: r
+              for r in AGG.geo_bounds_agg(spark, SF).collect()}
     for c in ST2.geo_centroid_agg(spark, SF).collect():
         b = bounds[c.c_mktsegment]
         assert b.south <= c.centroid_lat <= b.north
@@ -350,32 +351,32 @@ def test_geo_bounds_contains_centroid(spark):
 
 
 def test_context_search_excludes_examples(spark):
-    from unified_vector_database_spark.operators import search_more as SMO
-    rows = SMO.context_search(spark, SF).collect()
+    from unified_vector_database_spark.operators import query_dsl as DSL
+    rows = DSL.context_search(spark, SF).collect()
     assert rows
     ids = {r.vec_id for r in rows}
-    assert not ids & set(SMO._CTX_IDS)
+    assert not ids & set(DSL._CTX_IDS)
     sats = [r.n_satisfied for r in rows]
     assert sats == sorted(sats, reverse=True)
-    assert all(1 <= s <= len(SMO.CTX_PAIRS) for s in sats)
+    assert all(1 <= s <= len(DSL.CTX_PAIRS) for s in sats)
 
 
 def test_knn_where_document_respects_predicate(spark):
-    from unified_vector_database_spark.operators import search_more as SMO
-    rows = SMO.knn_where_document(spark, SF).collect()
+    from unified_vector_database_spark.operators import query_dsl as DSL
+    rows = DSL.knn_where_document(spark, SF).collect()
     assert rows
     docs = {r.doc_id for r in tables.load(spark, SF, "documents")
-            .where(F.col("text").contains(SMO.WHERE_DOC_SUBSTR))
+            .where(F.col("text").contains(DSL.WHERE_DOC_SUBSTR))
             .select("doc_id").collect()}
     assert all(r.vec_id in docs for r in rows)
 
 
 def test_edge_ngram_prefix_lengths(spark):
-    from unified_vector_database_spark.operators import search_more as SMO
-    rows = SMO.edge_ngram_index(spark, SF).collect()
+    from unified_vector_database_spark.operators import query_dsl as DSL
+    rows = DSL.edge_ngram_index(spark, SF).collect()
     assert rows
     for r in rows:
-        assert SMO.EDGE_NGRAM_MIN <= len(r.prefix) <= SMO.EDGE_NGRAM_MAX
+        assert DSL.EDGE_NGRAM_MIN <= len(r.prefix) <= DSL.EDGE_NGRAM_MAX
     counts = [r.n_docs for r in rows]
     assert counts == sorted(counts, reverse=True)
 
@@ -384,22 +385,22 @@ def test_edge_ngram_prefix_lengths(spark):
 
 
 def test_stream_first_seen_matches_batch(spark):
-    from unified_vector_database_spark.operators import esagg2 as E2
+    from unified_vector_database_spark.operators import aggregations as AGG
     from unified_vector_database_spark.streaming import ingest as SI
-    batch = E2.cumulative_cardinality_agg(spark, SF).collect()
+    batch = AGG.cumulative_cardinality_agg(spark, SF).collect()
     stream = SI.stream_first_seen_users(spark, SF).collect()
     assert [(r.day, r.new_users, r.cum_users) for r in batch] == \
            [(r.day, r.new_users, r.cum_users) for r in stream]
 
 
 def test_percentile_sketch_within_bin_width(spark):
-    from unified_vector_database_spark.operators import stats_more as SM2
+    from unified_vector_database_spark.operators import stats as ST
     ev = tables.load(spark, SF, "events").select("event_type", "value")
     pdf = ev.toPandas()
     lo, hi = pdf["value"].min(), pdf["value"].max()
-    width = (hi - lo) / SM2.PSKETCH_BINS
+    width = (hi - lo) / ST.PSKETCH_BINS
     est = {r.event_type: r for r in
-           SM2.percentile_histogram_sketch(spark, SF).collect()}
+           ST.percentile_histogram_sketch(spark, SF).collect()}
     for et, grp in pdf.groupby("event_type"):
         v = grp["value"].to_numpy()
         p50 = np.percentile(v, 50, method="inverted_cdf")
@@ -410,9 +411,9 @@ def test_percentile_sketch_within_bin_width(spark):
 
 
 def test_change_point_is_true_argmax(spark):
-    from unified_vector_database_spark.operators import stats_more as SM2
-    r = SM2.change_point_agg(spark, SF).collect()[0]
-    d = sorted((x.day, x.total) for x in SM2._daily(spark, SF).collect())
+    from unified_vector_database_spark.operators import stats as ST
+    r = ST.change_point_agg(spark, SF).collect()[0]
+    d = sorted((x.day, x.total) for x in ST._daily(spark, SF).collect())
     totals = [t for _, t in d]
     n = len(totals)
     best = None

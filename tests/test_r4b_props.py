@@ -46,7 +46,7 @@ def test_dominance_fold_equals_counter_max(spark, docs):
 @given(st.lists(st.integers(min_value=0, max_value=50),
                 min_size=1, max_size=30))
 def test_cumulate_fold_equals_cumsum(spark, news):
-    from unified_vector_database_spark.operators.esagg2 import (
+    from unified_vector_database_spark.operators.aggregations import (
         cumulate_first_seen,
     )
     import datetime
@@ -80,7 +80,7 @@ def test_sketch_percentile_error_bound(spark, tmp_path_factory, values):
     the first run of this test proved it with a 25x-width divergence.)
     Includes the all-equal degenerate corpus, where width=0 and the
     estimate must equal the value exactly."""
-    from unified_vector_database_spark.operators import stats_more as SM2
+    from unified_vector_database_spark.operators import stats as ST
     import os
     import uuid
     sf = str(tmp_path_factory.mktemp("sk") / uuid.uuid4().hex[:8])
@@ -92,10 +92,10 @@ def test_sketch_percentile_error_bound(spark, tmp_path_factory, values):
             for i, v in enumerate(values)]
     spark.createDataFrame(rows).write.mode("overwrite").parquet(
         f"{sf}/events.parquet")
-    out = SM2.percentile_histogram_sketch(spark, sf).collect()
+    out = ST.percentile_histogram_sketch(spark, sf).collect()
     assert len(out) == 1
     v = np.array(values, dtype=np.float64)
-    width = (v.max() - v.min()) / SM2.PSKETCH_BINS
+    width = (v.max() - v.min()) / ST.PSKETCH_BINS
     for q, col in ((0.5, "p50_est"), (0.9, "p90_est")):
         exact = np.percentile(v, q * 100, method="inverted_cdf")
         est = out[0][col]
@@ -108,77 +108,68 @@ def test_sketch_percentile_error_bound(spark, tmp_path_factory, values):
 @settings(max_examples=10, deadline=None)
 @given(st.lists(DOC, min_size=1, max_size=5))
 def test_span_near_equals_python_model(spark, docs):
-    from unified_vector_database_spark.operators import search_more as SM
-    import os
+    from unified_vector_database_spark.operators import query_dsl as DSL
     import tempfile
-    import uuid
-    sf = os.path.join(tempfile.gettempdir(), "prop_" + uuid.uuid4().hex[:8])
-    os.makedirs(sf, exist_ok=True)
-    rows = [Row(doc_id=i, text=" ".join(t), lang="en", source="s",
-                n_chars=len(" ".join(t))) for i, t in enumerate(docs)]
-    spark.createDataFrame(rows).write.mode("overwrite").parquet(
-        f"{sf}/documents.parquet")
-    got = {r.doc_id: (r.n_pairs, r.min_gap)
-           for r in SM.span_near_search(spark, sf).collect()}
-    for i, toks in enumerate(docs):
-        p1 = [j for j, t in enumerate(toks) if t == SM.SPAN_T1]
-        p2 = [j for j, t in enumerate(toks) if t == SM.SPAN_T2]
-        gaps = [abs(a - b) for a in p1 for b in p2
-                if abs(a - b) <= SM.SPAN_SLOP]
-        if gaps:
-            assert got[i] == (len(gaps), min(gaps))
-        else:
-            assert i not in got
+    with tempfile.TemporaryDirectory() as sf:
+        rows = [Row(doc_id=i, text=" ".join(t), lang="en", source="s",
+                    n_chars=len(" ".join(t))) for i, t in enumerate(docs)]
+        spark.createDataFrame(rows).write.mode("overwrite").parquet(
+            f"{sf}/documents.parquet")
+        got = {r.doc_id: (r.n_pairs, r.min_gap)
+               for r in DSL.span_near_search(spark, sf).collect()}
+        for i, toks in enumerate(docs):
+            p1 = [j for j, t in enumerate(toks) if t == DSL.SPAN_T1]
+            p2 = [j for j, t in enumerate(toks) if t == DSL.SPAN_T2]
+            gaps = [abs(a - b) for a in p1 for b in p2
+                    if abs(a - b) <= DSL.SPAN_SLOP]
+            if gaps:
+                assert got[i] == (len(gaps), min(gaps))
+            else:
+                assert i not in got
 
 
 @settings(max_examples=10, deadline=None)
 @given(st.lists(DOC, min_size=1, max_size=5))
 def test_edge_ngram_equals_python_model(spark, docs):
-    from unified_vector_database_spark.operators import search_more as SM
-    import os
+    from unified_vector_database_spark.operators import query_dsl as DSL
     import tempfile
-    import uuid
-    sf = os.path.join(tempfile.gettempdir(), "prop_" + uuid.uuid4().hex[:8])
-    os.makedirs(sf, exist_ok=True)
-    rows = [Row(doc_id=i, text=" ".join(t), lang="en", source="s",
-                n_chars=1) for i, t in enumerate(docs)]
-    spark.createDataFrame(rows).write.mode("overwrite").parquet(
-        f"{sf}/documents.parquet")
-    got = {r.prefix: r.n_docs
-           for r in SM.edge_ngram_index(spark, sf).collect()}
-    model = {}
-    for i, toks in enumerate(docs):
-        for term in set(toks):
-            for n in range(SM.EDGE_NGRAM_MIN,
-                           min(SM.EDGE_NGRAM_MAX, len(term)) + 1):
-                model.setdefault(term[:n], set()).add(i)
-    expect = sorted(((len(v), p) for p, v in model.items()),
-                    key=lambda x: (-x[0], x[1]))[:SM.EDGE_NGRAM_TOP]
-    assert got == {p: n for n, p in expect}
+    with tempfile.TemporaryDirectory() as sf:
+        rows = [Row(doc_id=i, text=" ".join(t), lang="en", source="s",
+                    n_chars=1) for i, t in enumerate(docs)]
+        spark.createDataFrame(rows).write.mode("overwrite").parquet(
+            f"{sf}/documents.parquet")
+        got = {r.prefix: r.n_docs
+               for r in DSL.edge_ngram_index(spark, sf).collect()}
+        model = {}
+        for i, toks in enumerate(docs):
+            for term in set(toks):
+                for n in range(DSL.EDGE_NGRAM_MIN,
+                               min(DSL.EDGE_NGRAM_MAX, len(term)) + 1):
+                    model.setdefault(term[:n], set()).add(i)
+        expect = sorted(((len(v), p) for p, v in model.items()),
+                        key=lambda x: (-x[0], x[1]))[:DSL.EDGE_NGRAM_TOP]
+        assert got == {p: n for n, p in expect}
 
 
 @settings(max_examples=8, deadline=None)
 @given(st.lists(DOC, min_size=2, max_size=6))
 def test_frequent_item_sets_equals_python_model(spark, docs):
     from itertools import combinations
-    from unified_vector_database_spark.operators import esagg2 as E2
-    import os
+    from unified_vector_database_spark.operators import aggregations as AGG
     import tempfile
-    import uuid
-    sf = os.path.join(tempfile.gettempdir(), "prop_" + uuid.uuid4().hex[:8])
-    os.makedirs(sf, exist_ok=True)
-    rows = [Row(doc_id=i, text=" ".join(t), lang="en", source="s",
-                n_chars=1) for i, t in enumerate(docs)]
-    spark.createDataFrame(rows).write.mode("overwrite").parquet(
-        f"{sf}/documents.parquet")
-    got = {(r.item_a, r.item_b): r.support_count
-           for r in E2.frequent_item_sets(spark, sf).collect()}
-    counts = Counter()
-    for toks in docs:
-        for a, b in combinations(sorted(set(toks)), 2):
-            counts[(a, b)] += 1
-    thresh = E2.FIS_MIN_SUPPORT * len(docs)
-    expect = {k: c for k, c in counts.items() if c >= thresh}
-    top = dict(sorted(expect.items(),
-                      key=lambda kv: (-kv[1], kv[0]))[:E2.FIS_TOP])
-    assert got == top
+    with tempfile.TemporaryDirectory() as sf:
+        rows = [Row(doc_id=i, text=" ".join(t), lang="en", source="s",
+                    n_chars=1) for i, t in enumerate(docs)]
+        spark.createDataFrame(rows).write.mode("overwrite").parquet(
+            f"{sf}/documents.parquet")
+        got = {(r.item_a, r.item_b): r.support_count
+               for r in AGG.frequent_item_sets(spark, sf).collect()}
+        counts = Counter()
+        for toks in docs:
+            for a, b in combinations(sorted(set(toks)), 2):
+                counts[(a, b)] += 1
+        thresh = AGG.FIS_MIN_SUPPORT * len(docs)
+        expect = {k: c for k, c in counts.items() if c >= thresh}
+        top = dict(sorted(expect.items(),
+                          key=lambda kv: (-kv[1], kv[0]))[:AGG.FIS_TOP])
+        assert got == top

@@ -59,7 +59,7 @@ def _geohash_bisect(lat: float, lon: float, precision: int) -> str:
 
 def test_geohash_cells_match_bisection_reference(spark, sf_dir):
     from unified_vector_database_spark import tables
-    from unified_vector_database_spark.operators.esagg3 import (
+    from unified_vector_database_spark.operators.aggregations import (
         GEOHASH_PRECISION, geohash_grid_agg,
     )
     from unified_vector_database_spark.operators.geo import with_coords
@@ -159,7 +159,7 @@ def test_suggest_phrase_matches_python_model(spark, sf_dir):
 
 def test_intervals_matches_positional_scan(spark, sf_dir):
     from unified_vector_database_spark import tables
-    from unified_vector_database_spark.operators.search_more import (
+    from unified_vector_database_spark.operators.query_dsl import (
         IV_MAX_GAPS, IV_T1, IV_T2, intervals_search,
     )
 
@@ -195,7 +195,7 @@ def test_moving_percentiles_matches_python_model(spark, sf_dir):
     quantile (sort the slice, interpolate at (n-1)*q) vs the Spark
     array fold — the DuckDB oracle is the second (windowed
     quantile_cont); all three must agree."""
-    from unified_vector_database_spark.operators.stats_more import (
+    from unified_vector_database_spark.operators.stats import (
         MP_Q, MP_WINDOW, _daily, moving_percentiles,
     )
 

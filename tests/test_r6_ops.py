@@ -30,7 +30,7 @@ def _tile(lat: float, lon: float, zoom: int) -> str:
 
 def test_geotile_matches_python_reference(spark, sf_dir):
     from unified_vector_database_spark import tables
-    from unified_vector_database_spark.operators.esagg4 import (
+    from unified_vector_database_spark.operators.aggregations import (
         GEOTILE_ZOOM, geotile_grid_agg,
     )
     from unified_vector_database_spark.operators.geo import with_coords
@@ -57,7 +57,7 @@ def _daily_rows(sf_dir):
 
 
 def test_bucket_script_matches_python_fold(spark, sf_dir):
-    from unified_vector_database_spark.operators.esagg4 import (
+    from unified_vector_database_spark.operators.aggregations import (
         bucket_script_agg,
     )
 
@@ -81,7 +81,7 @@ def test_bucket_script_matches_python_fold(spark, sf_dir):
 def test_scripted_metric_matches_sequential_fold(spark, sf_dir):
     """Max drawdown re-derived by the literal one-pass sequential
     scan a scripted_metric's map script would run."""
-    from unified_vector_database_spark.operators.esagg4 import (
+    from unified_vector_database_spark.operators.aggregations import (
         scripted_metric_agg,
     )
 
@@ -106,7 +106,7 @@ def test_dbsf_matches_python_normalization(spark, sf_dir):
     from unified_vector_database_spark.operators.hybrid import (
         _candidates, _vec_scores, bm25_scores,
     )
-    from unified_vector_database_spark.operators.search_extras2 import (
+    from unified_vector_database_spark.operators.query_dsl import (
         _DBSF_SIGMAS, hybrid_dbsf,
     )
 
@@ -145,10 +145,10 @@ def test_collapse_inner_hits_structure(spark, sf_dir):
     every group's rank-1 hit IS that lang's collapsed hit, ranks are
     contiguous from 1, and scores are non-increasing within a
     group."""
-    from unified_vector_database_spark.operators.search_extras import (
+    from unified_vector_database_spark.operators.query_dsl import (
         collapse_search,
     )
-    from unified_vector_database_spark.operators.search_extras2 import (
+    from unified_vector_database_spark.operators.query_dsl import (
         INNER_GROUPS, INNER_HITS, collapse_inner_hits,
     )
 
@@ -171,7 +171,7 @@ def test_collapse_inner_hits_structure(spark, sf_dir):
 
 def test_span_not_matches_positional_scan(spark, sf_dir):
     from unified_vector_database_spark import tables
-    from unified_vector_database_spark.operators.search_extras2 import (
+    from unified_vector_database_spark.operators.query_dsl import (
         SPAN_NOT_DIST, SPAN_NOT_EXC, SPAN_NOT_INC, span_not_search,
     )
 
@@ -398,7 +398,7 @@ def test_bm25_batch_matches_python_model(spark, sf_dir):
 
 
 def test_has_child_parent_match_python(spark, sf_dir):
-    from unified_vector_database_spark.operators.search_extras2 import (
+    from unified_vector_database_spark.operators.query_dsl import (
         HAS_CHILD_FLAG, HAS_CHILD_MIN, HAS_PARENT_PRIORITY,
         has_child_search, has_parent_search,
     )
@@ -528,7 +528,7 @@ def test_near_image_matches_python_decode(spark, sf_dir):
 def test_bucket_correlation_matches_python(spark, sf_dir):
     import statistics
 
-    from unified_vector_database_spark.operators.esagg4 import (
+    from unified_vector_database_spark.operators.aggregations import (
         bucket_correlation_agg,
     )
 
@@ -559,7 +559,7 @@ def test_bucket_correlation_matches_python(spark, sf_dir):
 def test_categorize_text_matches_python(spark, sf_dir):
     import re
 
-    from unified_vector_database_spark.operators.esagg4 import (
+    from unified_vector_database_spark.operators.aggregations import (
         CATEGORIZE_SIG_TOKENS, CATEGORIZE_TOP, categorize_text_agg,
     )
 
@@ -666,7 +666,7 @@ def test_countmin_matches_python_and_overestimates(spark, sf_dir):
 def test_gauss_decay_matches_python(spark, sf_dir):
     import datetime
 
-    from unified_vector_database_spark.operators.search_extras2 import (
+    from unified_vector_database_spark.operators.query_dsl import (
         DECAY_AT_SCALE, DECAY_SCALE_DAYS, DECAY_TOP, gauss_decay_search,
     )
 
@@ -712,7 +712,7 @@ def test_holt_winters_matches_sequential_python(spark, sf_dir):
     """Triple smoothing re-derived by a literal sequential Python
     loop over Decimal-exact daily totals — independent of both the
     Spark fold and the recursive CTE."""
-    from unified_vector_database_spark.operators.stats_more import (
+    from unified_vector_database_spark.operators.stats import (
         HW_ALPHA, HW_BETA, HW_GAMMA, HW_PERIOD, holt_winters_smoothing,
     )
 
@@ -752,7 +752,7 @@ def test_terms_partitions_disjoint_and_complete(spark, sf_dir):
     partitions are disjoint — the paging contract."""
     import hashlib
 
-    from unified_vector_database_spark.operators.esagg4 import (
+    from unified_vector_database_spark.operators.aggregations import (
         TERMS_NUM_PARTITIONS, TERMS_PARTITION, terms_partition_agg,
     )
 
@@ -779,7 +779,7 @@ def test_terms_partitions_disjoint_and_complete(spark, sf_dir):
 
 
 def test_weighted_median_matches_python(spark, sf_dir):
-    from unified_vector_database_spark.operators.stats_more import (
+    from unified_vector_database_spark.operators.stats import (
         weighted_median_price,
     )
 
@@ -921,7 +921,7 @@ def test_search_iterator_is_page_two_of_knn(spark, sf_dir):
 
 
 def test_chi2_significance_matches_python(spark, sf_dir):
-    from unified_vector_database_spark.operators.esagg3 import (
+    from unified_vector_database_spark.operators.aggregations import (
         SIGTERMS_LANG, significant_terms_chi2,
     )
 

@@ -28,7 +28,7 @@ def test_weighted_median_sketch_within_one_bin_of_exact(spark, sf_dir):
     # so |estimate - exact| <= one bin width by construction — the
     # error contract that lets it replace the exact sort at scale.
     from unified_vector_database_spark import tables
-    from unified_vector_database_spark.operators.stats_more import (
+    from unified_vector_database_spark.operators.stats import (
         WM_BINS, weighted_median_price, weighted_median_sketch,
     )
     import pyspark.sql.functions as F

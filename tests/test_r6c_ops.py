@@ -14,7 +14,7 @@ import pytest
 def test_search_after_cursor_reaches_the_scan(spark, sf_dir):
     # The op's whole at-scale claim: the keyset cursor is a pushed
     # range predicate, not a post-scan filter over everything.
-    from unified_vector_database_spark.operators.search_more import (
+    from unified_vector_database_spark.operators.query_dsl import (
         search_after_page,
     )
 
@@ -29,7 +29,7 @@ def test_search_after_is_the_next_offset_page(spark, sf_dir):
     # page equals the full (date, key) order restarted strictly after
     # the cursor tuple.
     from unified_vector_database_spark import tables
-    from unified_vector_database_spark.operators.search_more import (
+    from unified_vector_database_spark.operators.query_dsl import (
         SA_CURSOR_DATE, SA_CURSOR_KEY, SA_PAGE, search_after_page,
     )
 
@@ -46,7 +46,7 @@ def test_search_after_is_the_next_offset_page(spark, sf_dir):
 
 
 def test_multi_target_fuses_by_sum_and_excludes_targets(spark, sf_dir):
-    from unified_vector_database_spark.operators.search_more import (
+    from unified_vector_database_spark.operators.query_dsl import (
         MT_TARGETS, multi_target_knn,
     )
 
@@ -61,7 +61,7 @@ def test_multi_target_top1_matches_numpy(spark, sf_dir):
     import numpy as np
     import pyarrow.parquet as pq
 
-    from unified_vector_database_spark.operators.search_more import (
+    from unified_vector_database_spark.operators.query_dsl import (
         MT_TARGETS, multi_target_knn,
     )
 
@@ -81,7 +81,7 @@ def test_multi_target_top1_matches_numpy(spark, sf_dir):
 def test_lookup_from_queries_a_with_vectors_from_b(spark, sf_dir):
     # Collections are label-disjoint: every hit must be in A
     # (label < min), and the positives' own ids can never appear.
-    from unified_vector_database_spark.operators.search_more import (
+    from unified_vector_database_spark.operators.query_dsl import (
         LOOKUP_LABEL_MIN, recommend_lookup_from,
     )
 
@@ -94,7 +94,7 @@ def test_parent_agg_dedups_parents_per_bucket(spark, sf_dir):
     # doc_count), so it must equal the distinct-parent census — and
     # stay <= n_children, which counts every child.
     from unified_vector_database_spark import tables
-    from unified_vector_database_spark.operators.esagg5 import parent_agg
+    from unified_vector_database_spark.operators.aggregations import parent_agg
 
     got = {r.l_linestatus: r for r in parent_agg(spark, sf_dir).collect()}
     li = tables.load(spark, sf_dir, "lineitem")
@@ -110,7 +110,7 @@ def test_parent_agg_dedups_parents_per_bucket(spark, sf_dir):
 def test_span_or_is_the_clause_union(spark, sf_dir):
     # A span_or match set is exactly the union of its clauses' match
     # sets, scored additively.
-    from unified_vector_database_spark.operators.search_extras2 import (
+    from unified_vector_database_spark.operators.query_dsl import (
         _span_frames, span_or_search,
     )
 
@@ -164,7 +164,7 @@ def test_runtime_field_filter_collapses_into_scan(spark, sf_dir):
     # Schema-on-read promise: the derived-field filter must not
     # materialize an extra exchange — the plan stays scan -> project/
     # filter -> partial agg -> exchange -> final agg (one shuffle).
-    from unified_vector_database_spark.operators.esagg5 import (
+    from unified_vector_database_spark.operators.aggregations import (
         runtime_field_agg,
     )
 
@@ -178,7 +178,7 @@ def test_script_score_monotone_in_label_boost(spark, sf_dir):
     # row is 1.0 for any metric), the boost must be ln-monotone.
     import math
 
-    from unified_vector_database_spark.operators.search_extras2 import (
+    from unified_vector_database_spark.operators.query_dsl import (
         SCRIPT_SCORE_WEIGHT, script_score_search,
     )
 
@@ -189,7 +189,7 @@ def test_script_score_monotone_in_label_boost(spark, sf_dir):
         assert -1.0 - 1e-4 <= cos <= 1.0 + 1e-4
 
 
-# ----------------------------- r7 wave 3 (search_extras3) checks
+# ----------------------------------------- highlighting and suggesters
 
 
 def test_sliced_scroll_is_disjoint_and_complete(spark, sf_dir):
@@ -197,7 +197,7 @@ def test_sliced_scroll_is_disjoint_and_complete(spark, sf_dir):
     # summing to |documents| (disjointness + completeness — the
     # property parallel export relies on).
     from unified_vector_database_spark import tables
-    from unified_vector_database_spark.operators.search_extras3 import (
+    from unified_vector_database_spark.operators.query_dsl import (
         SCROLL_SLICES, sliced_scroll,
     )
 
@@ -208,7 +208,7 @@ def test_sliced_scroll_is_disjoint_and_complete(spark, sf_dir):
 
 
 def test_suggest_term_finds_the_obvious_corrections(spark, sf_dir):
-    from unified_vector_database_spark.operators.search_extras3 import (
+    from unified_vector_database_spark.operators.query_dsl import (
         SUGGEST_MAX_EDITS, suggest_term,
     )
 
@@ -221,7 +221,7 @@ def test_suggest_term_finds_the_obvious_corrections(spark, sf_dir):
 
 
 def test_highlight_wraps_first_occurrence_in_window(spark, sf_dir):
-    from unified_vector_database_spark.operators.search_extras3 import (
+    from unified_vector_database_spark.operators.query_dsl import (
         HL_TERM, HL_WINDOW, highlight_search,
     )
 
@@ -237,7 +237,7 @@ def test_knn_cutoff_is_a_filtered_topk(spark, sf_dir):
     from unified_vector_database_spark.operators.knn import (
         corpus_with_query, cosine_score, knn,
     )
-    from unified_vector_database_spark.operators.search_extras3 import (
+    from unified_vector_database_spark.operators.query_dsl import (
         KNN_CUT_K, KNN_CUT_SIM, knn_similarity_cutoff,
     )
     import pyspark.sql.functions as F
@@ -255,7 +255,7 @@ def test_term_vectors_matches_python_recount(spark, sf_dir):
     import pyarrow.parquet as pq
     from collections import Counter
 
-    from unified_vector_database_spark.operators.search_extras3 import (
+    from unified_vector_database_spark.operators.query_dsl import (
         TV_DOC_ID, term_vectors,
     )
 
@@ -272,7 +272,7 @@ def test_term_vectors_matches_python_recount(spark, sf_dir):
 
 
 def test_query_string_field_clause_reaches_the_scan(spark, sf_dir):
-    from unified_vector_database_spark.operators.search_extras3 import (
+    from unified_vector_database_spark.operators.query_dsl import (
         query_string_search,
     )
 
@@ -388,7 +388,7 @@ def test_hw_forecast_continues_the_fitted_state(spark, sf_dir):
     # f_h = level_n + h*trend_n + seasonal[h] recomputed from the
     # smoothing view's own last rows — the forecast must be the
     # arithmetic continuation of the published fit.
-    from unified_vector_database_spark.operators.stats_more import (
+    from unified_vector_database_spark.operators.stats import (
         HW_PERIOD, holt_winters_forecast, holt_winters_smoothing,
     )
 

@@ -20,7 +20,7 @@ def _docs(spark, sf_dir):
 
 
 def test_match_bool_prefix_matches_python_model(spark, sf_dir):
-    from unified_vector_database_spark.operators.search_extras4 import (
+    from unified_vector_database_spark.operators.query_dsl import (
         MBP_PREFIX, MBP_TERM, MBP_TOP, match_bool_prefix_search,
     )
 
@@ -38,7 +38,7 @@ def test_match_bool_prefix_matches_python_model(spark, sf_dir):
 
 
 def test_match_bool_prefix_plan_is_shuffle_free(spark, sf_dir):
-    from unified_vector_database_spark.operators.search_extras4 import (
+    from unified_vector_database_spark.operators.query_dsl import (
         match_bool_prefix_search,
     )
 
@@ -49,7 +49,7 @@ def test_match_bool_prefix_plan_is_shuffle_free(spark, sf_dir):
 
 
 def test_cross_fields_keyword_term_scores_via_source_field(spark, sf_dir):
-    from unified_vector_database_spark.operators.search_extras4 import (
+    from unified_vector_database_spark.operators.query_dsl import (
         XF_KEY_BOOST, XF_KEY_TERM, multi_match_cross_fields,
     )
 
@@ -66,7 +66,7 @@ def test_cross_fields_keyword_term_scores_via_source_field(spark, sf_dir):
 
 
 def test_constant_score_ignores_tf(spark, sf_dir):
-    from unified_vector_database_spark.operators.search_extras4 import (
+    from unified_vector_database_spark.operators.query_dsl import (
         CS_CLAUSES, CS_FILTER_LANG, constant_score_search,
     )
 
@@ -86,7 +86,7 @@ def test_constant_score_ignores_tf(spark, sf_dir):
 
 
 def test_constant_score_filter_reaches_the_scan(spark, sf_dir):
-    from unified_vector_database_spark.operators.search_extras4 import (
+    from unified_vector_database_spark.operators.query_dsl import (
         constant_score_search,
     )
 
@@ -97,7 +97,7 @@ def test_constant_score_filter_reaches_the_scan(spark, sf_dir):
 
 
 def test_span_multi_matches_python_model(spark, sf_dir):
-    from unified_vector_database_spark.operators.search_extras4 import (
+    from unified_vector_database_spark.operators.query_dsl import (
         SM_LIT, SM_PREFIX, SM_SLOP, SM_TOP, span_multi_search,
     )
 
@@ -116,7 +116,7 @@ def test_span_multi_matches_python_model(spark, sf_dir):
 
 
 def test_completion_fuzzy_corrects_the_typo(spark, sf_dir):
-    from unified_vector_database_spark.operators.search_extras4 import (
+    from unified_vector_database_spark.operators.query_dsl import (
         CF_FUZZ, suggest_completion_fuzzy,
     )
 
@@ -148,7 +148,7 @@ def _lev(a: str, b: str) -> int:
 
 def test_exists_census_matches_python_model(spark, sf_dir):
     from unified_vector_database_spark import tables
-    from unified_vector_database_spark.operators.esagg6 import (
+    from unified_vector_database_spark.operators.aggregations import (
         EX_NOTE_MARK, EX_TAG_MINLEN, exists_payload_filter,
     )
 
@@ -169,7 +169,7 @@ def test_exists_census_matches_python_model(spark, sf_dir):
 
 
 def test_array_contains_matches_python_model(spark, sf_dir):
-    from unified_vector_database_spark.operators.esagg6 import (
+    from unified_vector_database_spark.operators.aggregations import (
         AC_ALL, AC_ANY, AC_HEAD, AC_MINLEN, AC_ONE, array_contains_filter,
     )
 
@@ -206,7 +206,7 @@ def _hex_cell(lon: float, lat: float, size: float, s33: float):
 
 def test_geohex_matches_python_model(spark, sf_dir):
     from unified_vector_database_spark import tables
-    from unified_vector_database_spark.operators.esagg6 import (
+    from unified_vector_database_spark.operators.aggregations import (
         HEX_SIZE, HEX_TOP, _SQRT3_3, geohex_grid_agg,
     )
 
@@ -308,9 +308,9 @@ def test_r8_ops_survive_degenerate_corpora(spark, tmp_path):
 
     from pyspark.sql import Row
 
-    from unified_vector_database_spark.operators import esagg6 as E6
+    from unified_vector_database_spark.operators import aggregations as AGG
     from unified_vector_database_spark.operators import (
-        search_extras4 as S4,
+        query_dsl as DSL,
     )
     from unified_vector_database_spark.streaming.ingest import (
         stream_late_data,
@@ -332,9 +332,9 @@ def test_r8_ops_survive_degenerate_corpora(spark, tmp_path):
     d_ws = mk("r8_d_ws", "documents", doc_schema,
               [Row(doc_id=0, text="   ", lang="en", source="s",
                    n_chars=3)])
-    doc_ops = [S4.match_bool_prefix_search, S4.multi_match_cross_fields,
-               S4.constant_score_search, S4.span_multi_search,
-               S4.suggest_completion_fuzzy, E6.array_contains_filter]
+    doc_ops = [DSL.match_bool_prefix_search, DSL.multi_match_cross_fields,
+               DSL.constant_score_search, DSL.span_multi_search,
+               DSL.suggest_completion_fuzzy, AGG.array_contains_filter]
     for sf in (d_empty, d_single, d_ws):
         for op in doc_ops:
             op(spark, sf).collect()  # must not raise
@@ -346,8 +346,8 @@ def test_r8_ops_survive_degenerate_corpora(spark, tmp_path):
                   [Row(p_partkey=0, p_name="red widget", p_brand="B",
                        p_type="ECONOMY", p_size=1, p_retailprice=1.0)])
     for sf in (p_empty, p_single):
-        E6.exists_payload_filter(spark, sf).collect()
-    [r] = E6.exists_payload_filter(spark, p_single).collect()
+        AGG.exists_payload_filter(spark, sf).collect()
+    [r] = AGG.exists_payload_filter(spark, p_single).collect()
     assert (r.n_total, r.n_note_exists, r.n_tags_empty) == (1, 1, 0)
 
     cust_schema = ("c_custkey long, c_name string, c_nationkey long, "
@@ -356,8 +356,8 @@ def test_r8_ops_survive_degenerate_corpora(spark, tmp_path):
     c_single = mk("r8_c_single", "customer", cust_schema,
                   [Row(c_custkey=7, c_name="x", c_nationkey=0,
                        c_acctbal=0.0, c_mktsegment="m")])
-    assert E6.geohex_grid_agg(spark, c_empty).collect() == []
-    [r] = E6.geohex_grid_agg(spark, c_single).collect()
+    assert AGG.geohex_grid_agg(spark, c_empty).collect() == []
+    [r] = AGG.geohex_grid_agg(spark, c_single).collect()
     assert r.n == 1 and "," in r.cell
 
     ev_schema = ("event_id long, ts timestamp, user_id long, "
@@ -381,7 +381,7 @@ def test_hex_rounding_picks_nearest_center_hypothesis():
     a brute-force scan of the 5x5 neighborhood of candidate cells."""
     from hypothesis import given, settings, strategies as st
 
-    from unified_vector_database_spark.operators.esagg6 import (
+    from unified_vector_database_spark.operators.aggregations import (
         HEX_SIZE, _SQRT3_3,
     )
 
@@ -552,7 +552,7 @@ def test_sliding_windows_double_membership(spark, sf_dir):
 
 
 def test_top_occurrences_matches_python_model(spark, sf_dir):
-    from unified_vector_database_spark.operators.esagg6 import (
+    from unified_vector_database_spark.operators.aggregations import (
         TOPOCC_K, top_occurrences_agg,
     )
 

@@ -71,7 +71,7 @@ def test_shard_curve_single_corpus_pass(spark, sf_dir):
 # ------------------------------------------------- max_bucket_agg
 
 def test_max_bucket_matches_python_model(spark, sf_dir, duck):
-    from unified_vector_database_spark.operators.esagg7 import (
+    from unified_vector_database_spark.operators.aggregations import (
         max_bucket_agg,
     )
 
@@ -99,7 +99,7 @@ def test_max_bucket_matches_python_model(spark, sf_dir, duck):
 
 def test_field_caps_matches_python_model(spark, sf_dir):
     from unified_vector_database_spark import tables
-    from unified_vector_database_spark.operators.esagg7 import (
+    from unified_vector_database_spark.operators.aggregations import (
         FC_HOT, FC_NOTE_TYPE, field_caps_census,
     )
 
@@ -122,7 +122,7 @@ def test_field_caps_matches_python_model(spark, sf_dir):
 
 
 def test_field_caps_single_scan(spark, sf_dir):
-    from unified_vector_database_spark.operators.esagg7 import (
+    from unified_vector_database_spark.operators.aggregations import (
         field_caps_census,
     )
 
@@ -134,7 +134,7 @@ def test_field_caps_single_scan(spark, sf_dir):
 
 def test_json_contains_matches_python_model(spark, sf_dir):
     from unified_vector_database_spark import tables
-    from unified_vector_database_spark.operators.esagg7 import (
+    from unified_vector_database_spark.operators.aggregations import (
         JC_ALL, JC_ANY, JC_HEAD, JC_ONE, JC_W_MIN, json_contains_filter,
     )
 
@@ -158,9 +158,9 @@ def test_json_contains_payload_is_real_json(spark, sf_dir):
     (to_json → get_json_object/from_json), not a direct array ref."""
     import inspect
 
-    from unified_vector_database_spark.operators import esagg7
+    from unified_vector_database_spark.operators import aggregations as AGG
 
-    src = inspect.getsource(esagg7.json_contains_filter)
+    src = inspect.getsource(AGG.json_contains_filter)
     assert "to_json" in src and "get_json_object" in src
 
 
@@ -333,7 +333,7 @@ def test_r9_ops_survive_degenerate_corpora(spark, tmp_path):
 
     from pyspark.sql import Row
 
-    from unified_vector_database_spark.operators import esagg7 as E7
+    from unified_vector_database_spark.operators import aggregations as AGG
     from unified_vector_database_spark.operators.evaluation import (
         shard_candidates_curve,
     )
@@ -359,7 +359,7 @@ def test_r9_ops_survive_degenerate_corpora(spark, tmp_path):
                   [Row(doc_id=0, text="solo", lang="en", source="s",
                        n_chars=4)])
     for sf in (d_empty, d_single):
-        E7.json_contains_filter(spark, sf).collect()
+        AGG.json_contains_filter(spark, sf).collect()
         terms_enum(spark, sf).collect()
     [r] = terms_enum(spark, d_single).collect()
     assert (r.page, r.pos, r.term) == (1, 1, "solo")
@@ -372,7 +372,7 @@ def test_r9_ops_survive_degenerate_corpora(spark, tmp_path):
                   [Row(event_id=0, ts=t0, user_id=1, event_type="click",
                        value=5.0, props='{"k": 1}')])
     for sf in (e_empty, e_single):
-        E7.field_caps_census(spark, sf).collect()
+        AGG.field_caps_census(spark, sf).collect()
         ttl_expiry_scan(spark, sf).collect()
     [r] = ttl_expiry_scan(spark, e_single).collect()
     assert (r.n_live, r.n_expired) == (1, 0)  # now == its own ts: live
@@ -394,7 +394,7 @@ def test_r9_ops_survive_degenerate_corpora(spark, tmp_path):
                        o_orderdate=datetime.datetime(2024, 3, 1),
                        o_orderpriority="1-URGENT")])
     got = {(r.metric, r.keys, r.value)
-           for r in E7.max_bucket_agg(spark, o_single).collect()}
+           for r in AGG.max_bucket_agg(spark, o_single).collect()}
     # one bucket: max and min coincide on the same key
     assert got == {("max_bucket", "2024-03", 10.0),
                    ("min_bucket", "2024-03", 10.0)}

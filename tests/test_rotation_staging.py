@@ -50,14 +50,15 @@ def test_first_slots_drain_the_backlog():
 
 
 def test_backlog_order_is_stable_queue_order():
-    """Never-green entries appear in _PRIORITY queue order, so the
-    rotation is deterministic round-over-round."""
+    """Never-green entries, and the green entries of each last-green
+    round, appear in registry order, so the rotation is deterministic
+    round-over-round."""
     names = list(entrymod.queries())
-    green = _green_union()
-    backlog = [n for n in names if n not in green]
-    prio_rank = {n: i for i, n in enumerate(entrymod._PRIORITY)}
-    ranked = [n for n in backlog if n in prio_rank]
-    assert ranked == sorted(ranked, key=lambda n: prio_rank[n])
+    reg = {n: i for i, n in enumerate(entrymod.registry.QUERIES)}
+    last = _green_last_round()
+    for rnd in {None, *last.values()}:
+        group = [n for n in names if last.get(n) == rnd]
+        assert group == sorted(group, key=reg.__getitem__), rnd
 
 
 def _green_last_round() -> dict[str, int]:

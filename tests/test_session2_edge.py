@@ -32,7 +32,7 @@ _ORDERS = ("o_orderkey long, o_custkey long, o_orderstatus string, "
 
 
 def test_esql2_doc_ops_survive_degenerate_corpora(spark, tmp_path):
-    from unified_vector_database_spark.operators import esql2 as E2
+    from unified_vector_database_spark.operators import esql as ESQL
     from unified_vector_database_spark.operators import lm as LM
     from unified_vector_database_spark.operators import quality as Q
 
@@ -43,7 +43,7 @@ def test_esql2_doc_ops_survive_degenerate_corpora(spark, tmp_path):
     ws = _mk(spark, tmp_path, "d_ws", "documents", _DOCS,
              [Row(doc_id=0, text="   ", lang="en",
                   source="s", n_chars=3)])
-    ops = [E2.esql_mv_funcs, E2.esql_rerank, LM.ngram_entropy,
+    ops = [ESQL.esql_mv_funcs, ESQL.esql_rerank, LM.ngram_entropy,
            Q.quality_pr_curve]
     for sf in (empty, single, ws):
         for op in ops:
@@ -60,7 +60,7 @@ def test_esql2_doc_ops_survive_degenerate_corpora(spark, tmp_path):
 
 def test_esql2_order_event_ops_survive_degenerate_corpora(
         spark, tmp_path):
-    from unified_vector_database_spark.operators import esql2 as E2
+    from unified_vector_database_spark.operators import esql as ESQL
 
     e_empty = _mk(spark, tmp_path, "e_empty", "events", _EVENTS, [])
     o_empty = _mk(spark, tmp_path, "o_empty", "orders", _ORDERS, [])
@@ -70,12 +70,12 @@ def test_esql2_order_event_ops_survive_degenerate_corpora(
                      o_orderpriority="1-URGENT")])
     # CHANGE_POINT over an empty/1-bucket series: the n >= 2 guard
     # emits ZERO rows rather than dividing by an empty split
-    assert E2.esql_change_point(spark, e_empty).collect() == []
+    assert ESQL.esql_change_point(spark, e_empty).collect() == []
     for sf in (o_empty, o_one):
-        E2.esql_bucket(spark, sf).collect()
-        E2.esql_sample(spark, sf).collect()
-        E2.esql_fork(spark, sf).collect()
-    forked = E2.esql_fork(spark, o_one).collect()
+        ESQL.esql_bucket(spark, sf).collect()
+        ESQL.esql_sample(spark, sf).collect()
+        ESQL.esql_fork(spark, sf).collect()
+    forked = ESQL.esql_fork(spark, o_one).collect()
     # one order: fork1 page has it, fork2 census counts it
     assert {r._fork for r in forked} == {"fork1", "fork2"}
 
@@ -124,7 +124,7 @@ def test_bool_query_clause_semantics(spark, sf_dir):
     """Every hit satisfies all four clause kinds; scores agree with
     the component BM25 on the shared terms; filter clause contributes
     no score (an en/de pair with identical text scores identically)."""
-    from unified_vector_database_spark.operators.search_extras4 import (
+    from unified_vector_database_spark.operators.query_dsl import (
         BOOL_FILTER_LANG, BOOL_MSM, BOOL_MUST, BOOL_NOT, BOOL_SHOULD,
         bool_query_search,
     )

@@ -16,6 +16,10 @@ def tokens(col: Column | str) -> Column:
     return F.filter(F.split(F.trim(c), " "), lambda t: t != "")
 
 
+# The DuckDB twin of tokens(col("text")), spliced into oracle SQL.
+TOK_SQL = "list_filter(string_split(trim(text), ' '), t -> t <> '')"
+
+
 def exploded_tokens(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     """(id, pos, token) long form."""
     return df.select(

@@ -22,125 +22,6 @@ from .. import tables
 from ..registry import register
 
 
-@register("q1_pricing", oracle="""
-SELECT l_returnflag, l_linestatus,
-       round(sum(l_quantity), 2)                             AS sum_qty,
-       CAST(sum(CAST(l_extendedprice AS DECIMAL(18,2)))
-            AS DOUBLE)                                       AS sum_base_price,
-       CAST(sum(CAST(l_extendedprice * (1 - l_discount)
-                     AS DECIMAL(18,4))) AS DOUBLE)           AS sum_disc_price,
-       CAST(sum(CAST(l_extendedprice * (1 - l_discount) * (1 + l_tax)
-                     AS DECIMAL(18,6))) AS DOUBLE)           AS sum_charge,
-       round(avg(l_quantity), 4)                             AS avg_qty,
-       round(CAST(sum(CAST(l_extendedprice AS DECIMAL(18,2)))
-                  AS DOUBLE) / count(*), 4)                  AS avg_price,
-       round(CAST(sum(CAST(l_discount AS DECIMAL(18,2)))
-                  AS DOUBLE) / count(*), 6)                  AS avg_disc,
-       count(*)                                              AS count_order
-FROM lineitem
-WHERE l_shipdate <= TIMESTAMP '1998-12-01'
-GROUP BY l_returnflag, l_linestatus
-ORDER BY l_returnflag, l_linestatus
-""")
-def q1_pricing(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q1 class: one scan, partial agg, 4-group output. The
-    filter pushes to parquet; no join, one tiny shuffle."""
-    li = tables.load(spark, sf_dir, "lineitem")
-    disc = F.col("l_extendedprice") * (1 - F.col("l_discount"))
-    return (li.where(F.col("l_shipdate") <= F.lit("1998-12-01").cast("timestamp"))
-            .groupBy("l_returnflag", "l_linestatus")
-            .agg(F.round(F.sum("l_quantity"), 2).alias("sum_qty"),
-                 F.sum(F.col("l_extendedprice").cast("decimal(18,2)"))
-                  .cast("double").alias("sum_base_price"),
-                 F.sum(disc.cast("decimal(18,4)")).cast("double")
-                  .alias("sum_disc_price"),
-                 F.sum((disc * (1 + F.col("l_tax"))).cast("decimal(18,6)"))
-                  .cast("double").alias("sum_charge"),
-                 F.round(F.avg("l_quantity"), 4).alias("avg_qty"),
-                 F.round(F.sum(F.col("l_extendedprice").cast("decimal(18,2)"))
-                          .cast("double") / F.count("*"), 4).alias("avg_price"),
-                 F.round(F.sum(F.col("l_discount").cast("decimal(18,2)"))
-                          .cast("double") / F.count("*"), 6).alias("avg_disc"),
-                 F.count("*").alias("count_order"))
-            .orderBy("l_returnflag", "l_linestatus"))
-
-
-@register("q3_topurgent", oracle="""
-SELECT o_orderkey, CAST(revenue AS DOUBLE) AS revenue, order_date
-FROM (
-  SELECT o_orderkey,
-         sum(CAST(l_extendedprice * (1 - l_discount) AS DECIMAL(18,4))) AS revenue,
-         CAST(o_orderdate AS DATE) AS order_date
-  FROM customer
-  JOIN orders   ON c_custkey = o_custkey
-  JOIN lineitem ON l_orderkey = o_orderkey
-  WHERE c_mktsegment = 'BUILDING'
-    AND o_orderdate < TIMESTAMP '1998-01-01'
-    AND l_shipdate  > TIMESTAMP '1998-01-01'
-  GROUP BY o_orderkey, o_orderdate
-  ORDER BY revenue DESC, o_orderkey
-  LIMIT 10
-)
-""")
-def q3_topurgent(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q3 class: customer (dim, broadcast) x orders x lineitem
-    (fact join on orderkey), group + top-n. Ordering is on the ROUNDED
-    revenue so both engines pick identical top rows."""
-    cust = tables.load(spark, sf_dir, "customer").where(
-        F.col("c_mktsegment") == "BUILDING")
-    orders = tables.load(spark, sf_dir, "orders").where(
-        F.col("o_orderdate") < F.lit("1998-01-01").cast("timestamp"))
-    li = tables.load(spark, sf_dir, "lineitem").where(
-        F.col("l_shipdate") > F.lit("1998-01-01").cast("timestamp"))
-    return (li.join(orders, li.l_orderkey == orders.o_orderkey)
-              .join(F.broadcast(cust), orders.o_custkey == cust.c_custkey)
-              .groupBy("o_orderkey", "o_orderdate")
-              .agg(F.sum((F.col("l_extendedprice")
-                          * (1 - F.col("l_discount"))).cast("decimal(18,4)"))
-                   .alias("revenue"))
-              .select("o_orderkey", "revenue",
-                      F.to_date("o_orderdate").alias("order_date"))
-              .orderBy(F.desc("revenue"), "o_orderkey")
-              .limit(10)
-              .withColumn("revenue", F.col("revenue").cast("double")))
-
-
-@register("q5_region_volume", oracle="""
-SELECT n_name,
-       CAST(sum(CAST(l_extendedprice * (1 - l_discount) AS DECIMAL(18,4)))
-            AS DOUBLE) AS revenue
-FROM region
-JOIN nation   ON n_regionkey = r_regionkey
-JOIN customer ON c_nationkey = n_nationkey
-JOIN orders   ON o_custkey = c_custkey
-JOIN lineitem ON l_orderkey = o_orderkey
-WHERE r_name = 'ASIA'
-  AND o_orderdate >= TIMESTAMP '1996-01-01'
-  AND o_orderdate <  TIMESTAMP '1998-01-01'
-GROUP BY n_name
-ORDER BY revenue DESC, n_name
-""")
-def q5_region_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q5 class star join: region->nation->customer broadcast
-    down onto the orders/lineitem fact chain."""
-    region = tables.load(spark, sf_dir, "region").where(F.col("r_name") == "ASIA")
-    nation = tables.load(spark, sf_dir, "nation")
-    cust = tables.load(spark, sf_dir, "customer")
-    orders = tables.load(spark, sf_dir, "orders").where(
-        (F.col("o_orderdate") >= F.lit("1996-01-01").cast("timestamp"))
-        & (F.col("o_orderdate") < F.lit("1998-01-01").cast("timestamp")))
-    li = tables.load(spark, sf_dir, "lineitem")
-    dims = (cust.join(F.broadcast(nation), cust.c_nationkey == nation.n_nationkey)
-                .join(F.broadcast(region), nation.n_regionkey == region.r_regionkey))
-    return (li.join(orders, li.l_orderkey == orders.o_orderkey)
-              .join(F.broadcast(dims), orders.o_custkey == dims.c_custkey)
-              .groupBy("n_name")
-              .agg(F.sum((F.col("l_extendedprice")
-                          * (1 - F.col("l_discount"))).cast("decimal(18,4)"))
-                   .cast("double").alias("revenue"))
-              .orderBy(F.desc("revenue"), "n_name"))
-
-
 @register("top_orders_per_segment", oracle="""
 WITH r AS (
   SELECT c_mktsegment, o_orderkey, o_totalprice,
@@ -220,30 +101,6 @@ def events_percentiles(spark: SparkSession, sf_dir: str) -> DataFrame:
                    F.round(F.expr("percentile(value, 0.99)"), 6).alias("p99"),
                    F.countDistinct("user_id").alias("n_users"))
               .orderBy("event_type"))
-
-
-@register("q6_forecast_revenue", oracle="""
-SELECT CAST(sum(CAST(l_extendedprice * l_discount AS DECIMAL(18,4)))
-            AS DOUBLE) AS revenue,
-       count(*) AS n_items
-FROM lineitem
-WHERE l_shipdate >= TIMESTAMP '1996-01-01'
-  AND l_shipdate <  TIMESTAMP '1997-01-01'
-  AND l_discount BETWEEN 0.03 AND 0.07
-  AND l_quantity < 24
-""")
-def q6_forecast_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q6 class: pure filtered aggregate — every predicate
-    pushes to the parquet scan, zero joins, one partial agg."""
-    li = tables.load(spark, sf_dir, "lineitem")
-    return (li.where((F.col("l_shipdate") >= F.lit("1996-01-01").cast("timestamp"))
-                     & (F.col("l_shipdate") < F.lit("1997-01-01").cast("timestamp"))
-                     & F.col("l_discount").between(0.03, 0.07)
-                     & (F.col("l_quantity") < 24))
-              .agg(F.sum((F.col("l_extendedprice") * F.col("l_discount"))
-                          .cast("decimal(18,4)")).cast("double")
-                    .alias("revenue"),
-                   F.count("*").alias("n_items")))
 
 
 @register("events_props_json", oracle="""
@@ -374,30 +231,6 @@ def events_sessionized(spark: SparkSession, sf_dir: str) -> DataFrame:
               .orderBy("user_id").limit(100))
 
 
-@register("q4_order_priority", oracle="""
-SELECT o_orderpriority, count(*) AS order_count
-FROM orders
-WHERE o_orderdate >= TIMESTAMP '1996-01-01'
-  AND o_orderdate <  TIMESTAMP '1997-01-01'
-  AND EXISTS (SELECT 1 FROM lineitem
-              WHERE l_orderkey = o_orderkey AND l_shipdate > o_orderdate)
-GROUP BY o_orderpriority ORDER BY o_orderpriority
-""")
-def q4_order_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q4 class: EXISTS -> left_semi join (probe side never
-    duplicates, build side deduped by the join itself)."""
-    orders = tables.load(spark, sf_dir, "orders").where(
-        (F.col("o_orderdate") >= F.lit("1996-01-01").cast("timestamp"))
-        & (F.col("o_orderdate") < F.lit("1997-01-01").cast("timestamp")))
-    li = tables.load(spark, sf_dir, "lineitem")
-    late = orders.join(
-        li, (li.l_orderkey == orders.o_orderkey)
-        & (li.l_shipdate > orders.o_orderdate), "left_semi")
-    return (late.groupBy("o_orderpriority")
-                .agg(F.count("*").alias("order_count"))
-                .orderBy("o_orderpriority"))
-
-
 @register("customers_no_orders", oracle="""
 SELECT c_custkey, c_name FROM customer
 WHERE NOT EXISTS (SELECT 1 FROM orders
@@ -414,149 +247,6 @@ def customers_no_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("o_orderstatus") == "P")
     return (cust.join(orders, cust.c_custkey == orders.o_custkey, "left_anti")
                 .select("c_custkey", "c_name").orderBy("c_custkey"))
-
-
-@register("q10_returned_revenue", oracle="""
-SELECT c_custkey, c_name, n_name, CAST(revenue AS DOUBLE) AS revenue
-FROM (
-  SELECT c_custkey, c_name, n_name,
-         sum(CAST(l_extendedprice * (1 - l_discount) AS DECIMAL(18,4))) AS revenue
-  FROM customer
-  JOIN orders   ON c_custkey = o_custkey
-  JOIN lineitem ON l_orderkey = o_orderkey
-  JOIN nation   ON c_nationkey = n_nationkey
-  WHERE l_returnflag = 'R'
-    AND o_orderdate >= TIMESTAMP '1996-01-01'
-    AND o_orderdate <  TIMESTAMP '1997-01-01'
-  GROUP BY c_custkey, c_name, n_name
-  ORDER BY revenue DESC, c_custkey
-  LIMIT 20
-)
-""")
-def q10_returned_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q10 class (returned-item revenue per customer): the
-    orders date filter pushes to the parquet scan; nation broadcasts
-    (25 rows); customer<->orders<->lineitem shuffle on their keys with
-    partial aggs before the final top-20 TakeOrdered."""
-    cust = tables.load(spark, sf_dir, "customer")
-    nation = tables.load(spark, sf_dir, "nation")
-    orders = tables.load(spark, sf_dir, "orders").where(
-        (F.col("o_orderdate") >= F.lit("1996-01-01").cast("timestamp"))
-        & (F.col("o_orderdate") < F.lit("1997-01-01").cast("timestamp")))
-    li = tables.load(spark, sf_dir, "lineitem").where(
-        F.col("l_returnflag") == "R")
-    rev = F.col("l_extendedprice") * (1 - F.col("l_discount"))
-    return (cust.join(orders, cust.c_custkey == orders.o_custkey)
-                .join(li, F.col("l_orderkey") == F.col("o_orderkey"))
-                .join(F.broadcast(nation),
-                      F.col("c_nationkey") == F.col("n_nationkey"))
-                .groupBy("c_custkey", "c_name", "n_name")
-                .agg(F.sum(rev.cast("decimal(18,4)")).alias("revenue"))
-                .orderBy(F.desc("revenue"), "c_custkey")
-                .limit(20)
-                .withColumn("revenue", F.col("revenue").cast("double")))
-
-
-@register("q14_promo_share", oracle="""
-SELECT round(100.0 * CAST(sum(CAST(CASE WHEN p_type = 'PROMO'
-                                    THEN l_extendedprice * (1 - l_discount)
-                                    ELSE 0.0 END AS DECIMAL(18,4))) AS DOUBLE)
-             / CAST(sum(CAST(l_extendedprice * (1 - l_discount)
-                             AS DECIMAL(18,4))) AS DOUBLE), 4) AS promo_share,
-       CAST(sum(CAST(l_extendedprice * (1 - l_discount) AS DECIMAL(18,4)))
-            AS DOUBLE) AS total_revenue
-FROM lineitem JOIN part ON l_partkey = p_partkey
-WHERE l_shipdate >= TIMESTAMP '1996-01-01'
-  AND l_shipdate <  TIMESTAMP '1996-04-01'
-""")
-def q14_promo_share(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q14 class (promo revenue share): part is the dimension ->
-    broadcast hash join, so the lineitem side never shuffles; one
-    scalar aggregate row out."""
-    part = tables.load(spark, sf_dir, "part")
-    li = tables.load(spark, sf_dir, "lineitem").where(
-        (F.col("l_shipdate") >= F.lit("1996-01-01").cast("timestamp"))
-        & (F.col("l_shipdate") < F.lit("1996-04-01").cast("timestamp")))
-    rev = F.col("l_extendedprice") * (1 - F.col("l_discount"))
-    promo = F.when(F.col("p_type") == "PROMO", rev).otherwise(F.lit(0.0))
-    return (li.join(F.broadcast(part),
-                    F.col("l_partkey") == F.col("p_partkey"))
-              .agg(F.round(100.0 * F.sum(promo.cast("decimal(18,4)"))
-                                    .cast("double")
-                           / F.sum(rev.cast("decimal(18,4)")).cast("double"), 4)
-                     .alias("promo_share"),
-                   F.sum(rev.cast("decimal(18,4)")).cast("double")
-                    .alias("total_revenue")))
-
-
-@register("q18_large_orders", oracle="""
-SELECT c_custkey, o_orderkey, CAST(o_orderdate AS DATE) AS order_date,
-       round(o_totalprice, 2)   AS total_price,
-       round(sum(l_quantity), 2) AS sum_qty
-FROM customer
-JOIN orders   ON c_custkey = o_custkey
-JOIN lineitem ON o_orderkey = l_orderkey
-GROUP BY c_custkey, o_orderkey, o_orderdate, o_totalprice
-HAVING sum(l_quantity) > 300
-ORDER BY o_totalprice DESC, o_orderkey
-LIMIT 20
-""")
-def q18_large_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q18 class (large-volume orders): the quantity rollup
-    groups on the ORDER key, so the agg reuses the join's shuffle
-    partitioning (no extra exchange); HAVING prunes before the
-    top-20. Quantities are integral doubles -> the >300 cut is exact
-    in both engines."""
-    cust = tables.load(spark, sf_dir, "customer")
-    orders = tables.load(spark, sf_dir, "orders")
-    li = tables.load(spark, sf_dir, "lineitem")
-    return (cust.join(orders, cust.c_custkey == orders.o_custkey)
-                .join(li, F.col("o_orderkey") == F.col("l_orderkey"))
-                .groupBy("c_custkey", "o_orderkey", "o_orderdate",
-                         "o_totalprice")
-                .agg(F.sum("l_quantity").alias("_sq"))
-                .where(F.col("_sq") > 300)
-                .select("c_custkey", "o_orderkey",
-                        F.col("o_orderdate").cast("date").alias("order_date"),
-                        F.round("o_totalprice", 2).alias("total_price"),
-                        F.round("_sq", 2).alias("sum_qty"))
-                .orderBy(F.desc("o_totalprice"), "o_orderkey")
-                .limit(20))
-
-
-@register("q19_bracket_filters", oracle="""
-SELECT CAST(sum(CAST(l_extendedprice * (1 - l_discount) AS DECIMAL(18,4)))
-            AS DOUBLE) AS revenue,
-       count(*) AS n_lines
-FROM lineitem JOIN part ON p_partkey = l_partkey
-WHERE (p_brand = 'Brand#11' AND p_size BETWEEN 1 AND 15
-       AND l_quantity BETWEEN 1 AND 20)
-   OR (p_brand = 'Brand#22' AND p_size BETWEEN 10 AND 30
-       AND l_quantity BETWEEN 10 AND 35)
-   OR (p_brand = 'Brand#15' AND p_size BETWEEN 20 AND 50
-       AND l_quantity BETWEEN 20 AND 50)
-""")
-def q19_bracket_filters(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q19 class (disjunctive bracket predicates across the
-    join): per-side conjuncts (l_quantity ranges on lineitem, brand/
-    size on part) are derivable and push below the join; the residual
-    OR evaluates inside the join stage."""
-    part = tables.load(spark, sf_dir, "part")
-    li = tables.load(spark, sf_dir, "lineitem")
-    q = F.col("l_quantity")
-    br = (((F.col("p_brand") == "Brand#11") & F.col("p_size").between(1, 15)
-           & q.between(1, 20))
-          | ((F.col("p_brand") == "Brand#22") & F.col("p_size").between(10, 30)
-             & q.between(10, 35))
-          | ((F.col("p_brand") == "Brand#15") & F.col("p_size").between(20, 50)
-             & q.between(20, 50)))
-    rev = F.col("l_extendedprice") * (1 - F.col("l_discount"))
-    return (li.join(F.broadcast(part),
-                    F.col("l_partkey") == F.col("p_partkey"))
-              .where(br)
-              .agg(F.sum(rev.cast("decimal(18,4)")).cast("double")
-                    .alias("revenue"),
-                   F.count("*").alias("n_lines")))
 
 
 @register("embedding_stats", oracle="""

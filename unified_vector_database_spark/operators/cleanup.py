@@ -16,9 +16,8 @@ from pyspark.sql import DataFrame, SparkSession, Window as W, functions as F
 from .. import tables
 from ..registry import register
 from ..functions import distance as D
-from ..functions.text import ngram_array, tokens
+from ..functions.text import TOK_SQL, ngram_array, tokens
 
-_TOK = "list_filter(string_split(trim(text), ' '), t -> t <> '')"
 
 STOPWORDS = ("the", "a")
 MIN_TOKEN_LEN = 2
@@ -44,8 +43,8 @@ def clean_normalize_t(docs: DataFrame) -> DataFrame:
 
 @register("clean_normalize", oracle=f"""
 WITH t AS (
-  SELECT doc_id, {_TOK} AS tok,
-         list_filter({_TOK},
+  SELECT doc_id, {TOK_SQL} AS tok,
+         list_filter({TOK_SQL},
                      t -> NOT t IN {STOPWORDS}
                           AND length(t) >= {MIN_TOKEN_LEN}) AS kept
   FROM documents)
@@ -92,7 +91,7 @@ def repetition_score_t(docs: DataFrame) -> DataFrame:
 
 @register("repetition_score", oracle=f"""
 WITH t AS (
-  SELECT doc_id, {_TOK} AS tok FROM documents),
+  SELECT doc_id, {TOK_SQL} AS tok FROM documents),
 b AS (
   SELECT doc_id, tok,
          list_transform(range(1, greatest(len(tok), 1)),
@@ -342,7 +341,7 @@ def decontaminate_t(docs: DataFrame, bench: DataFrame,
 
 @register("decontaminate", oracle=f"""
 WITH tok AS (
-  SELECT doc_id, source, {_TOK} AS tok FROM documents),
+  SELECT doc_id, source, {TOK_SQL} AS tok FROM documents),
 grams AS (
   SELECT doc_id, source,
          list_distinct(list_transform(
@@ -444,13 +443,13 @@ TBT_BUDGET_FRAC = 4   # keep ~ total_tokens / 4 (exact integer division)
 
 @register("token_budget_trim", oracle=f"""
 WITH d AS (
-  SELECT doc_id, len({_TOK}) AS nt,
-         CAST(floor((0.4 * least(len({_TOK}) / 100.0, 1.0)
-           + 0.3 * (1.0 - len(list_filter({_TOK}, t -> t IN ('the', 'a')))
-                          / len({_TOK}))
-           + 0.3 * least((list_sum(list_transform({_TOK}, t -> length(t)))
-                          / len({_TOK})) / 8.0, 1.0)) * 100) AS INT) AS b
-  FROM documents WHERE len({_TOK}) > 0),
+  SELECT doc_id, len({TOK_SQL}) AS nt,
+         CAST(floor((0.4 * least(len({TOK_SQL}) / 100.0, 1.0)
+           + 0.3 * (1.0 - len(list_filter({TOK_SQL}, t -> t IN ('the', 'a')))
+                          / len({TOK_SQL}))
+           + 0.3 * least((list_sum(list_transform({TOK_SQL}, t -> length(t)))
+                          / len({TOK_SQL})) / 8.0, 1.0)) * 100) AS INT) AS b
+  FROM documents WHERE len({TOK_SQL}) > 0),
 pb AS (SELECT b, sum(nt) AS tk FROM d GROUP BY b),
 tot AS (SELECT CAST(sum(tk) AS BIGINT) // {TBT_BUDGET_FRAC} AS budget
         FROM pb),
@@ -490,7 +489,7 @@ def token_budget_trim(spark: SparkSession, sf_dir: str) -> DataFrame:
     map to ~100 quality buckets map-side; the only corpus shuffle is
     the bucket rollup (101 partial-agg rows). The running total,
     threshold bucket and boundary fraction come from ONE collected
-    bucket array folded on a 1-row frame (the stats_more
+    bucket array folded on a 1-row frame (the stats.py
     bucket-array-fold shape — no unpartitioned window anywhere),
     broadcast back over the doc frame for the map-side tier verdict.
     Budget uses exact integer division and integer token sums, so
@@ -741,10 +740,6 @@ def decontaminate_embeddings(train: DataFrame, bench: DataFrame,
         eval_rows = bench.count()
     limit = EMB_DECON_BCAST_LIMIT if broadcast_limit is None \
         else broadcast_limit
-    import os as _os
-    env = _os.environ.get("UVDB_EMB_DECON_BCAST_LIMIT")
-    if env is not None and broadcast_limit is None:
-        limit = int(env)
 
     sim = D.safe_div(D.dot("vec", "bvec"), F.col("nrm") * F.col("bnrm"))
     if eval_rows <= limit:

@@ -19,7 +19,7 @@ from pyspark.sql import DataFrame, SparkSession, Window as W, functions as F
 from .. import tables
 from ..constants import LSH_ROWS, MINHASH_A, MINHASH_B, MINHASH_P
 from ..functions.hashing import md5_int32, minhash_perm
-from ..functions.text import word_shingles
+from ..functions.text import TOK_SQL, word_shingles
 from ..registry import register
 
 _K = len(MINHASH_A)
@@ -29,8 +29,8 @@ _SHINGLE_N = 3
 _SIG_CTE = f"""
 tok AS (
   SELECT doc_id,
-         unnest(list_filter(string_split(trim(text), ' '), t -> t <> '')) AS token,
-         generate_subscripts(list_filter(string_split(trim(text), ' '), t -> t <> ''), 1) AS pos
+         unnest({TOK_SQL}) AS token,
+         generate_subscripts({TOK_SQL}, 1) AS pos
   FROM documents),
 sh AS (
   SELECT doc_id, concat_ws(' ', token, t1, t2) AS shingle
@@ -685,7 +685,7 @@ def semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register("ngram_novelty", oracle=f"""
 WITH tok AS (
   SELECT doc_id,
-         list_filter(string_split(trim(text), ' '), t -> t <> '') AS t
+         {TOK_SQL} AS t
   FROM documents),
 grams AS (
   SELECT doc_id, unnest(list_distinct(list_transform(

@@ -83,6 +83,7 @@ from pyspark.sql import Column, DataFrame, SparkSession, functions as F
 from .. import tables
 from ..registry import register
 
+
 # ------------------------------------------------------- tokenizer
 
 _TOKEN_RE = re.compile(r"""
@@ -328,7 +329,7 @@ class _ExprParser:
         if re.fullmatch(r"\d+", tok):
             # ES|QL integer literals are 64-bit (long); a bare
             # F.lit(int) yields IntegerType and overflows under ANSI
-            # mode once products exceed 2^31 (VERDICT r6 #2).
+            # mode once products exceed 2^31.
             return F.lit(int(tok)).cast("long")
         # identifier or function call
         if tok.upper() == "SPLIT" and self.peek() == "(":
@@ -740,7 +741,7 @@ def _apply_stage(spark: SparkSession, sf_dir: str, df: DataFrame,
         # p-value; the mean-gap magnitude is this engine's
         # deterministic analog — documented deviation). Keeps only
         # (key, value) + annotations.
-        from .stats_more import step_change_best
+        from .stats import step_change_best
         m = re.fullmatch(r"([\w.]+)\s+ON\s+([\w.]+)", rest, re.I)
         if not m:
             raise ValueError(f"ES|QL: bad CHANGE_POINT {rest!r}")
@@ -961,7 +962,7 @@ def esql_grok(spark: SparkSession, sf_dir: str) -> DataFrame:
     return esql(spark, sf_dir, ESQL_GROK)
 
 
-ESQL_MV = """
+ESQL_MV_EXPAND = """
 FROM documents
 | EVAL toks = SPLIT(TRIM(text), " ")
 | MV_EXPAND toks
@@ -991,7 +992,7 @@ def esql_mv_expand(spark: SparkSession, sf_dir: str) -> DataFrame:
     partial agg is the same single-shuffle shape as every token
     census in the repo — the translator emits it, it doesn't
     reimplement it."""
-    return esql(spark, sf_dir, ESQL_MV)
+    return esql(spark, sf_dir, ESQL_MV_EXPAND)
 
 
 ESQL_LOOKUP = """
@@ -1074,3 +1075,459 @@ def esql_dissect(spark: SparkSession, sf_dir: str) -> DataFrame:
     columns (the GROK precedent). KEEP's projection reaches the
     scan as column pruning like any select."""
     return esql(spark, sf_dir, ESQL_DISSECT)
+
+
+# ======================================================================
+# Queries over the wider translator surface: window
+# aggregates (INLINESTATS), deterministic row sampling (SAMPLE),
+# computed grouping keys (`BY b = BUCKET(...)`), the string-function
+# family (TO_UPPER/TO_LOWER/SUBSTRING/LEFT/RIGHT/STARTS_WITH/ENDS_WITH/
+# REPLACE), pattern predicates (LIKE with */? wildcards, anchored
+# RLIKE, IS [NOT] NULL, NOT), multivalue reducers (MV_COUNT/MV_MIN/
+# MV_MAX/MV_SUM/MV_AVG/MV_DEDUPE), and the statistics aggregates
+# MEDIAN / PERCENTILE / STD_DEV / WEIGHTED_AVG.
+#
+# Every query here goes END-TO-END through the translator
+# (`esql.esql()`); the oracle is hand-written against the source tables
+# so a translator bug cannot cancel out (the contract above).
+#
+# Scale shape: the translator only emits declarative ops — the new
+# commands keep that promise. INLINESTATS is one partial-agg shuffle to
+# a |groups|-row frame broadcast back onto unmoved rows (ES computes
+# the same thing node-locally and merges; a row shuffle would be
+# strictly worse). SAMPLE is a map-side md5-bucket admit (deterministic
+# by design — the repo-wide reproducible-sampling contract, vs ES's
+# per-query randomness; documented deviation). BUCKET collapses into
+# the grouping projection; MEDIAN/PERCENTILE use Spark's exact
+# `percentile` (linear interpolation, the same definition as DuckDB's
+# `quantile_cont` — ES's TDigest approximation would not be
+# cross-engine hash-checkable); STD_DEV/WEIGHTED_AVG fold DECIMAL-exact
+# power sums (the extended_stats contract) so results are
+# partition-order-free.
+# ======================================================================
+
+
+# ------------------------------------------------------- INLINESTATS
+
+ESQL_INLINESTATS = """
+FROM lineitem
+| INLINESTATS avg_price = AVG(l_extendedprice) BY l_returnflag
+| WHERE l_extendedprice > avg_price * 1.5
+| STATS n = COUNT(*), hi = MAX(l_extendedprice),
+        avg_hit = AVG(l_extendedprice) BY l_returnflag
+| SORT l_returnflag
+"""
+
+
+@register("esql_inlinestats", oracle="""
+WITH a AS (
+  SELECT l_returnflag,
+         CAST(sum(CAST(l_extendedprice AS DECIMAL(28,6))) AS DOUBLE)
+           / count(l_extendedprice) AS avg_price
+  FROM lineitem GROUP BY 1)
+SELECT l.l_returnflag, count(*) AS n, max(l.l_extendedprice) AS hi,
+       round(CAST(sum(CAST(l.l_extendedprice AS DECIMAL(28,6)))
+                  AS DOUBLE) / count(l.l_extendedprice), 6) AS avg_hit
+FROM lineitem l JOIN a ON a.l_returnflag = l.l_returnflag
+WHERE l.l_extendedprice > a.avg_price * 1.5
+GROUP BY 1 ORDER BY 1
+""")
+def esql_inlinestats(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """ES|QL `INLINESTATS` — group aggregates joined back onto the
+    rows (the "compare each row to its own group's mean" shape, here
+    selecting items priced >1.5x their returnflag's average). The
+    translator emits one partial-agg shuffle to a 3-row frame and a
+    broadcast join back; the row side never shuffles. The AVG is the
+    translator's DECIMAL-exact fold, mirrored verbatim in the oracle
+    CTE so the strict > boundary is bit-identical cross-engine."""
+    df = esql(spark, sf_dir, ESQL_INLINESTATS)
+    return df.select("l_returnflag", "n", "hi",
+                     F.round("avg_hit", 6).alias("avg_hit"))
+
+
+# ---------------------------------------------------- string family
+
+ESQL_STRINGS = """
+FROM customer
+| WHERE STARTS_WITH(c_name, "Customer") AND c_acctbal IS NOT NULL
+        AND NOT c_mktsegment LIKE "FURN*"
+| WHERE c_mktsegment RLIKE "(AUTO|BUIL|MACH).*"
+| EVAL seg = TO_LOWER(c_mktsegment),
+       num = TO_LONG(REPLACE(c_name, "Customer#", "")),
+       pre = TO_UPPER(SUBSTRING(c_name, 1, 4))
+| STATS n = COUNT(*), hi_num = MAX(num), maxbal = MAX(c_acctbal),
+        tags = COUNT_DISTINCT(pre) BY seg
+| SORT seg
+"""
+
+
+@register("esql_strings", oracle="""
+SELECT lower(c_mktsegment) AS seg, count(*) AS n,
+       max(CAST(replace(c_name, 'Customer#', '') AS BIGINT)) AS hi_num,
+       max(c_acctbal) AS maxbal,
+       CAST(count(DISTINCT upper(substr(c_name, 1, 4))) AS BIGINT)
+         AS tags
+FROM customer
+WHERE starts_with(c_name, 'Customer') AND c_acctbal IS NOT NULL
+  AND c_mktsegment NOT LIKE 'FURN%'
+  AND regexp_full_match(c_mktsegment, '(AUTO|BUIL|MACH).*')
+GROUP BY 1 ORDER BY 1
+""")
+def esql_strings(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """ES|QL string functions + pattern predicates in one pipeline:
+    STARTS_WITH / IS NOT NULL / NOT...LIKE (*-wildcards mapped to SQL
+    like with %/_ escaping) / RLIKE (anchored whole-string, Lucene
+    regexp semantics — hence the oracle's regexp_full_match) /
+    TO_LOWER / TO_UPPER / SUBSTRING / REPLACE / TO_LONG. All of it is
+    scan-projection string work that Catalyst keeps inside
+    whole-stage codegen; the only shuffle is the |segments|-row
+    partial agg."""
+    return esql(spark, sf_dir, ESQL_STRINGS)
+
+
+# ------------------------------------------------- multivalue family
+
+ESQL_MV_FUNCS = """
+FROM documents
+| EVAL toks = SPLIT(TRIM(text), " ")
+| EVAL ntok = MV_COUNT(toks), utok = MV_COUNT(MV_DEDUPE(toks)),
+       top = MV_MAX(toks)
+| STATS docs = COUNT(*), toks = SUM(ntok), uniq = SUM(utok),
+        top_tok = MAX(top) BY source
+| SORT source
+"""
+
+
+@register("esql_mv_funcs", oracle="""
+WITH t AS (
+  SELECT source,
+         len(string_split(trim(text), ' ')) AS ntok,
+         len(list_distinct(string_split(trim(text), ' '))) AS utok,
+         list_max(string_split(trim(text), ' ')) AS top
+  FROM documents)
+SELECT source, count(*) AS docs,
+       CAST(sum(CAST(ntok AS DECIMAL(28,6))) AS DOUBLE) AS toks,
+       CAST(sum(CAST(utok AS DECIMAL(28,6))) AS DOUBLE) AS uniq,
+       max(top) AS top_tok
+FROM t GROUP BY 1 ORDER BY 1
+""")
+def esql_mv_funcs(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """ES|QL multivalue reducers: per-document token multivalues
+    (SPLIT) reduced by MV_COUNT / MV_DEDUPE / MV_MAX into scalars,
+    then aggregated per source — the per-doc vocabulary-richness
+    census written in ES|QL. Arrays live only inside the projection
+    (the output policy forbids them in a final result); everything
+    collapses map-side into the scan, one |sources|-row shuffle."""
+    return esql(spark, sf_dir, ESQL_MV_FUNCS)
+
+
+# ------------------------------------- MEDIAN/PERCENTILE/STD_DEV/WAVG
+
+ESQL_PCTL = """
+FROM lineitem
+| WHERE l_returnflag == "R"
+| STATS med = MEDIAN(l_quantity), p90 = PERCENTILE(l_quantity, 90),
+        sd = STD_DEV(l_quantity),
+        wavg = WEIGHTED_AVG(l_extendedprice, l_quantity)
+        BY l_linestatus
+| SORT l_linestatus
+"""
+
+
+@register("esql_percentile", oracle="""
+SELECT l_linestatus,
+       round(quantile_cont(l_quantity, 0.5), 6) AS med,
+       round(quantile_cont(l_quantity, 0.9), 6) AS p90,
+       round(sqrt(greatest(
+         CAST(sum(CAST(l_quantity * l_quantity AS DECIMAL(28,6)))
+              AS DOUBLE) / count(l_quantity)
+         - (CAST(sum(CAST(l_quantity AS DECIMAL(28,6))) AS DOUBLE)
+            / count(l_quantity))
+           * (CAST(sum(CAST(l_quantity AS DECIMAL(28,6))) AS DOUBLE)
+              / count(l_quantity)), 0)), 6) AS sd,
+       round(CAST(sum(CAST(l_extendedprice * l_quantity
+                           AS DECIMAL(28,6))) AS DOUBLE)
+             / CAST(sum(CAST(l_quantity AS DECIMAL(28,6))) AS DOUBLE),
+             6) AS wavg
+FROM lineitem WHERE l_returnflag = 'R'
+GROUP BY 1 ORDER BY 1
+""")
+def esql_percentile(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """ES|QL statistics aggregates: MEDIAN and PERCENTILE(x, 90) as
+    exact interpolated percentiles (DuckDB quantile_cont's
+    definition — deterministic, unlike ES's TDigest), STD_DEV from
+    DECIMAL-exact power sums (population, closed-form — the
+    extended_stats contract), WEIGHTED_AVG as exact sum(v*w)/sum(w).
+    One grouped pass; the percentile is the only sort-based
+    aggregate and is bounded per-group."""
+    df = esql(spark, sf_dir, ESQL_PCTL)
+    return df.select("l_linestatus",
+                     F.round("med", 6).alias("med"),
+                     F.round("p90", 6).alias("p90"),
+                     F.round("sd", 6).alias("sd"),
+                     F.round("wavg", 6).alias("wavg"))
+
+
+# ------------------------------------------------------------ BUCKET
+
+ESQL_BUCKET = """
+FROM orders
+| STATS n = COUNT(*), revenue = SUM(o_totalprice)
+        BY b = BUCKET(o_totalprice, 50000.0)
+| SORT b
+"""
+
+
+@register("esql_bucket", oracle="""
+SELECT floor(o_totalprice / 50000.0) * 50000.0 AS b,
+       count(*) AS n,
+       round(CAST(sum(CAST(o_totalprice AS DECIMAL(28,6))) AS DOUBLE),
+             6) AS revenue
+FROM orders GROUP BY 1 ORDER BY 1
+""")
+def esql_bucket(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """ES|QL `BUCKET(field, span)` as a computed grouping key
+    (`BY b = BUCKET(...)`) — the numeric-histogram shape. The bucket
+    expression collapses into the grouping's partial-agg projection
+    (one shuffle of |buckets| partial rows); floor-aligned lower
+    bounds are identical double math on both engines."""
+    df = esql(spark, sf_dir, ESQL_BUCKET)
+    return df.select("b", "n", F.round("revenue", 6).alias("revenue"))
+
+
+# ------------------------------------------------------------ SAMPLE
+
+ESQL_SAMPLE = """
+FROM orders
+| KEEP o_orderkey, o_orderpriority, o_totalprice
+| SAMPLE 0.2
+| STATS n = COUNT(*), revenue = SUM(o_totalprice) BY o_orderpriority
+| SORT o_orderpriority
+"""
+
+
+@register("esql_sample", oracle="""
+SELECT o_orderpriority, count(*) AS n,
+       round(CAST(sum(CAST(o_totalprice AS DECIMAL(28,6))) AS DOUBLE),
+             6) AS revenue
+FROM orders
+WHERE ('0x' || substr(md5(CAST(o_orderkey AS VARCHAR)), 1, 8))::BIGINT
+      % 10000 < 2000
+GROUP BY 1 ORDER BY 1
+""")
+def esql_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """ES|QL `SAMPLE 0.2` — a 20% row sample ahead of the
+    aggregation. ES draws randomly per query; the translator instead
+    admits on a deterministic md5 bucket of the frame's leading
+    column (KEEP puts the stable id first), the repo-wide
+    reproducible-sampling contract: same rows every run, every
+    engine, any partitioning — and therefore oracle-checkable.
+    Map-side admit, no state, filter lives in the scan stage."""
+    df = esql(spark, sf_dir, ESQL_SAMPLE)
+    return df.select("o_orderpriority", "n",
+                     F.round("revenue", 6).alias("revenue"))
+
+
+# ------------------------------------------------------ CHANGE_POINT
+
+ESQL_CHANGE_POINT = """
+FROM events
+| STATS total = SUM(value) BY day = DATE_TRUNC("day", ts)
+| CHANGE_POINT total ON day
+| SORT day
+"""
+
+
+@register("esql_change_point", oracle="""
+WITH d AS (
+  SELECT CAST(date_trunc('day', ts) AS TIMESTAMP) AS day,
+         CAST(sum(CAST(value AS DECIMAL(28,6))) AS DOUBLE) AS total
+  FROM events GROUP BY 1),
+arr AS (
+  SELECT list(total ORDER BY day) AS t, list(day ORDER BY day) AS days,
+         count(*) AS n
+  FROM d),
+sp AS (
+  SELECT n, days, t,
+         list_transform(range(2, n + 1), s -> struct_pack(
+             s := s,
+             delta := abs(list_sum(t[1:s - 1]) / (s - 1)
+                          - list_sum(t[s:]) / (n - s + 1)))) AS cands
+  FROM arr WHERE n >= 2),
+best AS (
+  SELECT n, days, t,
+         (SELECT c FROM unnest(cands) AS u(c)
+          ORDER BY c.delta DESC, c.s LIMIT 1) AS b
+  FROM sp)
+SELECT days[i] AS day, t[i] AS total,
+       CASE WHEN i = b.s THEN 'step_change' END AS type,
+       CASE WHEN i = b.s THEN round(b.delta, 6) END AS delta
+FROM best, unnest(range(1, n + 1)) AS u(i)
+ORDER BY day
+""")
+def esql_change_point(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """ES|QL `CHANGE_POINT value ON key` (the 8.16 step-change
+    command): the bucketed daily series comes back annotated — `type`
+    = 'step_change' on the detected row, `delta` = the |mean gap|
+    magnitude (ES reports a p-value; the gap is this engine's
+    deterministic analog). Detection is the SAME step_change_best
+    fold change_point_agg ships (shared helper), run over the
+    |buckets|-row post-STATS frame — the 1-row reduce is bounded by
+    construction, candidate splits are map-side array math."""
+    return esql(spark, sf_dir, ESQL_CHANGE_POINT)
+
+
+# -------------------------------------------------------------- FORK
+
+ESQL_FORK = """
+FROM orders
+| FORK (SORT o_totalprice DESC, o_orderkey | LIMIT 5
+        | KEEP o_orderkey, o_totalprice)
+       (STATS n = COUNT(*), revenue = SUM(o_totalprice)
+        BY o_orderpriority)
+| SORT _fork, o_orderkey, o_orderpriority
+"""
+
+
+@register("esql_fork", oracle="""
+SELECT 'fork1' AS _fork, o_orderkey, o_totalprice,
+       CAST(NULL AS VARCHAR) AS o_orderpriority,
+       CAST(NULL AS BIGINT) AS n, CAST(NULL AS DOUBLE) AS revenue
+FROM (SELECT o_orderkey, o_totalprice FROM orders
+      ORDER BY o_totalprice DESC, o_orderkey LIMIT 5)
+UNION ALL
+SELECT 'fork2', NULL, NULL, o_orderpriority,
+       count(*),
+       round(CAST(sum(CAST(o_totalprice AS DECIMAL(28,6))) AS DOUBLE), 6)
+FROM orders GROUP BY o_orderpriority
+ORDER BY _fork, o_orderkey, o_orderpriority
+""")
+def esql_fork(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """ES|QL `FORK (branch) (branch)` (the 8.18 multi-branch command):
+    one input frame fans out to a top-N page AND a grouped census,
+    results unioned with the `_fork` discriminator and null-padded
+    where a branch lacks a column (ES's missing-field semantics).
+    Catalyst optimizes each branch independently off the shared scan;
+    neither branch pays for the other's shuffle."""
+    df = esql(spark, sf_dir, ESQL_FORK)
+    return df.select("_fork", "o_orderkey", "o_totalprice",
+                     "o_orderpriority", "n",
+                     F.round("revenue", 6).alias("revenue"))
+
+
+# ------------------------------------------------------------ RERANK
+
+ESQL_RERANK = """
+FROM documents
+| KEEP doc_id, text
+| SAMPLE 0.3
+| RERANK "fast table scan" ON text
+| SORT _score DESC, doc_id
+| LIMIT 10
+| KEEP doc_id, _score
+"""
+
+
+@register("esql_rerank", oracle="""
+WITH s AS (
+  SELECT doc_id, text FROM documents
+  WHERE ('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 8))::BIGINT
+        % 10000 < 3000),
+ce AS (
+  SELECT doc_id,
+         len(list_filter(['fast', 'table', 'scan'],
+             t -> list_contains(list_filter(string_split(trim(text), ' '),
+                                            x -> x <> ''), t)))
+           + ('0x' || substr(md5('ce:' || doc_id), 1, 15))::BIGINT
+             / 1152921504606846976.0 AS sc
+  FROM s)
+SELECT doc_id, round(sc, 6) AS _score
+FROM ce ORDER BY sc DESC, doc_id LIMIT 10
+""")
+def esql_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """ES|QL `RERANK "query" ON field` (the 8.18 semantic-rerank
+    command, ES's inference-endpoint stage lifted into the query
+    language): the deterministic cross-encoder kernel scores every
+    surviving row into `_score` — composed AFTER the sampling stage,
+    the retrieve-then-rerank contract (model cost is bounded by the
+    candidate set, never the corpus). Per-partition model load,
+    Arrow-batched (rerank_inference's kernel, parametric query
+    terms)."""
+    df = esql(spark, sf_dir, ESQL_RERANK)
+    return df.select("doc_id", F.round("_score", 6).alias("_score"))
+
+
+# ------------------------------------------------------ date family
+
+ESQL_DATES = """
+FROM events
+| EVAL d = DATE_FORMAT("yyyy-MM-dd", ts), hr = DATE_EXTRACT("hour", ts)
+| INLINESTATS t0 = MIN(ts)
+| EVAL age_h = DATE_DIFF("hour", t0, ts)
+| STATS n = COUNT(*), hours = COUNT_DISTINCT(hr),
+        max_age = MAX(age_h) BY d
+| SORT d
+"""
+
+
+@register("esql_dates", oracle="""
+WITH t0 AS (SELECT min(ts) AS t0 FROM events)
+SELECT strftime(ts, '%Y-%m-%d') AS d, count(*) AS n,
+       CAST(count(DISTINCT date_part('hour', ts)) AS BIGINT) AS hours,
+       max(CAST(floor((epoch(ts) - epoch(t0.t0)) / 3600.0) AS BIGINT))
+         AS max_age
+FROM events, t0
+GROUP BY 1 ORDER BY 1
+""")
+def esql_dates(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """ES|QL date-function family end-to-end: DATE_FORMAT (Java
+    pattern, passed through verbatim — ES and Spark share the pattern
+    language), DATE_EXTRACT (date_part integer field), and DATE_DIFF
+    computed as explicit epoch arithmetic (the builtin unit-diffs
+    disagree across engines — Spark counts complete periods, DuckDB
+    counts boundary crossings; floor(delta_seconds / unit) is
+    bit-identical on both). The corpus age baseline comes from an
+    INLINESTATS global MIN broadcast onto unmoved rows; everything
+    else is scan-projection date math + one |days|-row partial agg."""
+    return esql(spark, sf_dir, ESQL_DATES)
+
+
+# ------------------------------------------ per-aggregate WHERE
+
+ESQL_STATS_WHERE = """
+FROM lineitem
+| STATS n = COUNT(*),
+        n_ret = COUNT(*) WHERE l_returnflag == "R",
+        rev_ret = SUM(l_extendedprice) WHERE l_returnflag == "R",
+        hi_disc = MAX(l_quantity) WHERE l_discount > 0.05,
+        avg_ret = AVG(l_extendedprice) WHERE l_returnflag == "R"
+        BY l_linestatus
+| SORT l_linestatus
+"""
+
+
+@register("esql_stats_where", oracle="""
+SELECT l_linestatus, count(*) AS n,
+       CAST(count(*) FILTER (l_returnflag = 'R') AS BIGINT) AS n_ret,
+       round(CAST(sum(CAST(l_extendedprice AS DECIMAL(28,6)))
+                  FILTER (l_returnflag = 'R') AS DOUBLE), 6) AS rev_ret,
+       max(l_quantity) FILTER (l_discount > 0.05) AS hi_disc,
+       round(CAST(sum(CAST(l_extendedprice AS DECIMAL(28,6)))
+                  FILTER (l_returnflag = 'R') AS DOUBLE)
+             / count(l_extendedprice) FILTER (l_returnflag = 'R'), 6)
+         AS avg_ret
+FROM lineitem GROUP BY 1 ORDER BY 1
+""")
+def esql_stats_where(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """ES|QL per-aggregate filters (the 8.16 `STATS agg WHERE pred`
+    conditional-aggregate syntax): one grouped pass computes the
+    overall count beside return-flag-scoped count/revenue/average and
+    a discount-scoped max — rows failing an aggregate's predicate
+    become NULL inputs that the aggregate skips, the exact
+    FILTER(WHERE ...) semantics, with ZERO extra passes (still ONE
+    partial-agg shuffle; the predicates are map-side CASE inputs in
+    the same projection)."""
+    df = esql(spark, sf_dir, ESQL_STATS_WHERE)
+    return df.select("l_linestatus", "n", "n_ret",
+                     F.round("rev_ret", 6).alias("rev_ret"), "hi_disc",
+                     F.round("avg_ret", 6).alias("avg_ret"))

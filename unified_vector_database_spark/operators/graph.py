@@ -23,7 +23,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window as W, functions as F
 
 from .. import tables
-from ..functions.text import tokens
+from ..functions.text import TOK_SQL, tokens
 from ..registry import register
 
 GRAPH_SEED = "scan"
@@ -44,7 +44,7 @@ def _jlh_col(fg, nfg, bg, nall) -> F.Column:
 @register("graph_explore", oracle=f"""
 WITH dt AS (
   SELECT DISTINCT doc_id,
-         unnest(list_filter(string_split(trim(text), ' '), t -> t <> ''))
+         unnest({TOK_SQL})
            AS token
   FROM documents),
 tot AS (SELECT count(*) AS nall FROM documents),

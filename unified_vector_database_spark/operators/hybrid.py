@@ -13,17 +13,17 @@ join. Fusion joins two top-k-able score tables on doc id.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window as W, functions as F
+from pyspark.sql import (Column, DataFrame, SparkSession, Window as W,
+                         functions as F)
 
 from .. import tables
 from ..constants import BM25_B, BM25_K1, HYBRID_CANDIDATES, RRF_K
 from ..functions import distance as D
-from ..functions.text import tokens
+from ..functions.text import TOK_SQL, tokens
 from ..registry import register
 
 QUERY_TERMS = ("merge", "vector", "fast")
 _TERMS_SQL = "('merge', 'vector', 'fast')"
-_TOK = "list_filter(string_split(trim(text), ' '), t -> t <> '')"
 
 # Explicit-form cosine (see functions/distance.py: DuckDB's builtin
 # list_cosine_similarity is NOT bit-reproducible; this form is).
@@ -32,9 +32,9 @@ _COS = ("list_dot_product(embedding::DOUBLE[], qvec)"
         "*sqrt(list_dot_product(qvec, qvec)))")
 
 _BM25_CTE = f"""
-tok AS (SELECT doc_id, unnest({_TOK}) AS term FROM documents),
-dl AS (SELECT doc_id, len({_TOK}) AS dl FROM documents),
-stats AS (SELECT count(*) AS n, avg(len({_TOK})) AS avgdl FROM documents),
+tok AS (SELECT doc_id, unnest({TOK_SQL}) AS term FROM documents),
+dl AS (SELECT doc_id, len({TOK_SQL}) AS dl FROM documents),
+stats AS (SELECT count(*) AS n, avg(len({TOK_SQL})) AS avgdl FROM documents),
 tf AS (SELECT doc_id, term, count(*) AS tf FROM tok
        WHERE term IN {_TERMS_SQL} GROUP BY 1, 2),
 df AS (SELECT term, count(DISTINCT doc_id) AS df FROM tok
@@ -49,6 +49,29 @@ bm25 AS (
   FROM tf JOIN df USING (term) JOIN dl USING (doc_id), stats
   GROUP BY tf.doc_id)
 """
+
+
+def bm25_idf(df: Column) -> Column:
+    """BM25 idf of a term in `df` documents, over the frame's `n`."""
+    return F.log(1 + (F.col("n") - df + 0.5) / (df + 0.5))
+
+
+def _bm25_tf_norm(tf: Column) -> Column:
+    return tf + BM25_K1 * (1.0 - BM25_B
+                           + BM25_B * F.col("dl") / F.col("avgdl"))
+
+
+def bm25_tf_part(tf: Column) -> Column:
+    """BM25's saturated term frequency,
+    tf*(k1+1) / (tf + k1*(1-b+b*dl/avgdl)) over the frame's `dl` and
+    `avgdl`: a posting's impact."""
+    return tf * (BM25_K1 + 1.0) / _bm25_tf_norm(tf)
+
+
+def bm25_weight(tf: Column, df: Column) -> Column:
+    """One term's BM25 weight, idf * tf part: the only Spark copy of the
+    formula. The factors associate as in the DuckDB twin (`_BM25_CTE`)."""
+    return bm25_idf(df) * tf * (BM25_K1 + 1.0) / _bm25_tf_norm(tf)
 
 
 def bm25_scores(spark: SparkSession, sf_dir: str,
@@ -79,10 +102,9 @@ def bm25_scores(spark: SparkSession, sf_dir: str,
 def bm25_score_from_tf(per: DataFrame, n_terms: int) -> DataFrame:
     """BM25 score from a per-doc (doc_id, dl, tf_0..tf_{n-1}) frame:
     one scalar stats agg (N, avgdl, per-term df) broadcast back,
-    map-side idf/weight arithmetic, round(.., 6). The ONE copy of the
-    scoring formula — shared by the raw-token path above and the
-    analyzed path (operators/analyzer.py), so a k1/b or idf change
-    can never diverge them (review-caught duplication)."""
+    map-side idf/weight arithmetic, round(.., 6). Shared by the
+    raw-token path above and the analyzed path (operators/analyzer.py),
+    so a k1/b or idf change can never diverge them."""
     stats = per.agg(
         F.count("*").alias("n"), F.avg("dl").alias("avgdl"),
         *[F.count_if(F.col(f"tf_{i}") > 0).alias(f"df_{i}")
@@ -90,11 +112,7 @@ def bm25_score_from_tf(per: DataFrame, n_terms: int) -> DataFrame:
     parts = []
     for i in range(n_terms):
         tf = F.col(f"tf_{i}").cast("double")
-        dfc = F.col(f"df_{i}").cast("double")
-        idf = F.log(1 + (F.col("n") - dfc + 0.5) / (dfc + 0.5))
-        w = (idf * tf * (BM25_K1 + 1.0)
-             / (tf + BM25_K1 * (1.0 - BM25_B
-                                + BM25_B * F.col("dl") / F.col("avgdl"))))
+        w = bm25_weight(tf, F.col(f"df_{i}").cast("double"))
         parts.append(F.when(tf > 0, w).otherwise(F.lit(0.0)))
     total = parts[0]
     for p in parts[1:]:
@@ -215,9 +233,9 @@ def phrase_search(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register("pipeline_clean_search", oracle=f"""
 WITH s AS (
   SELECT doc_id, text,
-         len({_TOK}) AS n_tokens,
-         list_sum(list_transform({_TOK}, t -> length(t))) AS tok_chars,
-         len(list_filter({_TOK}, t -> t IN ('the', 'a'))) AS n_stop
+         len({TOK_SQL}) AS n_tokens,
+         list_sum(list_transform({TOK_SQL}, t -> length(t))) AS tok_chars,
+         len(list_filter({TOK_SQL}, t -> t IN ('the', 'a'))) AS n_stop
   FROM documents),
 quality AS (
   SELECT doc_id, text,
@@ -336,9 +354,9 @@ MLT_NGRAM = 3
 WITH grams AS (
   SELECT doc_id, source,
          list_distinct(list_transform(
-             range(1, greatest(len({_TOK}) - {MLT_NGRAM - 2}, 1)),
-             i -> {_TOK}[i] || ' ' || {_TOK}[i + 1] || ' '
-                  || {_TOK}[i + 2])) AS gs
+             range(1, greatest(len({TOK_SQL}) - {MLT_NGRAM - 2}, 1)),
+             i -> {TOK_SQL}[i] || ' ' || {TOK_SQL}[i + 1] || ' '
+                  || {TOK_SQL}[i + 2])) AS gs
   FROM documents),
 seed AS (SELECT gs AS seed_gs FROM grams WHERE doc_id = {MLT_SEED_DOC}),
 scored AS (
@@ -393,7 +411,7 @@ FUZZY_MAX_DIST = 2
 
 @register("fuzzy_search", oracle=f"""
 WITH tok AS (
-  SELECT doc_id, unnest({_TOK}) AS term FROM documents),
+  SELECT doc_id, unnest({TOK_SQL}) AS term FROM documents),
 m AS (
   SELECT doc_id, term, levenshtein(term, '{FUZZY_TERM}') AS dist
   FROM tok),
@@ -443,7 +461,7 @@ SIGTERMS_FG_SOURCE = "src0"
 
 @register("significant_terms", oracle=f"""
 WITH tok AS (
-  SELECT doc_id, source, unnest(list_distinct({_TOK})) AS term
+  SELECT doc_id, source, unnest(list_distinct({TOK_SQL})) AS term
   FROM documents),
 totals AS (
   SELECT count(DISTINCT doc_id) AS bg_total,
@@ -507,7 +525,7 @@ SLOP_T1, SLOP_T2, SLOP = "hash", "table", 3
 
 
 @register("phrase_slop_search", oracle=f"""
-WITH t AS (SELECT doc_id, {_TOK} AS toks FROM documents),
+WITH t AS (SELECT doc_id, {TOK_SQL} AS toks FROM documents),
 px AS (SELECT doc_id, unnest(toks) AS term,
               CAST(generate_subscripts(toks, 1) AS INT) AS p
        FROM t),
@@ -595,7 +613,7 @@ TERMS_SET_MIN = 3
 @register("terms_set_search", oracle=f"""
 WITH m AS (
   SELECT doc_id,
-         len(list_intersect(list_distinct({_TOK}),
+         len(list_intersect(list_distinct({TOK_SQL}),
              {list(TERMS_SET)!r})) AS n_matched
   FROM documents)
 SELECT doc_id, CAST(n_matched AS INT) AS n_matched

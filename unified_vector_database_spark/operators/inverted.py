@@ -35,9 +35,9 @@ from pyspark.sql import DataFrame, SparkSession, Window as W, functions as F
 
 from .. import tables
 from ..constants import BM25_B, BM25_K1
-from ..functions.text import exploded_tokens, tokens
+from ..functions.text import TOK_SQL, exploded_tokens, tokens
 from ..registry import register
-from .hybrid import QUERY_TERMS, _TERMS_SQL, _TOK
+from .hybrid import QUERY_TERMS, _TERMS_SQL, bm25_tf_part, bm25_weight
 
 IMPACT_N = 75
 _BUCKETS = 64
@@ -80,10 +80,7 @@ def read_postings(spark: SparkSession, path: str,
 
 def _bm25_on(tf: DataFrame, stats: DataFrame, df: DataFrame) -> DataFrame:
     """Exact BM25 over a (doc_id, term, tf, dl) posting subset."""
-    idf = F.log(1 + (F.col("n") - F.col("df") + 0.5) / (F.col("df") + 0.5))
-    w = (idf * F.col("tf") * (BM25_K1 + 1.0)
-         / (F.col("tf") + BM25_K1 * (1.0 - BM25_B
-                                     + BM25_B * F.col("dl") / F.col("avgdl"))))
+    w = bm25_weight(F.col("tf"), F.col("df"))
     return (tf.join(F.broadcast(df), "term")
               .crossJoin(F.broadcast(stats))
               .groupBy("doc_id")
@@ -91,9 +88,9 @@ def _bm25_on(tf: DataFrame, stats: DataFrame, df: DataFrame) -> DataFrame:
 
 
 @register("bm25_pruned_search", oracle=f"""
-WITH tok AS (SELECT doc_id, unnest({_TOK}) AS term FROM documents),
-dl AS (SELECT doc_id, len({_TOK}) AS dl FROM documents),
-stats AS (SELECT count(*) AS n, avg(len({_TOK})) AS avgdl FROM documents),
+WITH tok AS (SELECT doc_id, unnest({TOK_SQL}) AS term FROM documents),
+dl AS (SELECT doc_id, len({TOK_SQL}) AS dl FROM documents),
+stats AS (SELECT count(*) AS n, avg(len({TOK_SQL})) AS avgdl FROM documents),
 tf AS (SELECT tok.doc_id, term, count(*) AS tf, any_value(dl.dl) AS dl
        FROM tok JOIN dl ON dl.doc_id = tok.doc_id
        WHERE term IN {_TERMS_SQL} GROUP BY 1, 2),
@@ -136,9 +133,7 @@ def bm25_pruned_search(spark: SparkSession, sf_dir: str,
     stats = docs.agg(F.count("*").alias("n"),
                      F.avg(F.size(tokens("text"))).alias("avgdl"))
     df = tf.groupBy("term").agg(F.count("*").alias("df"))
-    impact = (F.col("tf") * (BM25_K1 + 1.0)
-              / (F.col("tf") + BM25_K1 * (1.0 - BM25_B
-                 + BM25_B * F.col("dl") / F.col("avgdl"))))
+    impact = bm25_tf_part(F.col("tf"))
     # Two-phase salted top-N: a term can match an unbounded share of
     # the corpus (stopwords), so a window partitioned on `term` alone
     # would funnel it into one task. Phase 1 ranks within (term, salt)
@@ -184,9 +179,9 @@ _BATCH_TERMS_SQL = "(" + ", ".join(f"'{t}'" for t in _ALL_BATCH_TERMS) + ")"
 
 @register("bm25_batch_search", oracle=f"""
 WITH qt(qid, term) AS (VALUES {_batch_q_values()}),
-tok AS (SELECT doc_id, unnest({_TOK}) AS term FROM documents),
-dl AS (SELECT doc_id, len({_TOK}) AS dl FROM documents),
-stats AS (SELECT count(*) AS n, avg(len({_TOK})) AS avgdl FROM documents),
+tok AS (SELECT doc_id, unnest({TOK_SQL}) AS term FROM documents),
+dl AS (SELECT doc_id, len({TOK_SQL}) AS dl FROM documents),
+stats AS (SELECT count(*) AS n, avg(len({TOK_SQL})) AS avgdl FROM documents),
 tf AS (SELECT doc_id, term, count(*) AS tf FROM tok
        WHERE term IN {_BATCH_TERMS_SQL} GROUP BY 1, 2),
 df AS (SELECT term, count(DISTINCT doc_id) AS df FROM tok
@@ -234,11 +229,7 @@ def bm25_batch_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     tf = tok.groupBy("term", "doc_id").agg(F.count("*").alias("tf"))
     df = tok.groupBy("term").agg(
         F.countDistinct("doc_id").alias("df"))
-    idf = F.log(1 + (F.col("n") - F.col("df") + 0.5) / (F.col("df") + 0.5))
-    wpart = (idf * F.col("tf") * (BM25_K1 + 1.0)
-             / (F.col("tf") + BM25_K1 * (1.0 - BM25_B
-                                         + BM25_B * F.col("dl")
-                                         / F.col("avgdl"))))
+    wpart = bm25_weight(F.col("tf"), F.col("df"))
     sc = (tf.join(F.broadcast(qt), "term")
             .join(F.broadcast(df), "term")
             .join(dl, "doc_id")

@@ -902,7 +902,7 @@ def _prefetch_maxsim(spark: SparkSession, sf_dir: str,
 
 
 # NOTE: the Qdrant `strategy=best_score` recommend lives in
-# operators/search_more.py (`recommend_best_score`, the published
+# operators/query_dsl.py (`recommend_best_score`, the published
 # -(best_neg²) formula). An earlier draft of it lived here and
 # silently shadowed/was-shadowed via duplicate registration; the
 # registry now raises on duplicate names (registry.py) so this class

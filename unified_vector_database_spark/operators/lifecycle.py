@@ -25,7 +25,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from .. import artifacts, flags, tables
 from ..registry import register
 from ..sources.catalog import Collection
-from .search_more import PAYLOAD_K_LO, PAYLOAD_K_HI
+from .query_dsl import PAYLOAD_K_HI, PAYLOAD_K_LO
 
 CAT_MAX_ID = 500
 CAT_BATCH_ID = 50
@@ -120,7 +120,7 @@ def nested_payload_typed(spark: SparkSession, sf_dir: str) -> DataFrame:
     `k` then lands in the parquet scan as a PushedFilter instead of a
     per-row JSON parse (plan-asserted in tests/test_plans.py). Same
     semantics and oracle as the schema-on-read fallback
-    (operators/search_more.py:313)."""
+    (`nested_payload_filter` in operators/query_dsl.py)."""
     ev = tables.load(spark, sf_dir, "events")
     typed = ev.select(
         "event_id", "event_type",

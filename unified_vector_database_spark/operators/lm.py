@@ -19,14 +19,14 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window as W, functions as F
 
 from .. import tables
-from ..functions.text import exploded_tokens
+from ..functions.text import TOK_SQL, exploded_tokens
 from ..registry import register
 
-_TOK_CTE = """
+_TOK_CTE = f"""
 tok AS (
   SELECT doc_id,
-         unnest(list_filter(string_split(trim(text), ' '), t -> t <> '')) AS token,
-         generate_subscripts(list_filter(string_split(trim(text), ' '), t -> t <> ''), 1) AS pos
+         unnest({TOK_SQL}) AS token,
+         generate_subscripts({TOK_SQL}, 1) AS pos
   FROM documents),
 big AS (
   SELECT doc_id, token AS w1,
@@ -91,7 +91,7 @@ ENT_BUCKETS = 256  # hashed-bigram feature space (the DSIR bucket shape)
 @register("ngram_entropy", oracle=f"""
 WITH t AS (
   SELECT source,
-         list_filter(string_split(trim(text), ' '), t -> t <> '') AS toks
+         {TOK_SQL} AS toks
   FROM documents),
 g AS (
   SELECT source,

@@ -17,7 +17,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from .. import tables
-from ..functions.text import tokens
+from ..functions.text import TOK_SQL, tokens
 from ..registry import register
 
 # (query_id, required term, n_chars range) — the stored searches.
@@ -42,7 +42,7 @@ PERCOLATE_ORACLE = f"""
 WITH sq(query_id, term, lo, hi) AS (VALUES {_VALUES_SQL}),
 tok AS (
   SELECT doc_id, n_chars,
-         list_filter(string_split(trim(text), ' '), t -> t <> '') AS tok
+         {TOK_SQL} AS tok
   FROM documents),
 m AS (
   SELECT sq.query_id, tok.doc_id

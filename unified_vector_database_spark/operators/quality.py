@@ -25,9 +25,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from .. import tables
+from ..functions.text import TOK_SQL
 from ..registry import register
 
-_TOK = "list_filter(string_split(trim(text), ' '), t -> t <> '')"
 
 GOPHER_MIN_WORDS = 40
 GOPHER_MAX_WORDS = 100_000
@@ -65,7 +65,7 @@ def dominance_count(toks: F.Column) -> F.Column:
 
 GOPHER_ORACLE = f"""
 WITH t AS (
-  SELECT doc_id, lang, {_TOK} AS toks,
+  SELECT doc_id, lang, {TOK_SQL} AS toks,
          length(text) - length(replace(text, '#', ''))
          + length(text) - length(replace(text, '...', '')) AS n_sym
   FROM documents),
@@ -182,7 +182,7 @@ DSIR_TOP = 20
 
 @register("dsir_importance", oracle=f"""
 WITH tok AS (
-  SELECT doc_id, lang, unnest({_TOK}) AS term FROM documents),
+  SELECT doc_id, lang, unnest({TOK_SQL}) AS term FROM documents),
 b AS (
   SELECT doc_id, lang,
          ('0x' || substr(md5(term), 1, 8))::BIGINT % {DSIR_BUCKETS} AS bucket
@@ -421,7 +421,7 @@ DATACARD_SHORT = 120  # n_chars floor mirrored from the quality gates
 @register("dataset_card", oracle=f"""
 WITH base AS (
   SELECT doc_id, lang, source, n_chars, md5(text) AS h,
-         len(list_filter(string_split(trim(text), ' '), t -> t <> ''))
+         len({TOK_SQL})
            AS ntok
   FROM documents),
 tok AS (
@@ -515,7 +515,7 @@ PIPE_SHARDS = 8
 # and its green history — stays untouched)
 _GOPHER_KEEP_CTE = f"""
 t AS (
-  SELECT doc_id, lang, {_TOK} AS toks,
+  SELECT doc_id, lang, {TOK_SQL} AS toks,
          length(text) - length(replace(text, '#', ''))
          + length(text) - length(replace(text, '...', '')) AS n_sym
   FROM documents),

@@ -22,6 +22,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from .. import tables
 from ..functions.hashing import md5_int60
+from ..functions.text import TOK_SQL
 from ..registry import register
 from .textops import QUALITY_ORACLE_SELECT, quality_score_t
 
@@ -286,7 +287,6 @@ def random_sampler_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 SST_LANG = "en"
 SST_TOP = 10
-_SST_TOK = "list_filter(string_split(trim(text), ' '), t -> t <> '')"
 
 
 @register("sampled_significant_terms", oracle=f"""
@@ -299,10 +299,10 @@ WITH d AS (
   FROM documents),
 samp AS (SELECT doc_id, lang, text FROM d WHERE rn <= {SAMPLER_SHARD_SIZE}),
 fgt AS (
-  SELECT DISTINCT doc_id, unnest({_SST_TOK}) AS token
+  SELECT DISTINCT doc_id, unnest({TOK_SQL}) AS token
   FROM samp WHERE lang = '{SST_LANG}'),
 bgt AS (
-  SELECT DISTINCT doc_id, unnest({_SST_TOK}) AS token FROM documents),
+  SELECT DISTINCT doc_id, unnest({TOK_SQL}) AS token FROM documents),
 tot AS (
   SELECT (SELECT count(*) FROM samp WHERE lang = '{SST_LANG}') AS nfg,
          (SELECT count(DISTINCT doc_id) FROM documents) AS nall),

@@ -23,13 +23,12 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from .. import tables
 from ..functions.hashing import md5_int60
-from ..functions.text import tokens
+from ..functions.text import TOK_SQL, tokens
 from ..registry import register
 
 BITS = 60
 BANDS = 4
 BAND_BITS = BITS // BANDS  # 15-bit band keys: 32k buckets per band
-_TOK = "list_filter(string_split(trim(text), ' '), t -> t <> '')"
 
 
 def simhash_signatures(docs: DataFrame) -> DataFrame:
@@ -112,7 +111,7 @@ _ORACLE_H = "('0x' || substr(md5(token), 1, 15))::BIGINT"
 
 
 @register("dedup_simhash", oracle=f"""
-WITH tok AS (SELECT doc_id, unnest({_TOK}) AS token FROM documents),
+WITH tok AS (SELECT doc_id, unnest({TOK_SQL}) AS token FROM documents),
 votes AS (SELECT doc_id, {_ORACLE_H} AS h FROM tok),
 bits AS (SELECT doc_id, {_ORACLE_BITS} FROM votes GROUP BY doc_id)
 SELECT doc_id, {_ORACLE_SIG} AS simhash
@@ -124,7 +123,7 @@ def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @register("simhash_pairs", oracle=f"""
-WITH tok AS (SELECT doc_id, unnest({_TOK}) AS token FROM documents),
+WITH tok AS (SELECT doc_id, unnest({TOK_SQL}) AS token FROM documents),
 votes AS (SELECT doc_id, {_ORACLE_H} AS h FROM tok),
 bits AS (SELECT doc_id, {_ORACLE_BITS} FROM votes GROUP BY doc_id),
 sig AS (SELECT doc_id, {_ORACLE_SIG} AS simhash FROM bits),

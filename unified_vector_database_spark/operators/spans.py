@@ -26,7 +26,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from .. import tables
-from ..functions.text import ngram_array
+from ..functions.text import TOK_SQL, ngram_array
 from ..registry import register
 
 SPAN_N = 8  # tokens per window — Lee et al. use 50 unicode chars
@@ -35,7 +35,7 @@ SPAN_N = 8  # tokens per window — Lee et al. use 50 unicode chars
 _SPANS_ORACLE = f"""
 WITH toks AS (
   SELECT doc_id,
-         list_filter(string_split(trim(text), ' '), t -> t <> '') AS t
+         {TOK_SQL} AS t
   FROM documents),
 g AS (
   SELECT doc_id,

@@ -30,19 +30,18 @@ from .. import tables
 from ..constants import HYBRID_CANDIDATES
 from ..functions import distance as D
 from ..functions.hashing import md5_int32
-from ..functions.text import tokens
+from ..functions.text import TOK_SQL, tokens
 from ..registry import register
 
 SPARSE_DIM = 1 << 16  # 65536 hash buckets — SPLADE vocab scale
 
-_TOK = "list_filter(string_split(trim(text), ' '), t -> t <> '')"
 
 # DuckDB twin of the sparse derivation: token -> md5 dim bucket,
 # weight = ln(1 + per-dim token count). `('0x'||substr(md5,1,8))`
 # matches functions/hashing.md5_int32 exactly (see memory: every hash
 # bottoms out in md5).
 _SPARSE_CTE = f"""
-tok AS (SELECT doc_id, unnest({_TOK}) AS term FROM documents),
+tok AS (SELECT doc_id, unnest({TOK_SQL}) AS term FROM documents),
 sp AS (SELECT doc_id,
               ('0x' || substr(md5(term), 1, 8))::BIGINT % {SPARSE_DIM} AS dim,
               ln(1 + count(*)) AS w
@@ -183,7 +182,7 @@ def hybrid_sparse_dense(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @register("sparse_vectors_layout", oracle=f"""
-WITH tok AS (SELECT doc_id, unnest({_TOK}) AS term FROM documents),
+WITH tok AS (SELECT doc_id, unnest({TOK_SQL}) AS term FROM documents),
 sp AS (SELECT doc_id,
               ('0x' || substr(md5(term), 1, 8))::BIGINT % {SPARSE_DIM} AS dim,
               ln(1 + count(*)) AS w
@@ -285,7 +284,7 @@ EXP_TOP = 20
 
 
 @register("sparse_expansion_search", oracle=f"""
-WITH t AS (SELECT doc_id, list_distinct({_TOK}) AS toks FROM documents),
+WITH t AS (SELECT doc_id, list_distinct({TOK_SQL}) AS toks FROM documents),
 n AS (SELECT count(*) AS nd FROM t),
 ex AS (SELECT doc_id, unnest(toks) AS term FROM t),
 hasq AS (SELECT doc_id FROM ex WHERE term = '{EXP_QTERM}'),
@@ -305,7 +304,7 @@ expansion AS (
   ORDER BY lift DESC, term LIMIT {EXP_K}),
 tf AS (
   SELECT doc_id, term, count(*) AS f
-  FROM (SELECT doc_id, unnest({_TOK}) AS term FROM documents)
+  FROM (SELECT doc_id, unnest({TOK_SQL}) AS term FROM documents)
   GROUP BY doc_id, term),
 scored AS (
   SELECT tf.doc_id,

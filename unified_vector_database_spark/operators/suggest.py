@@ -15,7 +15,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window as W, functions as F
 
 from .. import tables
-from ..functions.text import exploded_tokens
+from ..functions.text import TOK_SQL, exploded_tokens
 from ..registry import register
 
 _PREFIX = "s"
@@ -27,7 +27,7 @@ _HL_PAD = 30
 SELECT token AS suggestion, count(*) AS freq,
        count(DISTINCT doc_id) AS n_docs
 FROM (SELECT doc_id,
-             unnest(list_filter(string_split(trim(text), ' '), t -> t <> '')) AS token
+             unnest({TOK_SQL}) AS token
       FROM documents)
 WHERE token LIKE '{_PREFIX}%'
 GROUP BY token

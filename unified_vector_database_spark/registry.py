@@ -8,6 +8,8 @@ correctness driver runs both sides at sf=0.01 and hash-compares.
 
 from __future__ import annotations
 
+import importlib
+import pkgutil
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
@@ -58,24 +60,9 @@ def resolved_oracles() -> dict[str, str]:
 
 
 def load_all() -> None:
-    """Import every operator module for its registration side effects."""
-    from . import api  # noqa: F401
-    from .operators import (  # noqa: F401
-        analytics, analyzer, arrow_knn, cleanup, dedup, esagg, esagg2,
-        esagg3,
-        esagg4, esagg5, esagg6, esagg7, esql, esql2, evaluation, geo,
-        graph,
-        hnsw,
-        hybrid,
-        index,
-        inference,
-        inverted,
-        jpeg, knn, lifecycle, lm, matrix, multimodal, percolate,
-        quality, refs, rerank, sampling, search_extras, search_extras2,
-        search_extras3, search_extras4,
-        search_more, simhash, simjoin, sketches, spans, sparse, stats,
-        stats_more, suggest, textops, timeseries, tpch_extra,
-        tpch_more,
-    )
-    from .streaming import ingest as streaming_ingest  # noqa: F401
-    from .streaming import stateful  # noqa: F401
+    """Import `api` and every module under `operators` and `streaming`
+    for its registration side effects."""
+    from . import api, operators, streaming  # noqa: F401
+    for pkg in (operators, streaming):
+        for m in pkgutil.iter_modules(pkg.__path__):
+            importlib.import_module(f"{pkg.__name__}.{m.name}")

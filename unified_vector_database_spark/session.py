@@ -8,11 +8,14 @@ any scale.
 
 from __future__ import annotations
 
+import hashlib
 import os
 import tempfile
 import zipfile
 
 from pyspark.sql import SparkSession
+
+from . import artifacts
 
 
 def _ship_package(spark: SparkSession) -> None:
@@ -27,22 +30,31 @@ def _ship_package(spark: SparkSession) -> None:
     deploy (--py-files)."""
     if getattr(spark, "_uvdb_pkg_shipped", False):
         return
+    spark.sparkContext.addPyFile(package_zip())
+    spark._uvdb_pkg_shipped = True
+
+
+def package_zip() -> str:
+    """A zip of this package's .py files, named by md5 of their sorted
+    (relpath, size, mtime_ns): processes on one source tree share it,
+    and an edited tree never ships an older zip. Workers put pyFiles
+    ahead of PYTHONPATH, so a stale zip would shadow the source. The
+    zip is written under a pid-suffixed name and published by
+    os.replace, so a reader never sees a partial file."""
     pkg_dir = os.path.dirname(os.path.abspath(__file__))
     pkg_name = os.path.basename(pkg_dir)
-    zpath = os.path.join(tempfile.gettempdir(),
-                         f"uvdb_pkg_{os.getpid()}.zip")
+    srcs = [f for f in artifacts.fingerprint(pkg_dir)
+            if f[0].endswith(".py")]
+    key = hashlib.md5(repr(srcs).encode()).hexdigest()
+    zpath = os.path.join(tempfile.gettempdir(), f"uvdb_pkg_{key}.zip")
     if not os.path.exists(zpath):
-        with zipfile.ZipFile(zpath, "w") as zf:
-            for root, _dirs, files in os.walk(pkg_dir):
-                for fn in files:
-                    if not fn.endswith(".py"):
-                        continue
-                    full = os.path.join(root, fn)
-                    arc = os.path.join(pkg_name,
-                                       os.path.relpath(full, pkg_dir))
-                    zf.write(full, arc)
-    spark.sparkContext.addPyFile(zpath)
-    spark._uvdb_pkg_shipped = True
+        part = f"{zpath}.{os.getpid()}"
+        with zipfile.ZipFile(part, "w") as zf:
+            for rel, _size, _mtime in srcs:
+                zf.write(os.path.join(pkg_dir, rel),
+                         os.path.join(pkg_name, rel))
+        os.replace(part, zpath)
+    return zpath
 
 
 def _half_host_memory() -> str:

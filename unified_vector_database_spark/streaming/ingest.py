@@ -245,18 +245,16 @@ STREAM_SHUFFLE_PARTITIONS = 4
 
 def _pinned_stream_shuffle(spark: SparkSession):
     """Context manager pinning the replay-scale state width
-    (UVDB_STREAM_SHUFFLE_PARTITIONS, default STREAM_SHUFFLE_PARTITIONS)
-    for the duration of a one-shot streaming run — shared by
-    _run_to_memory and the foreachBatch sinks that run outside it."""
-    import os
+    (STREAM_SHUFFLE_PARTITIONS) for the duration of a one-shot streaming
+    run — shared by _run_to_memory and the foreachBatch sinks that run
+    outside it."""
     from contextlib import contextmanager
 
     @contextmanager
     def _pin():
-        parts = os.environ.get("UVDB_STREAM_SHUFFLE_PARTITIONS",
-                               str(STREAM_SHUFFLE_PARTITIONS))
         prev = spark.conf.get("spark.sql.shuffle.partitions")
-        spark.conf.set("spark.sql.shuffle.partitions", parts)
+        spark.conf.set("spark.sql.shuffle.partitions",
+                       str(STREAM_SHUFFLE_PARTITIONS))
         try:
             yield
         finally:
@@ -428,7 +426,7 @@ def stream_first_seen_users(spark: SparkSession, sf_dir: str) -> DataFrame:
     window-free cumulate fold. State is O(users), the same bound the
     batch rewrite's shuffle carries; the sketch alternative for
     unbounded user spaces is W7's HLL registers."""
-    from ..operators.esagg2 import cumulate_first_seen
+    from ..operators.aggregations import cumulate_first_seen
     stream = _replay_events(spark, sf_dir, "firstseen") \
         .select("user_id", "ts")
     fs = (stream.groupBy("user_id")
