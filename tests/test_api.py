@@ -6,9 +6,10 @@ from __future__ import annotations
 
 import re
 
+import pytest
 from pyspark.sql import functions as F
 
-from unified_vector_database_spark import tables
+from unified_vector_database_spark import api, tables
 from unified_vector_database_spark.api import (
     compile_filter, count, search, search_batch,
 )
@@ -32,8 +33,7 @@ def test_plain_knn_matches_direct(spark, sf_dir):
                           "with_payload": ["label"]})
     direct = (corpus.select(
         "vec_id", "label",
-        D.cosine(D.vec_double("embedding"),
-                 F.array(*[F.lit(x) for x in v])).alias("score"))
+        D.cosine(D.vec_double("embedding"), D.vector_sql(v)).alias("score"))
         .orderBy(F.desc("score"), "vec_id").limit(10))
     assert [r.vec_id for r in got.collect()] == \
         [r.vec_id for r in direct.collect()]
@@ -170,3 +170,118 @@ def test_search_batch_unions_specs(spark, sf_dir):
     assert len(by_idx[0]) == 3 and len(by_idx[1]) == 2
     single0 = search(corpus, specs[0]).collect()
     assert [r.vec_id for r in by_idx[0]] == [r.vec_id for r in single0]
+
+
+@pytest.mark.parametrize("spec, message", [
+    ({"filter": {"must": [{"key": "vec_id", "match": {"any": [1, 2]}}]}},
+     "'match' takes a scalar"),
+    ({"filter": {"must": [{"key": "label", "match": None}]}},
+     "'match' takes a scalar"),
+    ({"filter": {"must": [{"key": "label", "any": [[1], 2]}]}},
+     "'any' takes a list of scalars"),
+    ({"filter": {"must_not": [{"key": "label", "any": 3}]}},
+     "'any' takes a list of scalars"),
+    ({"filter": {"must": [{"key": "vec_id", "range": {"gtee": 3}}]}},
+     "'range' takes scalar bounds"),
+    ({"filter": {"must": [{"key": "vec_id", "range": {}}]}},
+     "'range' takes scalar bounds"),
+    ({"filter": {"must": [{"key": "label", "near": 3}]}},
+     "unknown condition"),
+    ({"filter": {"must": [{"key": "label", "match": 3, "any": [3]}]}},
+     "unknown condition"),
+    ({"filter": {"must": ["label = 3"]}}, "needs a string 'key'"),
+    ({"filter": {"should": [{"key": "label", "match": 3}]}},
+     "filter takes 'must' and 'must_not'"),
+    ({"filter": {"must": {"key": "label", "match": 3}}},
+     "filter clauses are lists"),
+    ({"vector": []}, "'vector' takes a non-empty list of numbers"),
+    ({"vector": [0.5, "1"]}, "'vector' takes a non-empty list of numbers"),
+    ({"vector": [0.5, None]}, "'vector' takes a non-empty list of numbers"),
+    ({"vector": "0.5"}, "'vector' takes a non-empty list of numbers"),
+])
+def test_malformed_spec_raises_named_error(monkeypatch, spec, message):
+    """A malformed spec is refused in Python: with no corpus and no
+    pyspark `functions` to call, only the named ValueError can come
+    out."""
+    monkeypatch.setattr(api, "F", None)
+    with pytest.raises(ValueError, match=re.escape(message)):
+        search(None, spec)
+    if "filter" in spec:
+        with pytest.raises(ValueError, match=re.escape(message)):
+            compile_filter(spec["filter"])
+
+
+DIM = 16
+
+
+@pytest.fixture(scope="module")
+def stored(spark, tmp_path_factory):
+    """(collection frame, raw parquet frame, query, zero-vector id): the
+    same seeded rows read through a Collection, which stores norms, and
+    as the plain parquet file it was loaded from."""
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from unified_vector_database_spark.sources.catalog import Collection
+
+    rng = np.random.default_rng(7)
+    x = rng.standard_normal((300, DIM)).astype(np.float32)
+    x[17] = 0.0
+    d = tmp_path_factory.mktemp("stored")
+    pq.write_table(pa.table({
+        "vec_id": pa.array(range(len(x)), pa.int64()),
+        "label": pa.array([i % 7 for i in range(len(x))], pa.int32()),
+        "embedding": pa.array(list(x), pa.list_(pa.float32())),
+    }), str(d / "in.parquet"))
+    raw = spark.read.parquet(str(d / "in.parquet"))
+    col = Collection.create(spark, str(d), "c", id_col="vec_id", dim=DIM)
+    col.upsert(raw)
+    q = [float(v) for v in rng.standard_normal(DIM).astype(np.float32)]
+    return col.read(), raw, q, 17
+
+
+def _bits(rows):
+    return [tuple(v.hex() if isinstance(v, float) else v for v in r)
+            for r in rows]
+
+
+@pytest.mark.parametrize("metric", ["cosine", "dot", "l2"])
+def test_stored_norms_give_identical_answers(stored, metric):
+    frame, raw, q, _ = stored
+    assert "_norm_embedding" in frame.columns
+    assert "_norm_embedding" not in raw.columns
+    base = {"vector": q, "metric": metric}
+    [*_, eighth] = search(raw, {**base, "limit": 8}).collect()
+    specs = [
+        {**base, "limit": 10, "with_payload": ["label"]},
+        {**base, "limit": 3, "group_by": {"key": "label",
+                                          "group_size": 2}},
+        {**base, "limit": 5, "offset": 7, "with_payload": ["label"]},
+        {**base, "limit": 50, "score_threshold": eighth.score},
+        {**base, "limit": 10, "vector": [0.0] * DIM},
+    ]
+    for spec in specs:
+        got = search(frame, spec).collect()
+        assert got and _bits(got) == _bits(search(raw, spec).collect()), spec
+
+
+def test_zero_vectors_score_null_cosine(stored):
+    frame, raw, q, zero = stored
+    for corpus in (frame, raw):
+        [r] = search(corpus, {"vector": q, "limit": 1, "filter": {
+            "must": [{"key": "vec_id", "match": zero}]}}).collect()
+        assert r.score is None
+        rows = search(corpus, {"vector": [0.0] * DIM, "limit": 5}).collect()
+        assert [r.score for r in rows] == [None] * 5
+
+
+def test_stored_norm_cosine_folds_once(stored):
+    frame, raw, q, _ = stored
+
+    def folds(corpus):
+        plan = search(corpus, {"vector": q, "limit": 5})._jdf \
+            .queryExecution().optimizedPlan().toString()
+        return plan.count("aggregate(")
+    assert folds(frame) == 1
+    assert folds(raw) == 2  # the query norm is a literal either way

@@ -172,6 +172,40 @@ def test_persisted_name_is_stable_across_hash_seeds(disk):
         assert got == out
 
 
+def test_scratch_is_per_process_and_removed_at_exit(tmp_path):
+    """Two processes take scratch on one input at once: each keeps its
+    own directory while the other empties its own, and neither leaves
+    it behind at exit."""
+    sig = tmp_path / "sig"
+    sig.mkdir()
+    code = ("import os, sys, tempfile, time\n"
+            "from unified_vector_database_spark import artifacts\n"
+            "tempfile.tempdir, src, sig, me, other = sys.argv[1:]\n"
+            "def wait(name):\n"
+            "    end = time.time() + 60\n"
+            "    while not os.path.exists(os.path.join(sig, name)):\n"
+            "        assert time.time() < end, name\n"
+            "        time.sleep(0.02)\n"
+            "if me == 'b':\n"
+            "    wait('a')\n"
+            "d = artifacts.scratch('toy', src)\n"
+            "os.makedirs(d)\n"
+            "open(os.path.join(d, me), 'w').close()\n"
+            "open(os.path.join(sig, me), 'w').close()\n"
+            "wait(other)\n"
+            "print(d, sorted(os.listdir(d)))\n")
+    env = dict(os.environ, PYTHONPATH=str(PKG.parent))
+    procs = [subprocess.Popen(
+        [sys.executable, "-c", code, str(tmp_path), str(tmp_path / "in"),
+         str(sig), me, other], env=env, stdout=subprocess.PIPE, text=True)
+        for me, other in (("a", "b"), ("b", "a"))]
+    outs = [p.communicate(timeout=120)[0].split(" ", 1) for p in procs]
+    assert [p.returncode for p in procs] == [0, 0]
+    assert [o[1].strip() for o in outs] == ["['a']", "['b']"]
+    assert outs[0][0] != outs[1][0]
+    assert not any(os.path.exists(o[0]) for o in outs)
+
+
 def test_interrupted_collection_build_is_rebuilt(spark, duck, sf_dir,
                                                  tmp_path, monkeypatch):
     """A reindex whose upsert dies after the destination collection was

@@ -238,3 +238,131 @@ def test_uri_catalog_roundtrip(spark, tmp_path):
 
     col.drop()
     assert Collection.list_collections(base) == []
+
+
+# ------------------------------------------------ stored norms, schema
+
+VDIM = 4
+
+
+def _vec_rows(spark, ids, seed):
+    import random
+    rnd = random.Random(seed)
+    return spark.createDataFrame(
+        [(i, i % 3, [rnd.uniform(-3, 3) for _ in range(VDIM)]) for i in ids],
+        "id bigint, label int, embedding array<float>")
+
+
+def _assert_norms_exact(col):
+    from unified_vector_database_spark.functions import distance as D
+    rows = col.read().select(
+        "_norm_embedding",
+        D.norm(D.vec_double("embedding")).alias("inline")).collect()
+    assert rows
+    assert all(r["_norm_embedding"].hex() == r.inline.hex() for r in rows)
+
+
+def test_stored_norms_follow_every_commit(spark, tmp_path):
+    col = Collection.create(spark, str(tmp_path), "n", id_col="id",
+                            dim=VDIM)
+    col.upsert(_vec_rows(spark, range(20), 1))
+    _assert_norms_exact(col)
+    col.upsert(_vec_rows(spark, range(10, 30), 2))     # overwrite + new
+    _assert_norms_exact(col)
+    col.delete(F.col("label") == 0)
+    _assert_norms_exact(col)
+    col.update(F.col("id") < 15, embedding=[3.0, 4.0, 0.0, 0.0])
+    _assert_norms_exact(col)
+    assert {r["_norm_embedding"] for r in col.read().collect()
+            if r.id < 15} == {5.0}
+    col.compact()
+    _assert_norms_exact(col)
+    assert col.count() == 20
+
+
+def test_restore_to_version_without_norms(spark, tmp_path):
+    """A version written before norms were stored reads without the
+    column, and the next commit computes it for the rows it carries."""
+    from unified_vector_database_spark import api
+
+    col = Collection.create(spark, str(tmp_path), "old", id_col="id",
+                            dim=VDIM)
+    _vec_rows(spark, range(12), 3).write.parquet(col._data_path(1))
+    m = col.describe()
+    m.version = 1
+    col._write_manifest(m)
+    col.snapshot("legacy")
+    col.upsert(_vec_rows(spark, range(8, 16), 4))
+    _assert_norms_exact(col)
+    col.restore("legacy")
+    legacy = col.read()
+    assert "_norm_embedding" not in legacy.columns
+    rows = api.search(legacy, {"vector": [1.0, -2.0, 0.5, 0.0],
+                               "limit": 5}, id_col="id").collect()
+    assert len(rows) == 5 and None not in [r.score for r in rows]
+    col.delete(F.col("id") == 0)
+    _assert_norms_exact(col)
+    assert col.count() == 11
+
+
+def _jobs(spark, fn):
+    """(fn(), number of Spark jobs it ran), counted by job group."""
+    import time
+    import uuid
+    sc = spark.sparkContext
+    group = f"test-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    time.sleep(0.5)  # job-start events reach the status store async
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_read_fires_no_job_and_infers_the_same_schema(spark, tmp_path):
+    col = Collection.create(spark, str(tmp_path), "s", id_col="id",
+                            dim=VDIM)
+    col.upsert(_vec_rows(spark, range(10), 5))
+    df, jobs = _jobs(spark, col.read)
+    assert jobs == 0
+    path = col._data_path(col.describe().version)
+    assert df.schema == spark.read.parquet(path).schema
+    assert df.count() == 10
+    # an older manifest without the schema is read with inference
+    m = col.describe()
+    m.schema = None
+    col._write_manifest(m)
+    df2, jobs2 = _jobs(spark, col.read)
+    assert jobs2 >= 1 and df2.schema == df.schema
+
+    part = Collection.create(spark, str(tmp_path), "p", id_col="doc_id",
+                             partition_by=["lang"])
+    part.upsert(spark.createDataFrame(
+        [(1, "en", 10), (2, "de", 20), (3, "en", 30)],
+        "doc_id bigint, lang string, n_chars int"))
+    pdf, pjobs = _jobs(spark, part.read)
+    ppath = part._data_path(1)
+    assert pjobs == 0 and pdf.schema == spark.read.parquet(ppath).schema
+    assert sorted(r.doc_id for r in pdf.where(F.col("lang") == "en")
+                  .collect()) == [1, 3]
+
+
+def test_wrong_dim_upsert_changes_nothing(spark, tmp_path):
+    import os
+
+    col = Collection.create(spark, str(tmp_path), "d", id_col="id",
+                            dim=VDIM)
+    col.upsert(_vec_rows(spark, range(10), 6))
+
+    def files():
+        return sorted(os.path.relpath(os.path.join(r, f), col.path)
+                      for r, _, fs in os.walk(col.path) for f in fs)
+    before, m = files(), col.describe()
+    bad = spark.createDataFrame([(99, 0, [1.0, 2.0])],
+                                "id bigint, label int, embedding array<float>")
+    with pytest.raises(ValueError, match="vector dim mismatch"):
+        col.upsert(_vec_rows(spark, range(5), 7).unionByName(bad))
+    assert files() == before and col.describe() == m
+    assert col.count() == 10 and col.read().count() == 10

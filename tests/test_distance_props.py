@@ -4,8 +4,9 @@ metric identities on arbitrary vectors."""
 from __future__ import annotations
 
 import math
+import struct
 
-from hypothesis import given, settings, strategies as st
+from hypothesis import example, given, settings, strategies as st
 
 from pyspark.sql import Row, functions as F
 
@@ -46,3 +47,31 @@ def test_normalize_unit_norm(spark, v):
     df = spark.createDataFrame([Row(a=v)])
     r = df.select(D.norm(D.normalize("a")).alias("n")).first()
     assert abs(r.n - 1.0) < 1e-9
+
+
+EDGES = st.sampled_from([
+    0.0, -0.0, 5e-324, -5e-324, 2.2250738585072014e-308, 1e308,
+    -1.7976931348623157e308, 1.3407807929942596e154, 1e-200,
+    math.nan, math.inf, -math.inf])
+
+
+def _bits(x: float):
+    return "nan" if math.isnan(x) else struct.pack("<d", x)
+
+
+@settings(max_examples=25, deadline=None)
+@given(st.lists(st.one_of(
+    st.lists(st.one_of(EDGES, st.floats()), min_size=1, max_size=16),
+    st.lists(FINITE, min_size=1, max_size=64)), min_size=1, max_size=12))
+@example([[0.1 * i for i in range(1, 30)]])  # a reordered sum differs
+def test_norm_value_is_spark_norm_bit_for_bit(spark, vecs):
+    """The driver-side query norm api.search uses equals the Spark fold
+    over the same literal, and the literal keeps every value's bits
+    (NaN payloads aside), -0.0, subnormals and infinities included."""
+    r = spark.range(1).select(
+        *[D.norm(D.vector_sql(v)).alias(f"n{i}") for i, v in enumerate(vecs)],
+        *[F.expr(D.vector_sql(v)).alias(f"v{i}")
+          for i, v in enumerate(vecs)]).first()
+    for i, v in enumerate(vecs):
+        assert _bits(r[f"n{i}"]) == _bits(D.norm_value(v)), v
+        assert [_bits(x) for x in r[f"v{i}"]] == [_bits(x) for x in v]

@@ -421,7 +421,7 @@ def test_pit_page_is_isolated_from_head_mutations(spark, sf_dir):
     # PINNED page must still contain them (snapshot isolation), and
     # the live head must not
     assert any(k % 5 == 0 for k, _ in page2)
-    root = artifacts.dir_for("pit_page", sf_dir)
+    root = artifacts.own_dir("pit_page", sf_dir)
     head = Collection.open(spark, root, "orders_pit").read()
     head_keys = {r.o_orderkey for r in head.collect()}
     from unified_vector_database_spark.operators.lifecycle import PIT_MAX
@@ -447,7 +447,7 @@ def test_rollover_generations_partition_the_stream(spark, sf_dir):
     for r in rows[:-1]:
         assert r.n_events >= ROLL_MAX_DOCS
     # the write alias points at the LAST generation
-    root = artifacts.dir_for("rollover", sf_dir)
+    root = artifacts.own_dir("rollover", sf_dir)
     assert Collection.list_aliases(root)["events_write"] \
         == f"events_{rows[-1].gen:06d}"
 

@@ -27,8 +27,13 @@ Compilation rules (scale posture):
 - filter conditions become `where` clauses BELOW the scorer, so
   Catalyst pushes them into the parquet scan (plan-asserted in
   tests/test_api.py);
-- the query vector is one broadcast row; scoring is map-side JVM
-  arithmetic (functions/distance.py) — never a UDF;
+- a malformed spec raises a ValueError naming the bad part before any
+  call into Spark;
+- the query vector is one array literal; scoring is map-side JVM
+  arithmetic (functions/distance.py) — never a UDF. Cosine divides by
+  the frame's stored `_norm_<vec>` column when it has one (a
+  `Collection.read()` frame does), else by the inline norm, and by
+  the query norm folded on the driver: one fold per row, not three;
 - plain top-k compiles to TakeOrderedAndProject; `group_by` ranks
   inside a window PARTITIONED by the group key (bounded partitions),
   `limit` then counts GROUPS ranked by best hit (Qdrant/Milvus group
@@ -39,12 +44,56 @@ Compilation rules (scale posture):
 
 from __future__ import annotations
 
+import datetime
+import decimal
+import numbers
+
 from pyspark.sql import Column, DataFrame, Window as W, functions as F
 
 from .functions import distance as D
 from .registry import register
+from .sources.catalog import NORM_PREFIX
 
 _ASC_METRICS = {m for m, asc in D.ASCENDING.items() if asc}
+
+
+_RANGE = {"gte": Column.__ge__, "gt": Column.__gt__,
+          "lte": Column.__le__, "lt": Column.__lt__}
+_SCALARS = (str, numbers.Real, decimal.Decimal, datetime.date)
+
+
+def _check_condition(c) -> None:
+    """Raise a ValueError naming what is wrong with condition `c`; pure
+    Python, so a malformed spec never reaches the JVM."""
+    if not isinstance(c, dict) or not isinstance(c.get("key"), str):
+        raise ValueError(f"condition needs a string 'key': {c!r}")
+    forms = [f for f in ("match", "any", "range") if f in c]
+    if len(forms) != 1 or len(c) != 2:
+        raise ValueError(f"unknown condition {c!r}: use exactly one of "
+                         "'match', 'any', 'range' beside 'key'")
+    v = c[forms[0]]
+    if forms[0] == "match":
+        if not isinstance(v, _SCALARS):
+            raise ValueError(f"'match' takes a scalar: {c!r}")
+    elif forms[0] == "any":
+        if (not isinstance(v, (list, tuple))
+                or not all(isinstance(x, _SCALARS) for x in v)):
+            raise ValueError(f"'any' takes a list of scalars: {c!r}")
+    elif (not isinstance(v, dict) or not v
+          or set(v) - set(_RANGE)
+          or not all(isinstance(x, _SCALARS) for x in v.values())):
+        raise ValueError(f"'range' takes scalar bounds under "
+                         f"{tuple(_RANGE)}: {c!r}")
+
+
+def _check_filter(spec: dict) -> None:
+    if not isinstance(spec, dict) or set(spec) - {"must", "must_not"}:
+        raise ValueError(f"filter takes 'must' and 'must_not': {spec!r}")
+    for part in spec.values():
+        if not isinstance(part, (list, tuple)):
+            raise ValueError(f"filter clauses are lists: {spec!r}")
+        for c in part:
+            _check_condition(c)
 
 
 def _condition(c: dict) -> Column:
@@ -53,23 +102,18 @@ def _condition(c: dict) -> Column:
         return col == F.lit(c["match"])
     if "any" in c:
         return col.isin(*c["any"])
-    if "range" in c:
-        r, parts = c["range"], []
-        ops = {"gte": col.__ge__, "gt": col.__gt__,
-               "lte": col.__le__, "lt": col.__lt__}
-        for name, op in ops.items():
-            if name in r:
-                parts.append(op(F.lit(r[name])))
-        out = parts[0]
-        for p in parts[1:]:
-            out = out & p
-        return out
-    raise ValueError(f"unknown condition {c!r}")
+    out = None
+    for name, op in _RANGE.items():
+        if name in c["range"]:
+            part = op(col, F.lit(c["range"][name]))
+            out = part if out is None else out & part
+    return out
 
 
 def compile_filter(spec: dict | None) -> Column | None:
     if not spec:
         return None
+    _check_filter(spec)
     out = None
     for c in spec.get("must", ()):
         cond = _condition(c)
@@ -78,6 +122,14 @@ def compile_filter(spec: dict | None) -> Column | None:
         cond = ~_condition(c)
         out = cond if out is None else out & cond
     return out
+
+
+def _query_vector(values) -> list[float]:
+    if (not isinstance(values, (list, tuple)) or not values
+            or not all(isinstance(x, numbers.Real)
+                       and not isinstance(x, bool) for x in values)):
+        raise ValueError("'vector' takes a non-empty list of numbers")
+    return [float(x) for x in values]
 
 
 def search(corpus: DataFrame, spec: dict,
@@ -89,21 +141,36 @@ def search(corpus: DataFrame, spec: dict,
     limit = int(spec.get("limit", 10))
     offset = int(spec.get("offset", 0))
     payload = tuple(spec.get("with_payload", ()))
+    group = spec.get("group_by")
+    q = None
+    if "vector" in spec:
+        if metric not in D.METRICS:
+            raise ValueError(f"unknown metric {metric!r}")
+        q = _query_vector(spec["vector"])
+        if group and offset:
+            raise ValueError("offset is not supported with group_by "
+                             "(matches Qdrant/Milvus group search)")
 
     df = corpus
     pred = compile_filter(spec.get("filter"))
     if pred is not None:
         df = df.where(pred)
 
-    group = spec.get("group_by")
     if group and group["key"] not in payload:
         payload = (*payload, group["key"])
     cols = [F.col(id_col), *[F.col(p) for p in payload]]
-    if "vector" in spec:
-        if metric not in D.METRICS:
-            raise ValueError(f"unknown metric {metric!r}")
-        qvec = F.array(*[F.lit(float(x)) for x in spec["vector"]])
-        score = D.METRICS[metric](D.vec_double(vec_col), qvec)
+    if q is not None:
+        v = D.vec_double(vec_col)
+        if metric == "cosine":
+            # knn.cosine_score's form: one fold per row when the frame
+            # carries the catalog's stored norm (sources/catalog.py),
+            # and the query norm is a literal folded on the driver
+            nv = NORM_PREFIX + vec_col
+            nv = F.col(nv) if nv in corpus.columns else D.norm(v)
+            score = D.safe_div(D.dot(v, D.vector_sql(q)),
+                               nv * F.lit(D.norm_value(q)))
+        else:
+            score = D.METRICS[metric](v, D.vector_sql(q))
         df = df.select(*cols, score.alias("score"))
         if "score_threshold" in spec:
             thr = float(spec["score_threshold"])
@@ -112,9 +179,6 @@ def search(corpus: DataFrame, spec: dict,
         order = (F.col("score").asc() if metric in _ASC_METRICS
                  else F.col("score").desc())
         if group:
-            if offset:
-                raise ValueError("offset is not supported with group_by "
-                                 "(matches Qdrant/Milvus group search)")
             # Qdrant/Milvus group-search semantics: `limit` counts
             # GROUPS, not points. Rank hits inside each group (bounded
             # partitions — group-key cardinality), then rank groups by

@@ -24,12 +24,15 @@ lazy; every action still computes from the parquet inputs.
 On disk, `persisted(kind, path, build)` names a directory by md5 of
 (kind, path) and of `fingerprint(path)`, so an overwritten input gets
 a new directory and the old one is removed. Every derived directory
-is named here: `scratch` hands out the stable-named, emptied directory
-of work that its caller redoes on every call.
+is named here: `scratch` hands out the emptied directory of work that
+its caller redoes on every call. That directory belongs to one process
+(its name carries the pid) and is removed when the process exits, so
+two processes working on one input never empty each other's work.
 """
 
 from __future__ import annotations
 
+import atexit
 import glob
 import hashlib
 import os
@@ -38,6 +41,7 @@ import stat
 import tempfile
 
 _CACHE: dict[tuple, tuple] = {}
+_SCRATCH: set[str] = set()
 
 
 def fingerprint(path: str):
@@ -82,11 +86,25 @@ def dir_for(kind, path: str) -> str:
     return os.path.join(tempfile.gettempdir(), f"uvdb_{_md5((kind, path))}")
 
 
+def own_dir(kind, path: str) -> str:
+    """This process's directory for `kind` derived from `path`."""
+    return f"{dir_for(kind, path)}.{os.getpid()}"
+
+
 def scratch(kind, path: str) -> str:
-    """dir_for(kind, path), emptied: for work redone on every call."""
-    out = dir_for(kind, path)
+    """own_dir(kind, path), emptied: for work redone on every call.
+    Removed when the process exits."""
+    out = own_dir(kind, path)
+    if not _SCRATCH:
+        atexit.register(_remove_scratch)
+    _SCRATCH.add(out)
     shutil.rmtree(out, ignore_errors=True)
     return out
+
+
+def _remove_scratch() -> None:
+    for d in _SCRATCH:
+        shutil.rmtree(d, ignore_errors=True)
 
 
 def persisted(kind, path: str, build) -> str:

@@ -272,7 +272,7 @@ def matryoshka_recall_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
             .select(D.vec_double("embedding").alias("qvec")))
 
     def cos(d):
-        v, qv = F.slice("vec", 1, d), F.slice("qvec", 1, d)
+        v, qv = f"slice(vec, 1, {d})", f"slice(qvec, 1, {d})"
         return D.safe_div(D.dot(v, qv), D.norm(v) * D.norm(qv))
 
     scored = (emb.select("vec_id", D.vec_double("embedding").alias("vec"))

@@ -517,7 +517,7 @@ def session_art(spark: SparkSession, sf_dir: str) -> dict:
         "hnsw_session", tables.table_path(sf_dir, "embeddings"), build, spark)
 
 
-def _score_ids(corpus: DataFrame, qcol: F.Column, ids) -> dict:
+def _score_ids(corpus: DataFrame, qvec_sql: str, ids) -> dict:
     """Cosine of the query against a bounded id set, computed by the
     SAME JVM fold the distributed probe (and the oracle's twin) uses —
     the collected doubles are bit-identical to a full-plan run. A
@@ -527,7 +527,7 @@ def _score_ids(corpus: DataFrame, qcol: F.Column, ids) -> dict:
     idf = spark.createDataFrame([(int(i),) for i in ids], "vec_id bigint")
     return {int(r.vec_id): float(r.score) for r in
             corpus.join(F.broadcast(idf), "vec_id")
-                  .select("vec_id", D.cosine("vec", qcol).alias("score"))
+                  .select("vec_id", D.cosine("vec", qvec_sql).alias("score"))
                   .collect()}
 
 
@@ -549,13 +549,13 @@ def hnsw_probe_driver(spark: SparkSession, corpus: DataFrame, art: dict,
         for s, d in pairs:
             m.setdefault(s, []).append(d)
         adj[lvl] = m
-    qcol = F.array(*[F.lit(float(v)) for v in qvec])
+    qvec_sql = D.vector_sql(qvec)
     scores: dict[int, float] = {}
 
     def ensure(ids) -> None:
         new = [i for i in ids if i not in scores]
         if new:
-            scores.update(_score_ids(corpus, qcol, new))
+            scores.update(_score_ids(corpus, qvec_sql, new))
 
     def top(ids, lim: int) -> list[int]:
         return sorted(ids, key=lambda i: (-scores[i], i))[:lim]

@@ -408,8 +408,7 @@ def lsh_signature(vec_col: str, planes: list[list[float]]) -> F.Column:
     map-only, JVM-side."""
     bits = []
     for i, p in enumerate(planes):
-        plane = F.array(*[F.lit(float(x)) for x in p])
-        s = D.dot(vec_col, plane)
+        s = D.dot(vec_col, D.vector_sql(p))
         bits.append(F.when(s >= 0, F.lit(1 << i)).otherwise(F.lit(0)).cast("long"))
     out = bits[0]
     for b in bits[1:]:
@@ -446,8 +445,7 @@ def lsh_bucket_knn(corpus: DataFrame, query_df: DataFrame, k: int,
         # every mask term would blow the expression tree up 2^t-fold
         margins = F.array_sort(F.array(*[
             F.struct(
-                F.abs(D.dot("qvec",
-                            F.array(*[F.lit(float(x)) for x in p]))).alias("m"),
+                F.abs(D.dot("qvec", D.vector_sql(p))).alias("m"),
                 F.lit(i).alias("i"))
             for i, p in enumerate(planes)]))
         masks = []

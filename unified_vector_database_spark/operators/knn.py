@@ -718,8 +718,8 @@ def matryoshka_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
                         D.vec_double("embedding").alias("vec"))
     q = (emb.where(F.col("vec_id") == 0)
             .select(D.vec_double("embedding").alias("qvec")))
-    head = F.slice("vec", 1, 16)
-    qhead = F.slice("qvec", 1, 16)
+    head = "slice(vec, 1, 16)"
+    qhead = "slice(qvec, 1, 16)"
     short = (corpus.crossJoin(F.broadcast(q))
                    .select("vec_id", "label", "vec", "qvec",
                            D.safe_div(D.dot(head, qhead),
@@ -796,8 +796,8 @@ LIMIT 10
 
 def _maxsim_score_col() -> F.Column:
     """JVM twin of _maxsim_expr_sql over columns (vec, qvec)."""
-    def sub(col: str, i: int) -> F.Column:
-        return F.slice(col, i * MAXSIM_SUBDIM + 1, MAXSIM_SUBDIM)
+    def sub(col: str, i: int) -> str:
+        return f"slice({col}, {i * MAXSIM_SUBDIM + 1}, {MAXSIM_SUBDIM})"
 
     per_q = [
         F.greatest(*[

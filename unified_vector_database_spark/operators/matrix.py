@@ -62,7 +62,7 @@ def distance_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
                     F.col("a.vec_id") != F.col("b.vec_id"))
               .select(F.col("a.vec_id").alias("id_a"),
                       F.col("b.vec_id").alias("id_b"),
-                      F.round(D.cosine(F.col("a.emb"), F.col("b.emb")), 6)
+                      F.round(D.cosine("a.emb", "b.emb"), 6)
                        .alias("score")))
     w = W.partitionBy("id_a").orderBy(F.desc("score"), "id_b")
     return (pairs.withColumn("rank", F.row_number().over(w))

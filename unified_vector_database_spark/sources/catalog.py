@@ -5,6 +5,20 @@ snapshot/restore) as versioned parquet + a JSON manifest.
 Layout:  <base>/<name>/manifest.json
          <base>/<name>/data_v<N>/part-*.parquet
 
+The manifest names the current version, its row count and its schema,
+all recorded by the commit's write job: `count()` needs no scan and
+`read()` passes the schema to the reader, so opening a collection
+fires no Spark job (a manifest without a schema, written before the
+schema was recorded, is read with schema inference).
+
+Every vector column `<vec>` (array<float|double>) has a double column
+`_norm_<vec>` beside it: `D.norm(D.vec_double(<vec>))`, computed in the
+commit's write job for the rows the commit brings in (an upsert batch,
+every row when an update assigns the vector, rows of a version written
+before the column existed). It is the same expression, so the stored
+value is bit-identical to the inline norm, and cosine search
+(api.search) reads it instead of folding each row's norm again.
+
 Writes are copy-on-write: a new data_v<N+1> directory is fully
 written, then the manifest pointer flips — readers of v<N> are never
 disturbed, which is exactly how object-store tables (and the
@@ -23,8 +37,12 @@ from __future__ import annotations
 from dataclasses import dataclass
 
 from pyspark.sql import Column, DataFrame, SparkSession, functions as F
+from pyspark.sql.types import ArrayType, DoubleType, FloatType, StructType
 
+from ..functions import distance as D
 from . import fsio
+
+NORM_PREFIX = "_norm_"
 
 
 @dataclass
@@ -44,6 +62,10 @@ class Manifest:
     # compact() read it instead of re-scanning parquet footers. None
     # (pre-r9 manifests) -> callers fall back to a Spark count.
     rows: int | None = None
+    # Schema of the CURRENT version as a read returns it (StructType
+    # JSON), recorded at commit time so read() infers nothing. None
+    # (older manifests, or after restore) -> schema inference.
+    schema: dict | None = None
 
     def to_json(self) -> dict:
         return self.__dict__.copy()
@@ -177,26 +199,21 @@ class Collection:
         """Keep-latest upsert: existing rows whose id appears in the
         batch are replaced (anti-join), then the batch is appended.
         One shuffle on the id column; at scale the anti-join broadcasts
-        when the batch is small."""
+        when the batch is small. A batch vector of the wrong dim fails
+        the commit (ValueError) with the collection unchanged."""
         m = self.describe()
         if m.id_col not in df.columns:
             raise ValueError(
                 f"batch is missing the id column {m.id_col!r}")
-        if m.dim is not None:
-            vec_cols = [f.name for f in df.schema.fields
-                        if f.dataType.typeName() == "array"]
-            if vec_cols:
-                bad = df.where(
-                    F.size(vec_cols[0]) != m.dim).limit(1).count()
-                if bad:
-                    raise ValueError(
-                        f"vector dim mismatch: collection expects {m.dim}")
+        batch = _with_norms(df.drop(*[
+            NORM_PREFIX + v for v in _vector_columns(df.schema)]))
         current = self.read()
         if current is not None:
-            kept = current.join(df.select(m.id_col), m.id_col, "left_anti")
-            out = kept.unionByName(df)
+            kept = _with_norms(current).join(
+                df.select(m.id_col), m.id_col, "left_anti")
+            out = kept.unionByName(batch)
         else:
-            out = df
+            out = batch
         return self._commit(out, m)
 
     def delete(self, predicate) -> int:
@@ -224,6 +241,9 @@ class Collection:
             lit = value if isinstance(value, Column) else F.lit(value)
             out = out.withColumn(
                 col, F.when(predicate, lit).otherwise(F.col(col)))
+        # an assigned vector gets its norm recomputed by the commit
+        out = out.drop(*[NORM_PREFIX + v for v in _vector_columns(
+            current.schema) if v in assignments])
         return self._commit(out, m)
 
     # ----------------------------------------------------------- reads
@@ -239,13 +259,17 @@ class Collection:
             if tag not in snaps:
                 raise ValueError(f"no snapshot {tag!r}")
             version = snaps[tag]
-        v = self.describe().version if version is None else version
+        m = self.describe()
+        v = m.version if version is None else version
         if v == 0:
             return None
         path = self._data_path(v)
         if not fsio.isdir(path):
             raise ValueError(f"version {v} does not exist (vacuumed?)")
-        return self.spark.read.parquet(path)
+        reader = self.spark.read
+        if v == m.version and m.schema is not None:
+            reader = reader.schema(StructType.fromJson(m.schema))
+        return reader.parquet(path)
 
     def count(self) -> int:
         m = self.describe()
@@ -331,9 +355,11 @@ class Collection:
             raise ValueError(f"no snapshot {tag!r}")
         m = self.describe()
         m.version = snaps[tag]
-        # the recorded count belongs to the version being abandoned;
-        # the restored version's count is unknown here (None -> scan)
+        # the recorded count and schema belong to the version being
+        # abandoned; the restored version's are unknown here (None ->
+        # scan and schema inference)
         m.rows = None
+        m.schema = None
         self._write_manifest(m)
 
     # --------------------------------------------------------- private
@@ -364,14 +390,64 @@ class Collection:
         # — the previous read-back count was a second full job per
         # commit (file listing + footer scan), paid by every
         # upsert/delete/update/compact across the lifecycle operators.
+        # The dim check is observed by the same job: a mismatch removes
+        # the unpublished directory, and the manifest never moves.
+        df = _with_norms(df)
+        vecs = _vector_columns(df.schema)
+        bad = (F.size(vecs[0]) != m.dim if m.dim is not None and vecs
+               else F.lit(False))
         obs = Observation()
-        writer = (df.observe(obs, F.count(F.lit(1)).alias("n"))
+        writer = (df.observe(obs, F.count(F.lit(1)).alias("n"),
+                             F.count(F.when(bad, 1)).alias("bad"))
                   .write.mode("overwrite"))
         if m.partition_by:
             writer = writer.partitionBy(*m.partition_by)
-        writer.parquet(self._data_path(new_version))
-        n = int(obs.get["n"])
+        path = self._data_path(new_version)
+        writer.parquet(path)
+        seen = obs.get
+        if seen["bad"]:
+            fsio.rmtree(path)
+            raise ValueError(
+                f"vector dim mismatch: collection expects {m.dim}")
         m.version = new_version
-        m.rows = n
+        m.rows = int(seen["n"])
+        m.schema = _read_schema(df.schema, m.partition_by)
         self._write_manifest(m)
-        return n
+        return m.rows
+
+
+def _vector_columns(schema: StructType) -> list[str]:
+    return [f.name for f in schema.fields
+            if isinstance(f.dataType, ArrayType)
+            and isinstance(f.dataType.elementType, (FloatType, DoubleType))]
+
+
+def _with_norms(df: DataFrame) -> DataFrame:
+    """`df` with `_norm_<vec>` for each vector column that lacks one."""
+    for v in _vector_columns(df.schema):
+        if NORM_PREFIX + v not in df.columns:
+            quoted = "`" + v.replace("`", "``") + "`"
+            df = df.withColumn(NORM_PREFIX + v,
+                               D.norm(D.vec_double(quoted)))
+    return df
+
+
+def _read_schema(schema: StructType, partition_by) -> dict:
+    """The schema a parquet read of the written files infers, as JSON:
+    partition columns last, every field and element nullable."""
+    parts = partition_by or []
+    fields = ([f.jsonValue() for f in schema.fields if f.name not in parts]
+              + [{**schema[p].jsonValue(), "metadata": {}} for p in parts])
+    return _nullable({"type": "struct", "fields": fields})
+
+
+def _nullable(t):
+    if isinstance(t, list):
+        return [_nullable(x) for x in t]
+    if not isinstance(t, dict):
+        return t
+    t = {k: _nullable(x) for k, x in t.items()}
+    for k in ("nullable", "containsNull", "valueContainsNull"):
+        if k in t:
+            t[k] = True
+    return t
