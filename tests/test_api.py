@@ -285,3 +285,165 @@ def test_stored_norm_cosine_folds_once(stored):
         return plan.count("aggregate(")
     assert folds(frame) == 1
     assert folds(raw) == 2  # the query norm is a literal either way
+
+
+# ---- one-scan group search and OFFSET paging against the earlier
+# shapes: a two-scan group join and array-sorted pages ----
+
+def _head_group(df, asc, gkey, size, limit, id_col="vec_id"):
+    """Group search as a window plus a broadcast join of the top groups
+    (two scans of the corpus)."""
+    from pyspark.sql import Window as W
+
+    order = F.col("score").asc() if asc else F.col("score").desc()
+    w = W.partitionBy(gkey).orderBy(order, F.col(id_col))
+    ranked = (df.withColumn("rank", F.row_number().over(w))
+                .where(F.col("rank") <= size))
+    gorder = F.col("_gbest").asc() if asc else F.col("_gbest").desc()
+    top = (ranked.where(F.col("rank") == 1)
+                 .select(F.col(gkey).alias("_gk"),
+                         F.col("score").alias("_gbest"),
+                         F.col(id_col).alias("_gid"))
+                 .orderBy(gorder, "_gid").limit(limit))
+    return (ranked.join(F.broadcast(top), F.col(gkey) == F.col("_gk"))
+                  .orderBy(gorder, "_gid", "rank")
+                  .drop("_gk", "_gbest", "_gid"))
+
+
+def _head_page(df, asc, payload, offset, limit, id_col="vec_id"):
+    """An offset page cut to offset+limit rows, then array-sorted and
+    exploded."""
+    order = F.col("score").asc() if asc else F.col("score").desc()
+    top = df.orderBy(order, F.col(id_col)).limit(offset + limit)
+    arr = top.agg(F.array_sort(F.collect_list(F.struct(
+        (F.col("score") * (1.0 if asc else -1.0)).alias("_ns"),
+        F.col(id_col).alias("_id"),
+        F.struct("score", *payload).alias("_row")))).alias("a"))
+    return (arr.select(F.posexplode("a").alias("_pos", "_s"))
+               .where(F.col("_pos") >= offset)
+               .select(F.col("_s._id").alias(id_col),
+                       *[F.col(f"_s._row.{p}").alias(p) for p in payload],
+                       F.col("_s._row.score").alias("score")))
+
+
+def _head_scroll(df, payload, offset, limit, id_col="vec_id"):
+    page = df.select(id_col, *payload).orderBy(id_col).limit(offset + limit)
+    arr = page.agg(F.array_sort(F.collect_list(F.struct(
+        F.col(id_col).alias("_id"),
+        F.struct(*payload).alias("_row") if payload
+        else F.lit(0).alias("_row")))).alias("a"))
+    return (arr.select(F.posexplode("a").alias("_pos", "_s"))
+               .where(F.col("_pos") >= offset)
+               .select(F.col("_s._id").alias(id_col),
+                       *[F.col(f"_s._row.{p}").alias(p) for p in payload]))
+
+
+@pytest.fixture(scope="module")
+def shaped(spark, tmp_path_factory):
+    """(frame, query): 40 rows of dim 4 in groups of 1 to 6 rows, with
+    duplicated vectors (tied scores), a group of zero vectors (NULL
+    cosine) and a row with no group."""
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    rng = np.random.default_rng(11)
+    x = rng.standard_normal((40, 4)).astype(np.float32)
+    x[20:24] = x[3]                # ties across and inside groups
+    x[30:33] = 0.0                 # group 9: NULL cosine only
+    label = [min(i // 4, 8) if i < 30 else 9 for i in range(40)]
+    label[0], label[1], label[2] = 10, 11, 12   # groups of one row
+    label[39] = None
+    d = tmp_path_factory.mktemp("shaped")
+    pq.write_table(pa.table({
+        "vec_id": pa.array(range(40), pa.int64()),
+        "label": pa.array(label, pa.int32()),
+        "embedding": pa.array(list(x), pa.list_(pa.float32())),
+    }), str(d / "in.parquet"))
+    frame = spark.read.parquet(str(d / "in.parquet"))
+    return frame, [float(v) for v in x[5]]
+
+
+def _scored(frame, q, metric, payload=("label",)):
+    return frame.select("vec_id", *payload, D.METRICS[metric](
+        "embedding", D.vector_sql(q)).alias("score"))
+
+
+@pytest.mark.parametrize("metric", ["cosine", "dot", "l2"])
+@pytest.mark.parametrize("zero_query", [False, True])
+@pytest.mark.parametrize("size, limit", [(1, 3), (3, 4), (5, 20)])
+def test_one_scan_group_matches_two_scan_shape(shaped, metric, zero_query,
+                                               size, limit):
+    frame, q = shaped
+    q = [0.0] * len(q) if zero_query else q
+    got = search(frame, {"vector": q, "metric": metric, "limit": limit,
+                         "group_by": {"key": "label", "group_size": size}})
+    want = _head_group(_scored(frame, q, metric), D.ASCENDING[metric],
+                       "label", size, limit)
+    assert got.columns == want.columns
+    rows = got.collect()
+    assert rows and _bits(rows) == _bits(want.collect())
+
+
+@pytest.mark.parametrize("metric", ["cosine", "dot", "l2"])
+@pytest.mark.parametrize("zero_query", [False, True])
+@pytest.mark.parametrize("offset, limit", [(3, 5), (20, 7), (38, 5),
+                                           (40, 3), (60, 2)])
+def test_offset_pages_match_array_sorted_shape(shaped, metric, zero_query,
+                                               offset, limit):
+    """A page is the slice of the unpaged order. The array-sorted shape
+    sorted a NULL score first, against the top-k's NULLS LAST, so its
+    pages differed where a slice held NULL and non-NULL scores."""
+    frame, q = shaped
+    q = [0.0] * len(q) if zero_query else q
+    spec = {"vector": q, "metric": metric, "with_payload": ["label"]}
+    got = search(frame, {**spec, "limit": limit, "offset": offset})
+    want = _head_page(_scored(frame, q, metric), D.ASCENDING[metric],
+                      ("label",), offset, limit)
+    assert got.columns == want.columns
+    page = _bits(got.collect())
+    top = search(frame, {**spec, "limit": offset + limit}).collect()
+    assert page == _bits(top[offset:])
+    assert len(page) == max(0, min(limit, 40 - offset))
+    mixed = len({r.score is None for r in top}) == 2
+    assert page == _bits(want.collect()) or mixed
+
+
+@pytest.mark.parametrize("payload", [(), ("label",)])
+@pytest.mark.parametrize("offset, limit", [(0, 5), (4, 7), (38, 5),
+                                           (45, 5)])
+def test_scroll_pages_match_array_sorted_shape(shaped, payload, offset,
+                                               limit):
+    frame, _ = shaped
+    filt = {"must_not": [{"key": "label", "match": 2}]}
+    got = search(frame, {"limit": limit, "offset": offset,
+                         "with_payload": list(payload), "filter": filt})
+    want = _head_scroll(frame.where(compile_filter(filt)), payload,
+                        offset, limit)
+    assert got.columns == want.columns
+    assert _bits(got.collect()) == _bits(want.collect())
+
+
+def _executed(df) -> str:
+    """The final physical plan after a run (AQE's, not its initial)."""
+    df.collect()
+    plan = df._jdf.queryExecution().executedPlan()
+    if plan.getClass().getSimpleName() == "AdaptiveSparkPlanExec":
+        plan = plan.executedPlan()
+    return plan.toString()
+
+
+def test_group_search_scans_once(shaped):
+    frame, q = shaped
+    plan = _executed(search(frame, {"vector": q, "limit": 3, "group_by": {
+        "key": "label", "group_size": 2}}))
+    assert plan.count("FileScan") == 1, plan
+
+
+def test_offset_and_scroll_pages_run_no_generate(shaped):
+    frame, q = shaped
+    for spec in ({"vector": q, "limit": 5, "offset": 7},
+                 {"limit": 5, "offset": 7, "with_payload": ["label"]}):
+        plan = _executed(search(frame, spec))
+        assert "Generate" not in plan and "TakeOrderedAndProject" in plan, \
+            plan

@@ -299,3 +299,97 @@ def test_package_zip_named_by_sources(tmp_path):
     assert edited != first
     with zipfile.ZipFile(edited) as zf:
         assert zf.read(f"{PKG.name}/registry.py").endswith(b"# edited\n")
+
+
+def _stages(spark, fn) -> int:
+    """Number of stages of the Spark jobs fn() ran, by job group."""
+    import time
+    import uuid
+    sc = spark.sparkContext
+    group = f"test-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    time.sleep(0.5)  # job-start events reach the status store async
+    tracker = sc.statusTracker()
+    return sum(len(tracker.getJobInfo(j).stageIds)
+               for j in tracker.getJobIdsForGroup(group))
+
+
+def test_load_parallel_shuffles_once_per_table(spark, write_embeddings):
+    """The repartition runs when the table is first loaded; every later
+    action over the frame is one stage per job: no shuffle-map stage."""
+    from unified_vector_database_spark import tables
+
+    sf, x = write_embeddings(1)
+    first = tables.load_parallel(spark, sf, "embeddings", "vec_id")
+    assert first.rdd.getNumPartitions() >= 2
+    for _ in range(2):
+        df = tables.load_parallel(spark, sf, "embeddings", "vec_id")
+        assert df is first
+        assert _stages(spark, lambda: df.select("vec_id").collect()) == 1
+    assert sorted(r.vec_id for r in first.collect()) == list(range(len(x)))
+
+
+def test_load_parallel_rebuilds_on_overwrite(spark, write_embeddings,
+                                             tmp_path, monkeypatch):
+    """An overwritten table gets a new copy; the old copy is removed and
+    nothing stays cached in the session."""
+    from unified_vector_database_spark import tables
+
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path / "tmp"))
+    os.makedirs(tempfile.tempdir)
+    persistent = spark.sparkContext._jsc.getPersistentRDDs().size()
+    sf, _ = write_embeddings(1)
+    old = tables.load_parallel(spark, sf, "embeddings", "vec_id")
+    copies = os.listdir(tempfile.tempdir)
+    assert len(copies) == 1
+    sf, x = write_embeddings(2)
+    new = tables.load_parallel(spark, sf, "embeddings", "vec_id")
+    assert new is not old
+    assert len(os.listdir(tempfile.tempdir)) == 1
+    assert os.listdir(tempfile.tempdir) != copies
+    got = {r.vec_id: r.embedding for r in new.collect()}
+    assert [got[i] for i in range(len(x))] == x.tolist()
+    assert spark.sparkContext._jsc.getPersistentRDDs().size() == persistent
+
+
+def test_load_parallel_after_session_restart(tmp_path):
+    """A stopped session's frame is never served: the restarted session
+    gets a frame of its own over the same copy, and no second one."""
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    x = np.arange(40 * 4, dtype=np.float32).reshape(40, 4)
+    pq.write_table(pa.table({
+        "vec_id": pa.array(range(40), pa.int64()),
+        "embedding": pa.array(list(x), pa.list_(pa.float32()))}),
+        str(tmp_path / "embeddings.parquet"))
+    code = ("import os, sys, tempfile\n"
+            "from unified_vector_database_spark import tables\n"
+            "from unified_vector_database_spark.session import get_spark\n"
+            "tempfile.tempdir, sf = sys.argv[1:]\n"
+            "out = []\n"
+            "for app in ('one', 'two'):\n"
+            "    spark = get_spark(app, cpus=4, shuffle_partitions=4)\n"
+            "    df = tables.load_parallel(spark, sf, 'embeddings', 'vec_id')\n"
+            "    assert df.sparkSession._jsparkSession.equals(\n"
+            "        spark._jsparkSession)\n"
+            "    out.append((id(df), df.count(), [f for f in os.listdir(\n"
+            "        tempfile.tempdir) if not f.endswith('.zip')]))\n"
+            "    spark.stop()\n"
+            "(a, n1, d1), (b, n2, d2) = out\n"
+            "print(a != b, n1, n2, len(d1), d1 == d2)\n")
+    tmp = tmp_path / "tmp"
+    tmp.mkdir()
+    env = dict(os.environ, PYTHONPATH=str(PKG.parent),
+               SPARK_GRAFT_DRIVER_MEM="1g")
+    got = subprocess.run(
+        [sys.executable, "-c", code, str(tmp), str(tmp_path)], env=env,
+        capture_output=True, text=True, timeout=300)
+    assert got.returncode == 0, got.stderr[-2000:]
+    assert got.stdout.split()[-5:] == ["True", "40", "40", "1", "True"]

@@ -58,6 +58,39 @@ def test_update_metadata(spark, tmp_path):
                     3: "new", 4: "new", 5: "new"}
 
 
+def test_update_predicate_reads_the_row_before_the_update(spark, tmp_path):
+    """An assignment to a column the predicate reads does not hide the
+    row from the assignments after it."""
+    col = Collection.create(spark, str(tmp_path), "c3b")
+    col.upsert(spark.createDataFrame(
+        [Row(id=i, embedding=[float(i), 1.0], label=i % 2, tag="a")
+         for i in range(4)]))
+    assert col.update(F.col("label") == 1, label=2, tag="x") == 4
+    got = {r.id: (r.label, r.tag) for r in col.read().collect()}
+    assert got == {0: (0, "a"), 1: (2, "x"), 2: (0, "a"), 3: (2, "x")}
+    assert "_update_hit" not in col.read().columns
+    with pytest.raises(ValueError, match="unknown columns"):
+        col.update(F.col("label") == 2, colour="red")
+
+
+def test_commit_after_restore_keeps_pinned_versions(spark, tmp_path):
+    """A commit after restore writes above every published version, so a
+    snapshot of a later version still reads what it pinned."""
+    col = Collection.create(spark, str(tmp_path), "c3c", id_col="id",
+                            dim=2)
+    col.upsert(spark.createDataFrame(_rows(0, 3, "a")))
+    col.snapshot("one")
+    col.upsert(spark.createDataFrame(_rows(3, 3, "b")))
+    col.snapshot("two")
+    col.restore("one")
+    col.upsert(spark.createDataFrame(_rows(9, 1, "c")))
+    assert col.describe().version == 3
+    assert sorted(r.id for r in col.read(tag="two").collect()) == \
+        list(range(6))
+    assert sorted(r.id for r in col.read(tag="one").collect()) == [0, 1, 2]
+    assert sorted(r.id for r in col.read().collect()) == [0, 1, 2, 9]
+
+
 def test_delete_ids_and_open(spark, tmp_path):
     base = str(tmp_path)
     col = Collection.create(spark, base, "c2")

@@ -75,3 +75,71 @@ def test_norm_value_is_spark_norm_bit_for_bit(spark, vecs):
     for i, v in enumerate(vecs):
         assert _bits(r[f"n{i}"]) == _bits(D.norm_value(v)), v
         assert [_bits(x) for x in r[f"v{i}"]] == [_bits(x) for x in v]
+
+
+# The transform-first fold forms the builders had before the cast moved
+# into the lambda: widen each array with transform, then fold.
+def _widened(a: str) -> str:
+    return f"transform({a}, x -> CAST(x AS DOUBLE))"
+
+
+def _dot_tf(a: str, b: str) -> str:
+    return (f"aggregate(zip_with({_widened(a)}, {_widened(b)}, "
+            "(x, y) -> x * y), 0D, (acc, x) -> acc + x)")
+
+
+TRANSFORM_FIRST = {
+    "dot": _dot_tf,
+    "norm": lambda a, b: f"sqrt({_dot_tf(a, a)})",
+    "l2": lambda a, b: (
+        f"sqrt(aggregate(zip_with({_widened(a)}, {_widened(b)}, "
+        "(x, y) -> (x - y) * (x - y)), 0D, (acc, x) -> acc + x))"),
+    "cosine": lambda a, b: (
+        f"try_divide({_dot_tf(a, b)}, sqrt({_dot_tf(a, a)}) "
+        f"* sqrt({_dot_tf(b, b)}))"),
+}
+BUILDERS = {"dot": D.dot, "norm": lambda a, b: D.norm(a), "l2": D.l2,
+            "cosine": D.cosine}
+
+ELEMENT = st.one_of(EDGES, st.floats(), FINITE, st.none())
+PAIR = st.integers(0, 6).flatmap(lambda n: st.tuples(
+    st.lists(ELEMENT, min_size=n, max_size=n),
+    st.one_of(st.lists(ELEMENT, min_size=n, max_size=n),
+              st.lists(ELEMENT, max_size=7))))
+
+
+def _bits_or_none(x):
+    return None if x is None else _bits(x)
+
+
+@settings(max_examples=25, deadline=None)
+@given(st.lists(PAIR, min_size=1, max_size=8))
+@example([([-0.0, 5e-324, 1e308], [1e308, -0.0, 2.2250738585072014e-308]),
+          ([math.nan, 1.0], [math.inf, -math.inf]),
+          ([1.0, None, 2.0], [3.0, 4.0, 5.0]),
+          ([1.0, 2.0], [1.0, 2.0, 3.0])])
+def test_cast_in_lambda_folds_equal_transform_first(spark, pairs):
+    """dot, norm, l2 and cosine over raw array<float> and array<double>
+    columns equal the transform-first forms bit for bit: NaN, the
+    infinities, -0.0, subnormals, values near 1e308 and NULL elements
+    included, and NULL for arrays of different lengths."""
+    from pyspark.sql.types import (
+        ArrayType, DoubleType, FloatType, StructField, StructType,
+    )
+
+    schema = StructType([StructField(n, ArrayType(t)) for n, t in (
+        ("af", FloatType()), ("bf", FloatType()),
+        ("ad", DoubleType()), ("bd", DoubleType()))])
+    df = spark.createDataFrame([(a, b, a, b) for a, b in pairs], schema)
+    exprs = [(f"{k}_{c}", BUILDERS[k](a, b),
+              F.expr(TRANSFORM_FIRST[k](a, b)))
+             for k in BUILDERS for c, (a, b) in (("f", ("af", "bf")),
+                                                  ("d", ("ad", "bd")))]
+    rows = df.select(*[e.alias(f"new_{n}") for n, e, _ in exprs],
+                     *[e.alias(f"old_{n}") for n, _, e in exprs]).collect()
+    for (a, b), r in zip(pairs, rows):
+        for n, _, _ in exprs:
+            assert _bits_or_none(r[f"new_{n}"]) == \
+                _bits_or_none(r[f"old_{n}"]), (n, a, b)
+            if len(a) != len(b) and not n.startswith("norm"):
+                assert r[f"new_{n}"] is None, (n, a, b)

@@ -30,16 +30,24 @@ Compilation rules (scale posture):
 - a malformed spec raises a ValueError naming the bad part before any
   call into Spark;
 - the query vector is one array literal; scoring is map-side JVM
-  arithmetic (functions/distance.py) — never a UDF. Cosine divides by
-  the frame's stored `_norm_<vec>` column when it has one (a
-  `Collection.read()` frame does), else by the inline norm, and by
-  the query norm folded on the driver: one fold per row, not three;
-- plain top-k compiles to TakeOrderedAndProject; `group_by` ranks
-  inside a window PARTITIONED by the group key (bounded partitions),
-  `limit` then counts GROUPS ranked by best hit (Qdrant/Milvus group
-  search) and the ≤limit winner set broadcasts back into the plan;
-  `offset` pages through the bounded top slice only (and is rejected
-  under `group_by`, matching the backends' group-search APIs).
+  arithmetic over the raw vector column (functions/distance.py) —
+  never a UDF. Cosine divides by the frame's stored `_norm_<vec>`
+  column when it has one (a `Collection.read()` frame does), else by
+  the inline norm, and by the query norm folded on the driver: one
+  fold per row, not three;
+- plain top-k compiles to TakeOrderedAndProject; `offset` pages with
+  Spark's own OFFSET, so a page is one TakeOrderedAndProject(limit =
+  offset + limit, offset), and the no-vector scroll pages the same
+  way in id order;
+- `group_by` scans and scores once: hits are ranked inside a window
+  PARTITIONED by the group key (bounded partitions), an aggregate on
+  the same partitioning folds each group's top `group_size` hits into
+  one row, and `limit` then counts GROUPS ranked by best hit
+  (Qdrant/Milvus group search) in one TakeOrdered. `offset` is
+  rejected under `group_by`, matching the backends' group-search
+  APIs;
+- no compiled shape holds an unpartitioned window (plan-asserted in
+  tests/test_api.py).
 """
 
 from __future__ import annotations
@@ -159,83 +167,63 @@ def search(corpus: DataFrame, spec: dict,
     if group and group["key"] not in payload:
         payload = (*payload, group["key"])
     cols = [F.col(id_col), *[F.col(p) for p in payload]]
-    if q is not None:
-        v = D.vec_double(vec_col)
-        if metric == "cosine":
-            # knn.cosine_score's form: one fold per row when the frame
-            # carries the catalog's stored norm (sources/catalog.py),
-            # and the query norm is a literal folded on the driver
-            nv = NORM_PREFIX + vec_col
-            nv = F.col(nv) if nv in corpus.columns else D.norm(v)
-            score = D.safe_div(D.dot(v, D.vector_sql(q)),
-                               nv * F.lit(D.norm_value(q)))
-        else:
-            score = D.METRICS[metric](v, D.vector_sql(q))
-        df = df.select(*cols, score.alias("score"))
-        if "score_threshold" in spec:
-            thr = float(spec["score_threshold"])
-            df = df.where(F.col("score") <= thr if metric in _ASC_METRICS
-                          else F.col("score") >= thr)
-        order = (F.col("score").asc() if metric in _ASC_METRICS
-                 else F.col("score").desc())
-        if group:
-            # Qdrant/Milvus group-search semantics: `limit` counts
-            # GROUPS, not points. Rank hits inside each group (bounded
-            # partitions — group-key cardinality), then rank groups by
-            # their best hit and keep the top `limit`; the winner set
-            # is ≤limit rows so it broadcasts back into the plan, and
-            # the output gets a deterministic (group rank, rank) order.
-            gkey = group["key"]
-            w = W.partitionBy(gkey).orderBy(order, F.col(id_col))
-            ranked = (df.withColumn("rank", F.row_number().over(w))
-                        .where(F.col("rank")
-                               <= int(group.get("group_size", 1))))
-            gorder = (F.col("_gbest").asc() if metric in _ASC_METRICS
-                      else F.col("_gbest").desc())
-            top_groups = (ranked.where(F.col("rank") == 1)
-                                .select(F.col(gkey).alias("_gk"),
-                                        F.col("score").alias("_gbest"),
-                                        F.col(id_col).alias("_gid"))
-                                .orderBy(gorder, "_gid")
-                                .limit(limit))
-            return (ranked.join(F.broadcast(top_groups),
-                                F.col(gkey) == F.col("_gk"))
-                          .orderBy(gorder, "_gid", "rank")
-                          .drop("_gk", "_gbest", "_gid"))
-        if offset:
-            # page via the bounded-ranks shape (hybrid.bounded_ranks):
-            # TakeOrdered cuts to offset+limit rows first, then an
-            # array-sort ranks them with NO window operator — a global
-            # rank window would run single-partition even over the
-            # bounded slice (Catalyst folds literal partition keys)
-            top = df.orderBy(order, F.col(id_col)).limit(offset + limit)
-            sign = 1.0 if metric in _ASC_METRICS else -1.0
-            arr = top.agg(F.array_sort(F.collect_list(F.struct(
-                (F.col("score") * sign).alias("_ns"),
-                F.col(id_col).alias("_id"),
-                F.struct("score", *payload).alias("_row")))).alias("a"))
-            return (arr.select(F.posexplode("a").alias("_pos", "_s"))
-                       .where(F.col("_pos") >= offset)
-                       .select(F.col("_s._id").alias(id_col),
-                               *[F.col(f"_s._row.{p}").alias(p)
-                                 for p in payload],
-                               F.col("_s._row.score").alias("score")))
-        return df.orderBy(order, F.col(id_col)).limit(limit)
+    if q is None:
+        # no vector: a filtered scroll page in id order
+        return df.select(*cols).orderBy(id_col).limit(offset + limit) \
+                 .offset(offset)
+    if metric == "cosine":
+        # knn.cosine_score's form: one fold per row when the frame
+        # carries the catalog's stored norm (sources/catalog.py), and
+        # the query norm is a literal folded on the driver
+        nv = NORM_PREFIX + vec_col
+        nv = F.col(nv) if nv in corpus.columns else D.norm(vec_col)
+        score = D.safe_div(D.dot(vec_col, D.vector_sql(q)),
+                           nv * F.lit(D.norm_value(q)))
+    else:
+        score = D.METRICS[metric](vec_col, D.vector_sql(q))
+    df = df.select(*cols, score.alias("score"))
+    asc = metric in _ASC_METRICS
+    if "score_threshold" in spec:
+        thr = float(spec["score_threshold"])
+        df = df.where(F.col("score") <= thr if asc
+                      else F.col("score") >= thr)
+    order = F.col("score").asc() if asc else F.col("score").desc()
+    if group:
+        return _group_search(df, order, asc, id_col, payload, group, limit)
+    return df.orderBy(order, F.col(id_col)).limit(offset + limit) \
+             .offset(offset)
 
-    # no vector: a filtered scroll page in id order; offset pages via
-    # the bounded-ranks shape (TakeOrdered to offset+limit rows, then
-    # array-sort ranks the slice — no unpartitioned window)
-    page = df.select(*cols).orderBy(id_col).limit(offset + limit)
-    if not offset:
-        return page
-    arr = page.agg(F.array_sort(F.collect_list(F.struct(
-        F.col(id_col).alias("_id"),
-        F.struct(*payload).alias("_row") if payload
-        else F.lit(0).alias("_row")))).alias("a"))
-    return (arr.select(F.posexplode("a").alias("_pos", "_s"))
-               .where(F.col("_pos") >= offset)
-               .select(F.col("_s._id").alias(id_col),
-                       *[F.col(f"_s._row.{p}").alias(p) for p in payload]))
+
+def _group_search(df: DataFrame, order: Column, asc: bool, id_col: str,
+                  payload: tuple, group: dict, limit: int) -> DataFrame:
+    """Qdrant/Milvus group search over the scored frame `df`: `limit`
+    counts GROUPS, not points.
+
+    One pass: hits are ranked inside a window partitioned by the group
+    key (bounded partitions, group-key cardinality; `rank <=
+    group_size` becomes a WindowGroupLimit that also cuts each input
+    partition before the shuffle). The aggregate that follows needs no
+    second shuffle; it folds each group into one row holding its hits
+    in rank order, so the group's best hit is the array's head. The
+    top `limit` group rows, by (best score, best id), are a
+    TakeOrdered, and the output is their hits in (group rank, rank)
+    order. Rows whose group key is NULL take a group's place in that
+    ranking but are not returned."""
+    gkey = group["key"]
+    w = W.partitionBy(gkey).orderBy(order, F.col(id_col))
+    hits = F.sort_array(F.collect_list(F.struct(
+        "rank", id_col, *payload, "score")))
+    best = F.col("_hits")[0]
+    groups = (df.withColumn("rank", F.row_number().over(w))
+                .where(F.col("rank") <= int(group.get("group_size", 1)))
+                .groupBy(gkey).agg(hits.alias("_hits"))
+                .select("_hits", best["score"].alias("_gbest"),
+                        best[id_col].alias("_gid")))
+    gorder = F.col("_gbest").asc() if asc else F.col("_gbest").desc()
+    top = groups.orderBy(gorder, "_gid").limit(limit)
+    return (top.select(F.inline("_hits"))
+               .where(F.col(gkey).isNotNull())
+               .select(id_col, *payload, "score", "rank"))
 
 
 def count(corpus: DataFrame, spec: dict | None = None) -> DataFrame:

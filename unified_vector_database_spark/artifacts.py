@@ -19,7 +19,10 @@ Loader frames are worth caching even though they hold no data:
 and `tables.load_parallel`'s partition probe forces a full physical
 planning of the scan (~0.15 s). Most registered queries load 1-3
 tables, so that was ~0.2-0.3 s on nearly every query. The frames stay
-lazy; every action still computes from the parquet inputs.
+lazy, with one exception: a `tables.load_parallel` frame reads the
+table's hash-partitioned copy, which its build writes through
+`persisted` the first time, so the repartition shuffle is paid once
+per table and not by every action.
 
 On disk, `persisted(kind, path, build)` names a directory by md5 of
 (kind, path) and of `fingerprint(path)`, so an overwritten input gets

@@ -19,6 +19,21 @@ request over a 64-dim query, 38 ms for the 64-literal `F.array` and
 39 ms for the `F.aggregate`/`F.zip_with` lambda builders, against
 0.6 ms for the whole score as one `F.expr` string. The parsed tree is
 the same expression, so the values are bit for bit unchanged.
+
+The widening to double sits inside the fold's lambda
+(`CAST(x AS DOUBLE) * CAST(y AS DOUBLE)`), so a builder takes the raw
+array<float> column and walks each array once. Casting first with
+`vec_double` materializes a second array per row before the fold
+reads it. The float-to-double cast is exact, so the values are the
+same bits either way; on an array<double> column Catalyst drops the
+cast. Measured as a top-10 over a 20k x 64 float32 collection on
+local[3] (4-core host, median of 7 interleaved warm runs): dot
+239 -> 215 ms, `norm` (one `aggregate` over the array, no self-
+`zip_with`) 248 -> 197 ms, and 217 ms when it folds a `vec_double`
+array instead. `l2` casts once per element: its `zip_with` lambda
+returns the difference and the fold squares it (`acc + d * d`),
+293 -> 246 ms; repeating the casts inside the product,
+`(CAST(x) - CAST(y)) * (CAST(x) - CAST(y))`, measured 260 ms.
 """
 
 from __future__ import annotations
@@ -27,7 +42,9 @@ import math
 
 from pyspark.sql import Column, functions as F
 
-_FOLD = "aggregate(zip_with({a}, {b}, (x, y) -> {term}), 0D, (acc, x) -> acc + x)"
+_D = "CAST({} AS DOUBLE)"
+_X, _Y = _D.format("x"), _D.format("y")
+_SUM = "aggregate({arr}, 0D, (acc, x) -> acc + {term})"
 
 
 def _sql(a: Column | str) -> str:
@@ -47,17 +64,24 @@ def _expr(text: str) -> Column:
     return col
 
 
+def _zip_sum(a: str, b: str, term: str, fold: str = "x") -> str:
+    """Left fold of `fold` over the pairwise `term`s, in index order;
+    NULL when the lengths differ (zip_with pads with NULL)."""
+    return _SUM.format(arr=f"zip_with({a}, {b}, (x, y) -> {term})",
+                       term=fold)
+
+
 def _dot(a: str, b: str) -> str:
-    return _FOLD.format(a=a, b=b, term="x * y")
+    return _zip_sum(a, b, f"{_X} * {_Y}")
 
 
 def _norm(a: str) -> str:
-    return f"sqrt({_dot(a, a)})"
+    return f"sqrt({_SUM.format(arr=a, term=f'{_X} * {_X}')})"
 
 
 def vec_double(col: Column | str) -> Column:
     """Cast array<float> -> array<double> (oracle-exact arithmetic)."""
-    return _expr(f"transform({_sql(col)}, x -> CAST(x AS DOUBLE))")
+    return _expr(f"transform({_sql(col)}, x -> {_X})")
 
 
 def dot(a: Column | str, b: Column | str) -> Column:
@@ -88,8 +112,10 @@ def cosine(a: Column | str, b: Column | str) -> Column:
 
 
 def l2(a: Column | str, b: Column | str) -> Column:
-    fold = _FOLD.format(a=_sql(a), b=_sql(b), term="(x - y) * (x - y)")
-    return _expr(f"sqrt({fold})")
+    # one cast per element: the lambda returns the difference, the fold
+    # squares it
+    diff = _zip_sum(_sql(a), _sql(b), f"{_X} - {_Y}", fold="x * x")
+    return _expr(f"sqrt({diff})")
 
 
 def normalize(a: Column | str) -> Column:
@@ -112,7 +138,7 @@ def l1(a: Column | str, b: Column | str) -> Column:
     same left fold as dot/l2. The oracle twin is
     list_dot_product(absdiffs, ones) — each |d_i|·1.0 term is exact,
     so the sequential dot IS the fold, bit-for-bit."""
-    return _expr(_FOLD.format(a=_sql(a), b=_sql(b), term="abs(x - y)"))
+    return _expr(_zip_sum(_sql(a), _sql(b), f"abs({_X} - {_Y})"))
 
 
 def _double_sql(v: float) -> str:

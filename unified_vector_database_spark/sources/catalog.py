@@ -12,17 +12,19 @@ fires no Spark job (a manifest without a schema, written before the
 schema was recorded, is read with schema inference).
 
 Every vector column `<vec>` (array<float|double>) has a double column
-`_norm_<vec>` beside it: `D.norm(D.vec_double(<vec>))`, computed in the
+`_norm_<vec>` beside it: `D.norm(<vec>)`, computed in the
 commit's write job for the rows the commit brings in (an upsert batch,
 every row when an update assigns the vector, rows of a version written
 before the column existed). It is the same expression, so the stored
 value is bit-identical to the inline norm, and cosine search
 (api.search) reads it instead of folding each row's norm again.
 
-Writes are copy-on-write: a new data_v<N+1> directory is fully
-written, then the manifest pointer flips — readers of v<N> are never
-disturbed, which is exactly how object-store tables (and the
-reference's MinIO-backed snapshots) stay consistent without locks.
+Writes are copy-on-write: a new data_v<N+1> directory (N the highest
+version ever published, so a commit after `restore` never overwrites a
+version a snapshot may pin) is fully written, then the manifest
+pointer flips — readers of v<N> are never disturbed, which is exactly
+how object-store tables (and the reference's MinIO-backed snapshots)
+stay consistent without locks.
 
 `base` may be a bare posix path OR any URI Spark's Hadoop stack can
 reach (`file://`, `s3a://` MinIO/S3, `hdfs://`, ...): all metadata
@@ -66,6 +68,10 @@ class Manifest:
     # JSON), recorded at commit time so read() infers nothing. None
     # (older manifests, or after restore) -> schema inference.
     schema: dict | None = None
+    # Highest version ever published. A commit after restore() writes
+    # the version above it, never over a directory a snapshot may pin.
+    # None (older manifests) -> the highest data_v<N> directory.
+    published: int | None = None
 
     def to_json(self) -> dict:
         return self.__dict__.copy()
@@ -231,16 +237,25 @@ class Collection:
     def update(self, predicate, **assignments) -> int:
         """Metadata update (reference: payload/metadata set on matching
         records): rewrite matching rows with the new column values —
-        one conditional projection, no join."""
+        one conditional projection, no join. The predicate and every
+        assigned value read the row as it was before the update."""
         m = self.describe()
         current = self.read()
         if current is None:
             return 0
-        out = current
-        for col, value in assignments.items():
-            lit = value if isinstance(value, Column) else F.lit(value)
-            out = out.withColumn(
-                col, F.when(predicate, lit).otherwise(F.col(col)))
+        unknown = set(assignments) - set(current.columns)
+        if unknown:
+            raise ValueError(
+                f"update assigns unknown columns {sorted(unknown)}")
+        hit = F.col("_update_hit")
+
+        def assigned(c: str) -> Column:
+            v = assignments[c]
+            v = v if isinstance(v, Column) else F.lit(v)
+            return F.when(hit, v).otherwise(F.col(c)).alias(c)
+        out = current.withColumn("_update_hit", predicate).select(*[
+            assigned(c) if c in assignments else F.col(c)
+            for c in current.columns])
         # an assigned vector gets its norm recomputed by the commit
         out = out.drop(*[NORM_PREFIX + v for v in _vector_columns(
             current.schema) if v in assignments])
@@ -379,13 +394,20 @@ class Collection:
     def _data_path(self, version: int) -> str:
         return fsio.join(self.path, f"data_v{version}")
 
+    def _published(self, m: Manifest) -> int:
+        if m.published is not None:
+            return m.published
+        return max([m.version] + [
+            int(d.removeprefix("data_v")) for d in fsio.listdir(self.path)
+            if d.startswith("data_v") and d[6:].isdigit()])
+
     def _write_manifest(self, m: Manifest) -> None:
         fsio.write_json(self._manifest_path, m.to_json())
 
     def _commit(self, df: DataFrame, m: Manifest) -> int:
         from pyspark.sql import Observation
 
-        new_version = m.version + 1
+        new_version = self._published(m) + 1
         # row count observed INSIDE the write job (CollectMetrics node)
         # — the previous read-back count was a second full job per
         # commit (file listing + footer scan), paid by every
@@ -409,7 +431,7 @@ class Collection:
             fsio.rmtree(path)
             raise ValueError(
                 f"vector dim mismatch: collection expects {m.dim}")
-        m.version = new_version
+        m.version = m.published = new_version
         m.rows = int(seen["n"])
         m.schema = _read_schema(df.schema, m.partition_by)
         self._write_manifest(m)
@@ -427,8 +449,7 @@ def _with_norms(df: DataFrame) -> DataFrame:
     for v in _vector_columns(df.schema):
         if NORM_PREFIX + v not in df.columns:
             quoted = "`" + v.replace("`", "``") + "`"
-            df = df.withColumn(NORM_PREFIX + v,
-                               D.norm(D.vec_double(quoted)))
+            df = df.withColumn(NORM_PREFIX + v, D.norm(quoted))
     return df
 
 
