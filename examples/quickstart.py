@@ -64,11 +64,12 @@ def main() -> None:
     art_dir = tempfile.mkdtemp(prefix="quickstart_hnsw_")
     hnsw.hnsw_write(built, art_dir)          # the on-disk index
     art = hnsw.hnsw_read(spark, art_dir)     # lazy handles, hops prune
-    qvec = [float(v) for v in
-            corpus.where(F.col("vec_id") == 0).first().vec]
+    # one query is a one-row (qid, qvec) panel
+    query = corpus.where(F.col("vec_id") == 0).select(
+        F.col("vec_id").alias("qid"), F.col("vec").alias("qvec"))
     show("hnsw beam-probe top-5 (driver beam over the bounded artifact)",
-         hnsw.hnsw_probe_driver(spark, corpus.select("vec_id", "vec"),
-                                hnsw.collect_art(art), qvec, k=5))
+         hnsw.hnsw_probe_batch_driver(spark, corpus.select("vec_id", "vec"),
+                                      hnsw.collect_art(art), query, k=5))
     batch_queries = (corpus.where(F.col("vec_id") % 100 == 0)
                            .select(F.col("vec_id").alias("qid"),
                                    F.col("vec").alias("qvec")))

@@ -292,12 +292,14 @@ def test_stored_norm_cosine_folds_once(stored):
 
 def _head_group(df, asc, gkey, size, limit, id_col="vec_id"):
     """Group search as a window plus a broadcast join of the top groups
-    (two scans of the corpus)."""
+    (two scans of the corpus), over the rows whose group key is not
+    NULL."""
     from pyspark.sql import Window as W
 
     order = F.col("score").asc() if asc else F.col("score").desc()
     w = W.partitionBy(gkey).orderBy(order, F.col(id_col))
-    ranked = (df.withColumn("rank", F.row_number().over(w))
+    ranked = (df.where(F.col(gkey).isNotNull())
+                .withColumn("rank", F.row_number().over(w))
                 .where(F.col("rank") <= size))
     gorder = F.col("_gbest").asc() if asc else F.col("_gbest").desc()
     top = (ranked.where(F.col("rank") == 1)
@@ -431,6 +433,19 @@ def _executed(df) -> str:
     if plan.getClass().getSimpleName() == "AdaptiveSparkPlanExec":
         plan = plan.executedPlan()
     return plan.toString()
+
+
+def test_null_group_key_forms_no_group(spark):
+    """A row whose group key is NULL takes no group place: with the
+    NULL-key row scoring best, `limit: 2` still returns groups 1 and
+    2."""
+    frame = spark.createDataFrame(
+        [(0, None, [1.0, 0.0, 0.0, 0.0]), (1, 1, [1.0, 1.0, 0.0, 0.0]),
+         (2, 2, [0.0, 1.0, 0.0, 0.0])],
+        "vec_id bigint, label int, embedding array<float>")
+    got = search(frame, {"vector": [1.0, 0.0, 0.0, 0.0], "limit": 2,
+                         "group_by": {"key": "label", "group_size": 1}})
+    assert [(r.vec_id, r.label) for r in got.collect()] == [(1, 1), (2, 2)]
 
 
 def test_group_search_scans_once(shaped):

@@ -24,6 +24,17 @@ def _query(spark, sf_dir, vid=0):
                .select(D.vec_double("embedding").alias("qvec")))
 
 
+def _panel(spark, sf_dir, vid=0):
+    """Corpus vector `vid` as a one-row (qid, qvec) query panel."""
+    return _query(spark, sf_dir, vid).select(
+        F.lit(vid).cast("bigint").alias("qid"), "qvec")
+
+
+def _hits(df):
+    """(vec_id, score) of a probe's rows, in rank order."""
+    return [(r.vec_id, r.score) for r in df.collect()]
+
+
 def _drop_session_art(monkeypatch, sf_dir):
     """Force the next session_art call to rebuild the resident copy
     (the graph itself stays cached); restored after the test."""
@@ -84,10 +95,10 @@ def test_probe_recall_vs_flat(spark, sf_dir):
     art = hnsw.art_for(spark, sf_dir)
     hits, total = 0, 0
     for vid in (0, 101, 202, 303, 404):
-        q = _query(spark, sf_dir, vid)
-        approx = {r.vec_id for r in
-                  hnsw.hnsw_probe(spark, corpus, art, q, k=10).collect()}
-        exact = {r.vec_id for r in knn(corpus, q, k=10).collect()}
+        approx = {r.vec_id for r in hnsw.hnsw_probe_batch(
+            spark, corpus, art, _panel(spark, sf_dir, vid), 10).collect()}
+        exact = {r.vec_id for r in
+                 knn(corpus, _query(spark, sf_dir, vid), k=10).collect()}
         hits += len(approx & exact)
         total += 10
     assert hits / total >= 0.8, f"recall {hits / total}"
@@ -99,8 +110,8 @@ def test_self_match_is_top1(spark, sf_dir):
     graph neighborhood is the navigability smoke test."""
     corpus = _corpus(spark, sf_dir)
     art = hnsw.art_for(spark, sf_dir)
-    rows = hnsw.hnsw_probe(spark, corpus, art,
-                           _query(spark, sf_dir, 0), k=10).collect()
+    rows = hnsw.hnsw_probe_batch(spark, corpus, art,
+                                 _panel(spark, sf_dir, 0), 10).collect()
     assert rows[0].vec_id == 0
     assert rows[0].score == pytest.approx(1.0)
 
@@ -120,31 +131,10 @@ def test_probe_from_written_artifact(spark, sf_dir, tmp_path):
     for lvl in art_pq["adj"]:
         assert "bucket" in art_pq["adj"][lvl].columns
     plain = hnsw.collect_art(built)
-    q = _query(spark, sf_dir, 7)
-    mem = [(r.vec_id, r.score) for r in
-           hnsw.hnsw_probe(spark, corpus, plain, q, k=10).collect()]
-    pq = [(r.vec_id, r.score) for r in
-          hnsw.hnsw_probe(spark, corpus, art_pq, q, k=10).collect()]
+    q = _panel(spark, sf_dir, 7)
+    mem = _hits(hnsw.hnsw_probe_batch(spark, corpus, plain, q, 10))
+    pq = _hits(hnsw.hnsw_probe_batch(spark, corpus, art_pq, q, 10))
     assert mem == pq
-
-
-def test_driver_beam_equals_distributed_probe(spark, sf_dir):
-    """The small-corpus registered path (driver-side beam, bounded
-    isin-pruned scoring jobs) must reproduce the distributed
-    frontier-join probe exactly — same hops, tie-breaks, scores."""
-    corpus = _corpus(spark, sf_dir)
-    art = hnsw.art_for(spark, sf_dir)
-    plain = hnsw.collect_art(art)
-    for vid in (0, 33):
-        q = _query(spark, sf_dir, vid)
-        qvec = [float(v) for v in
-                corpus.where(F.col("vec_id") == vid).first().vec]
-        dist = [(r.vec_id, r.score) for r in
-                hnsw.hnsw_probe(spark, corpus, art, q, k=10).collect()]
-        drv = [(r.vec_id, r.score) for r in
-               hnsw.hnsw_probe_driver(spark, corpus, plain, qvec,
-                                      k=10).collect()]
-        assert dist == drv
 
 
 def test_registered_route_equality(spark, sf_dir, monkeypatch):
@@ -169,7 +159,7 @@ def test_dist_entries_pin_distributed_route(spark, sf_dir):
     plain_single = [(r.vec_id, r.score) for r in
                     hnsw.hnsw_knn(spark, sf_dir).collect()]
     dist_single = hnsw.hnsw_knn_dist(spark, sf_dir)
-    assert hnsw.LAST_ROUTE == "hnsw_probe"
+    assert hnsw.LAST_ROUTE == "hnsw_probe_batch"
     assert [(r.vec_id, r.score) for r in dist_single.collect()] \
         == plain_single
     plain_batch = [tuple(r) for r in
@@ -177,25 +167,6 @@ def test_dist_entries_pin_distributed_route(spark, sf_dir):
     dist_batch = hnsw.hnsw_batch_knn_dist(spark, sf_dir)
     assert hnsw.LAST_ROUTE == "hnsw_probe_batch"
     assert [tuple(r) for r in dist_batch.collect()] == plain_batch
-
-
-def test_batch_probe_equals_single_probes(spark, sf_dir):
-    """hnsw_probe_batch must be a pure batching of hnsw_probe: for
-    every query in the panel, identical ids AND scores in identical
-    rank order — the I11-twin contract (shared jobs, same beams)."""
-    corpus = _corpus(spark, sf_dir)
-    art = hnsw.art_for(spark, sf_dir)
-    queries = hnsw._batch_queries(corpus)
-    got: dict[int, list] = {}
-    for r in hnsw.hnsw_probe_batch(spark, corpus, art,
-                                   queries, k=10).collect():
-        got.setdefault(r.qid, []).append((r.vec_id, r.score))
-    assert set(got) == {r.qid for r in queries.collect()}
-    for qid, rows in got.items():
-        q = _query(spark, sf_dir, qid)
-        single = [(r.vec_id, r.score) for r in
-                  hnsw.hnsw_probe(spark, corpus, art, q, k=10).collect()]
-        assert rows == single, f"qid {qid} diverged"
 
 
 def test_filtered_knn_respects_filter_and_routes_agree(spark, sf_dir,
@@ -312,20 +283,33 @@ def test_merge_touches_base_edges_only_via_new_nodes(spark, sf_dir):
 
 
 def test_batch_driver_route_equals_distributed(spark, sf_dir):
-    """The batched driver beam (small-corpus route of hnsw_batch_knn)
-    must reproduce the fully distributed batch probe row for row —
-    same hops, tie-breaks, scores, ranks, and row order."""
+    """The driver beam (small-corpus side of the size switch) must
+    reproduce the fully distributed beam row for row — same hops,
+    tie-breaks, scores, ranks, and row order — for the batch panel and
+    for single queries, which run as one-row panels. A query's rows
+    do not depend on the panel it runs in: each panel query's rows
+    equal its one-row panel's."""
     corpus = _corpus(spark, sf_dir)
     art = hnsw.art_for(spark, sf_dir)
-    queries = hnsw._batch_queries(corpus)
-    dist = [tuple(r) for r in
-            hnsw.hnsw_probe_batch(spark, corpus, art,
-                                  queries, k=10).collect()]
-    drv = [tuple(r) for r in
-           hnsw.hnsw_probe_batch_driver(spark, corpus,
-                                        hnsw.collect_art(art),
-                                        queries, k=10).collect()]
-    assert dist == drv
+    plain = hnsw.collect_art(art)
+
+    def both_routes(queries):
+        dist = [tuple(r) for r in hnsw.hnsw_probe_batch(
+            spark, corpus, art, queries, 10).collect()]
+        drv = [tuple(r) for r in hnsw.hnsw_probe_batch_driver(
+            spark, corpus, plain, queries, 10).collect()]
+        assert dist == drv
+        return dist
+
+    batch = both_routes(hnsw._batch_queries(corpus))
+    for vid in (0, 33):
+        both_routes(_panel(spark, sf_dir, vid))
+    qids = sorted({r[0] for r in batch})
+    assert len(qids) > 1
+    for qid in qids:
+        one = [tuple(r) for r in hnsw.hnsw_probe_batch_driver(
+            spark, corpus, plain, _panel(spark, sf_dir, qid), 10).collect()]
+        assert [r for r in batch if r[0] == qid] == one, f"qid {qid}"
 
 
 def test_collect_art_refuses_oversized(spark, sf_dir, monkeypatch):
@@ -502,13 +486,10 @@ def test_multilayer_probe_routes_agree(spark):
     # top-layer node (always visited, so self-match is guaranteed —
     # proving the descent doesn't lose the entry point's own id)
     for qid, want_self in ((ids[7], False), (art["tops"][0], True)):
-        qvec = _ml_vec(qid)
-        q = spark.createDataFrame([(qvec,)], "qvec array<double>")
-        dist = [(r.vec_id, r.score) for r in
-                hnsw.hnsw_probe(spark, corpus, art, q, k=10).collect()]
-        drv = [(r.vec_id, r.score) for r in
-               hnsw.hnsw_probe_driver(spark, corpus, art, qvec,
-                                      k=10).collect()]
+        q = spark.createDataFrame([(qid, _ml_vec(qid))],
+                                  "qid bigint, qvec array<double>")
+        dist = _hits(hnsw.hnsw_probe_batch(spark, corpus, art, q, 10))
+        drv = _hits(hnsw.hnsw_probe_batch_driver(spark, corpus, art, q, 10))
         assert dist == drv, f"routes diverged for qid {qid}"
         if want_self:
             assert dist[0][0] == qid
@@ -563,9 +544,9 @@ def test_degenerate_tiny_corpus(spark):
     art = hnsw.collect_art(hnsw.hnsw_build(spark, corpus))
     assert art["L"] == 1
     assert len(art["tops"]) >= 1
-    q = spark.createDataFrame([([2.0, 1.0, 0.0, 0.5],)],
-                              "qvec array<double>")
-    got = hnsw.hnsw_probe(spark, corpus, art, q, k=10).collect()
+    q = spark.createDataFrame([(0, [2.0, 1.0, 0.0, 0.5])],
+                              "qid bigint, qvec array<double>")
+    got = hnsw.hnsw_probe_batch(spark, corpus, art, q, 10).collect()
     assert 1 <= len(got) <= 3
     assert got[0].score == max(r.score for r in got)
 
@@ -598,3 +579,78 @@ def test_oracle_sql_is_registered():
     assert "hnsw_knn" in registry.QUERIES
     sql = registry.resolved_oracles()["hnsw_knn"]
     assert "adj0" in sql and "LIMIT 10" in sql
+
+
+def test_null_scores_rank_last_on_both_routes(spark):
+    """A zero vector has a NULL cosine. The driver beam ranks it as the
+    distributed beam's `score DESC NULLS LAST, vec_id` does, for a
+    zero query (every score NULL) and for a zero vector at a top-layer
+    node under a plain query; the driver route used to raise TypeError
+    on float(None)."""
+    import hashlib
+    import re as _re
+
+    import numpy as np
+
+    def lvl(i):
+        return len(_re.match(
+            "0*", hashlib.md5(str(i).encode()).hexdigest()).group(0))
+
+    x = np.random.default_rng(3).standard_normal((200, 64)).astype(np.float32)
+    top = min(i for i in range(200) if lvl(i) >= 1)
+    x[[top, 50, 51]] = 0.0
+    corpus = spark.createDataFrame(
+        [(i, [float(v) for v in x[i]]) for i in range(200)],
+        "vec_id bigint, vec array<double>")
+    art = hnsw.hnsw_build(spark, corpus)
+    plain = hnsw.collect_art(art)
+    assert top in plain["tops"]
+    got = {}
+    for name, qvec in (("zero", [0.0] * 64),
+                       ("plain", [float(v) for v in x[7]])):
+        q = spark.createDataFrame([(0, qvec)],
+                                  "qid bigint, qvec array<double>")
+        dist = [tuple(r) for r in
+                hnsw.hnsw_probe_batch(spark, corpus, art, q, 10).collect()]
+        drv = [tuple(r) for r in hnsw.hnsw_probe_batch_driver(
+            spark, corpus, plain, q, 10).collect()]
+        assert dist == drv, name
+        assert len(dist) == 10, name
+        got[name] = dist
+    # a zero query scores every node NULL: rows come in id order
+    assert all(r[2] is None for r in got["zero"])
+    assert [r[1] for r in got["zero"]] == sorted(r[1] for r in got["zero"])
+    assert got["plain"][0][1] == 7
+
+
+def test_resident_copies_survive_session_restart(sf_dir, tmp_path):
+    """The resident HNSW copies (`hnsw_session`, `hnsw_sq8`,
+    `hnsw_merged` entries) hold Spark handles of the session that built
+    them. After a stop and a restart in one process, the three entries
+    that read them answer as before, with no dead-handle error."""
+    import json
+    import os
+    import subprocess
+    import sys
+
+    code = ("import json, sys, tempfile\n"
+            "from unified_vector_database_spark.operators import hnsw\n"
+            "from unified_vector_database_spark.session import get_spark\n"
+            "sf, tempfile.tempdir = sys.argv[1:]\n"
+            "out = []\n"
+            "for app in ('one', 'two'):\n"
+            "    spark = get_spark(app, cpus=2, shuffle_partitions=2)\n"
+            "    out.append([[list(r) for r in fn(spark, sf).collect()]\n"
+            "                for fn in (hnsw.hnsw_knn, hnsw.hnsw_sq8_knn,\n"
+            "                           hnsw.hnsw_merge_knn)])\n"
+            "    spark.stop()\n"
+            "print(json.dumps(out))\n")
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    env = dict(os.environ, PYTHONPATH=root, SPARK_GRAFT_DRIVER_MEM="1g")
+    got = subprocess.run([sys.executable, "-c", code, sf_dir,
+                          str(tmp_path)], env=env,
+                         capture_output=True, text=True, timeout=600)
+    assert got.returncode == 0, got.stderr[-2000:]
+    first, second = json.loads(got.stdout.strip().splitlines()[-1])
+    assert all(len(rows) == 10 for rows in first)
+    assert first == second

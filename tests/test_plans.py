@@ -526,7 +526,7 @@ def test_hnsw_probe_hops_prune_artifact_partitions(spark, sf_dir):
     hop reads only the frontier's buckets, not every partition. This
     is the plan shape ADVICE r7 #1 asked the docs claim to match.
 
-    r9: hnsw_probe now cuts lineage per hop (localCheckpoint on the
+    r9: the beam cuts lineage per hop (localCheckpoint on the
     multi-consumer beam state), so the PROBE's final explain only
     shows the top-k over the last checkpointed RDD — the hop joins
     plan (and prune) inside each per-hop sub-plan instead. The pinned
@@ -548,9 +548,9 @@ def test_hnsw_probe_hops_prune_artifact_partitions(spark, sf_dir):
     # and the probe built on those hops still answers over the
     # artifact route (route marker + non-empty top-k)
     q = (corpus.where(F.col("vec_id") == 7)
-         .select(F.col("vec").alias("qvec")))
-    out = hnsw.hnsw_probe(spark, corpus, art, q, k=10)
-    assert hnsw.LAST_ROUTE == "hnsw_probe"
+         .select(F.col("vec_id").alias("qid"), F.col("vec").alias("qvec")))
+    out = hnsw.hnsw_probe_batch(spark, corpus, art, q, 10)
+    assert hnsw.LAST_ROUTE == "hnsw_probe_batch"
     assert out.count() > 0
 
 
@@ -590,8 +590,8 @@ def test_r9_ops_plan_shapes(spark, sf_dir):
     allowed = emb.where(F.col("label").isin(*hnsw.FILTER_LABELS)) \
                  .select("vec_id")
     q = (sart["corpus"].where(F.col("vec_id") == 0)
-         .select(F.col("vec").alias("qvec")))
-    txt = plan_text(hnsw.hnsw_probe(spark, sart["corpus"], sart, q,
-                                    k=10, keep=allowed))
+         .select(F.col("vec_id").alias("qid"), F.col("vec").alias("qvec")))
+    txt = plan_text(hnsw.hnsw_probe_batch(spark, sart["corpus"], sart, q,
+                                          10, keep=allowed))
     assert "In(label, [2,5])" in txt or "In(label" in txt, \
         "label filter not pushed to the embeddings scan"

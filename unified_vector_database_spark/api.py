@@ -43,9 +43,10 @@ Compilation rules (scale posture):
   PARTITIONED by the group key (bounded partitions), an aggregate on
   the same partitioning folds each group's top `group_size` hits into
   one row, and `limit` then counts GROUPS ranked by best hit
-  (Qdrant/Milvus group search) in one TakeOrdered. `offset` is
-  rejected under `group_by`, matching the backends' group-search
-  APIs;
+  (Qdrant/Milvus group search) in one TakeOrdered. Rows whose group
+  key is NULL form no group and are left out, as Qdrant leaves out
+  points without the `group_by` field. `offset` is rejected under
+  `group_by`, matching the backends' group-search APIs;
 - no compiled shape holds an unpartitioned window (plan-asserted in
   tests/test_api.py).
 """
@@ -207,14 +208,16 @@ def _group_search(df: DataFrame, order: Column, asc: bool, id_col: str,
     in rank order, so the group's best hit is the array's head. The
     top `limit` group rows, by (best score, best id), are a
     TakeOrdered, and the output is their hits in (group rank, rank)
-    order. Rows whose group key is NULL take a group's place in that
-    ranking but are not returned."""
+    order. Rows whose group key is NULL form no group: like Qdrant,
+    which leaves out points that lack the `group_by` field, they are
+    dropped before the window."""
     gkey = group["key"]
     w = W.partitionBy(gkey).orderBy(order, F.col(id_col))
     hits = F.sort_array(F.collect_list(F.struct(
         "rank", id_col, *payload, "score")))
     best = F.col("_hits")[0]
-    groups = (df.withColumn("rank", F.row_number().over(w))
+    groups = (df.where(F.col(gkey).isNotNull())
+                .withColumn("rank", F.row_number().over(w))
                 .where(F.col("rank") <= int(group.get("group_size", 1)))
                 .groupBy(gkey).agg(hits.alias("_hits"))
                 .select("_hits", best["score"].alias("_gbest"),
@@ -222,7 +225,6 @@ def _group_search(df: DataFrame, order: Column, asc: bool, id_col: str,
     gorder = F.col("_gbest").asc() if asc else F.col("_gbest").desc()
     top = groups.orderBy(gorder, "_gid").limit(limit)
     return (top.select(F.inline("_hits"))
-               .where(F.col(gkey).isNotNull())
                .select(id_col, *payload, "score", "rank"))
 
 

@@ -34,6 +34,9 @@ primitives and probes it with the SAME beam-search contract:
            ef-beam search on layer 0 accumulating a visited set;
            exact rerank of the visited set yields top-k. Every hop is
            a frontier-to-adjacency join co-keyed on the source id.
+           Queries probe as a (qid, qvec) panel; a single query is a
+           panel of one row, so each side of the size switch below
+           has one beam (`hnsw_probe_batch`, `hnsw_probe_batch_driver`).
 
 100 TB shape: the adjacency list is the index artifact — N*M id
 pairs. `hnsw_build` never collects an edge: each layer's edges stay
@@ -57,7 +60,8 @@ but full-listing scan (linear in file count, constant in rows
 scored). The registered probe size-switches (the D12 pattern):
 corpora ≤ DRIVER_BEAM_MAX_NODES collect the bounded artifact once
 per session and run the beam driver-side; larger corpora route
-through the distributed `hnsw_probe`, which never collects edges.
+through the distributed `hnsw_probe_batch`, which never collects
+edges.
 
 Determinism & oracle: every choice (LSH planes, bucket caps, level
 hash, (score, id) tie-breaks) is seeded/deterministic, so the whole
@@ -95,9 +99,9 @@ BUCKET_CAP = 256    # hard cap on pairing fan-out inside one bucket
 TOP_MIN = 8         # grow L while the NEXT layer still has >= this
 ADJ_BUCKETS = 64    # artifact partition count: bucket = pmod(src, ·)
 # Corpora at/below this node count may collect the adjacency (≤ N*M
-# = 2M id pairs ≈ 32 MB) for the driver-side single-query beam; above
-# it the registered probe routes through the distributed hnsw_probe
-# and no edge ever reaches the driver — the D12 size switch.
+# = 2M id pairs ≈ 32 MB) for the driver-side beam; above it the
+# registered probe routes through the distributed hnsw_probe_batch and
+# no edge ever reaches the driver — the D12 size switch.
 DRIVER_BEAM_MAX_NODES = 250_000
 # What collect_art actually materializes is EDGES, so the binding
 # guard counts edges (VERDICT r8 #6): the node cap alone silently
@@ -252,7 +256,7 @@ def collect_art(art: dict) -> dict:
         raise ValueError(
             f"refusing to collect HNSW artifact for n={n} nodes "
             f"(> DRIVER_BEAM_MAX_NODES={DRIVER_BEAM_MAX_NODES}); "
-            "use the distributed hnsw_probe")
+            "use the distributed hnsw_probe_batch")
     # The binding bound is what actually lands on the driver: count
     # edges (and tops) BEFORE collecting — cheap parquet/checkpoint
     # counts vs the collect they gate. This also covers artifacts
@@ -263,13 +267,13 @@ def collect_art(art: dict) -> dict:
         raise ValueError(
             f"refusing to collect HNSW artifact: {n_tops} top-layer "
             f"ids exceed DRIVER_BEAM_MAX_NODES={DRIVER_BEAM_MAX_NODES}"
-            "; use the distributed hnsw_probe")
+            "; use the distributed hnsw_probe_batch")
     n_edges = sum(e.count() for e in art["adj"].values())
     if n_edges > DRIVER_BEAM_MAX_EDGES:
         raise ValueError(
             f"refusing to collect HNSW artifact: {n_edges} adjacency "
             f"edges exceed DRIVER_BEAM_MAX_EDGES={DRIVER_BEAM_MAX_EDGES}"
-            "; use the distributed hnsw_probe")
+            "; use the distributed hnsw_probe_batch")
     tops = sorted(int(r.vec_id) for r in art["tops"].collect())
     adj = {lvl: [(int(r.src), int(r.dst)) for r in
                  e.select("src", "dst").orderBy("src", "dst").collect()]
@@ -384,75 +388,6 @@ def _expand(adj: DataFrame, frontier: DataFrame, qid: bool = False,
                .select(*cols))
 
 
-def hnsw_probe(spark: SparkSession, corpus: DataFrame, art: dict,
-               query_df: DataFrame, k: int,
-               ef: int = HNSW_EF, hops: int = HNSW_HOPS,
-               keep: DataFrame | None = None) -> DataFrame:
-    """Beam-search probe. `corpus` = (vec_id, vec); `query_df` = one
-    (qvec) row. Each hop joins the bounded frontier to the adjacency
-    (co-keyed on src at scale) — the corpus is only ever touched
-    through vec_id lookups of visited candidates. `keep` (optional
-    (vec_id) frame) is the ES `knn.filter` contract at fixed beam
-    depth: traversal is UNRESTRICTED (failing nodes still route the
-    beam), only the final result collection is filtered — a semi join
-    of the visited set before the top-k."""
-    _mark_route("hnsw_probe")
-    score = D.cosine("vec", "qvec").alias("score")
-
-    # Beam state (frontier/visited) is bounded by ef·M rows — single-
-    # partition by construction, so every per-hop set op runs as one
-    # task instead of a shuffle.partitions-wide exchange. (A BATCH
-    # probe keeps state distributed, partitioned by qid.)
-    def best(ids: DataFrame, limit: int) -> DataFrame:
-        return (corpus.join(F.broadcast(ids), "vec_id")
-                      .crossJoin(F.broadcast(query_df))
-                      .select("vec_id", score)
-                      .orderBy(F.col("score").desc(), "vec_id")
-                      .limit(limit).select("vec_id"))
-
-    nb = art.get("buckets", ADJ_BUCKETS)
-    # Lineage cuts on exactly the MULTI-CONSUMER state and nothing
-    # else: `n`/`visited` feeds two consumers per hop (best() and the
-    # next union), so without a cut the plan doubles per hop (the
-    # batch route measured 14.7 s vs 5.0 s at sf0.1 for a sparser
-    # cadence). The frontier f = best(n) over a checkpointed n is a
-    # SHALLOW single-consumer plan (the next expansion's broadcast
-    # side), so checkpointing it too would only add planning calls —
-    # each lazy localCheckpoint costs ~60-100 ms of driver-side
-    # physical planning per call (measured), ~2x/hop of pure overhead.
-    # Only the seed frontier fans out twice (first union + expansion)
-    # and keeps its cut.
-    f = best(_ids_df(spark, art["tops"]).select("vec_id"), HNSW_SEEDS) \
-        .localCheckpoint(eager=False)
-    for lvl in range(art["L"] - 1, 0, -1):
-        a = _adj_df(spark, art["adj"][lvl])
-        n = (f.union(_expand(a, f, buckets=nb)).coalesce(1).distinct()
-             .localCheckpoint(eager=False))
-        f = best(n, HNSW_SEEDS)
-    a0 = _adj_df(spark, art["adj"][0])
-    visited = f.localCheckpoint(eager=False) if art["L"] > 1 else f
-    f = visited
-    for _ in range(hops):
-        n = visited.union(_expand(a0, f, buckets=nb)) \
-            .coalesce(1).distinct().localCheckpoint(eager=False)
-        f = best(n, ef)
-        visited = n
-    if keep is not None:
-        # broadcast the BOUNDED side: visited is ef·M ids, keep can be
-        # a large filtered scan — semi-joining keep against the
-        # broadcast visited set yields the identical intersection
-        # without ever broadcasting the predicate side (review-caught:
-        # the first form broadcast keep, which at the distributed
-        # route's scale is exactly the side that doesn't fit)
-        visited = (keep.select("vec_id")
-                   .join(F.broadcast(visited), "vec_id", "left_semi"))
-    return (corpus.join(F.broadcast(visited), "vec_id")
-                  .crossJoin(F.broadcast(query_df))
-                  .select("vec_id", score)
-                  .orderBy(F.col("score").desc(), "vec_id")
-                  .limit(k))
-
-
 def _corpus_for(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = tables.load_parallel(spark, sf_dir, "embeddings", "vec_id")
     return emb.select("vec_id", D.vec_double("embedding").alias("vec"))
@@ -506,8 +441,8 @@ def session_art(spark: SparkSession, sf_dir: str) -> dict:
             "adj": {lvl: df.localCheckpoint(eager=False)
                     for lvl, df in art["adj"].items()},
         }
-        # Size switch (the D12 route pattern): small corpora collect
-        # the bounded artifact once and serve single queries from the
+        # Size switch (the D12 route pattern, `_probe`): small corpora
+        # collect the bounded artifact once and serve queries from the
         # driver-side beam; larger ones keep every edge distributed.
         if art["n"] <= DRIVER_BEAM_MAX_NODES:
             sart["plain"] = collect_art(art)
@@ -517,73 +452,33 @@ def session_art(spark: SparkSession, sf_dir: str) -> dict:
         "hnsw_session", tables.table_path(sf_dir, "embeddings"), build, spark)
 
 
-def _score_ids(corpus: DataFrame, qvec_sql: str, ids) -> dict:
-    """Cosine of the query against a bounded id set, computed by the
-    SAME JVM fold the distributed probe (and the oracle's twin) uses —
-    the collected doubles are bit-identical to a full-plan run. A
-    broadcast id join beats an isin literal list (~2x: the In()
-    expression re-analyzes per call, the join plan shape is stable)."""
-    spark = corpus.sparkSession
-    idf = spark.createDataFrame([(int(i),) for i in ids], "vec_id bigint")
-    return {int(r.vec_id): float(r.score) for r in
-            corpus.join(F.broadcast(idf), "vec_id")
-                  .select("vec_id", D.cosine("vec", qvec_sql).alias("score"))
-                  .collect()}
+def _query_panel(corpus: DataFrame, sf_dir: str, what: str) -> DataFrame:
+    """The registered single-query entries' query, vec_id=0, as a
+    one-row (qid, qvec) panel: a single query is a batch of one. The
+    panel is a VALUES relation holding the vector as an exact literal
+    (`D.vector_sql`), so collecting it or broadcasting it never
+    rescans the corpus."""
+    row = corpus.where(F.col("vec_id") == 0).first()
+    if row is None:
+        raise ValueError(
+            f"{what}: query vector vec_id=0 not present in "
+            f"{sf_dir}/embeddings — the query-id convention needs it")
+    return corpus.sparkSession.sql(
+        f"SELECT * FROM VALUES (0L, {D.vector_sql(row.vec)}) AS t(qid, qvec)")
 
 
-def hnsw_probe_driver(spark: SparkSession, corpus: DataFrame, art: dict,
-                      qvec: list[float], k: int,
-                      ef: int = HNSW_EF, hops: int = HNSW_HOPS,
-                      keep: set | None = None) -> DataFrame:
-    """Single-query probe with the beam state driver-side: the
-    adjacency is already a driver-resident artifact and every hop's
-    state is ≤ ef·M ids, so the cluster only scores candidate ids
-    (one bounded isin-pruned job per hop — the ivf_probe_partitioned
-    qcells convention). Identical hop/tie-break semantics to
-    hnsw_probe; equality pinned in tests/test_hnsw.py. Batch probing
-    (many queries) uses hnsw_probe, which keeps state distributed."""
-    _mark_route("hnsw_probe_driver")
-    adj: dict[int, dict[int, list[int]]] = {}
-    for lvl, pairs in art["adj"].items():
-        m: dict[int, list[int]] = {}
-        for s, d in pairs:
-            m.setdefault(s, []).append(d)
-        adj[lvl] = m
-    qvec_sql = D.vector_sql(qvec)
-    scores: dict[int, float] = {}
-
-    def ensure(ids) -> None:
-        new = [i for i in ids if i not in scores]
-        if new:
-            scores.update(_score_ids(corpus, qvec_sql, new))
-
-    def top(ids, lim: int) -> list[int]:
-        return sorted(ids, key=lambda i: (-scores[i], i))[:lim]
-
-    ensure(art["tops"])
-    f = top(art["tops"], HNSW_SEEDS)
-    for lvl in range(art["L"] - 1, 0, -1):
-        n = set(f) | {d for s in f for d in adj[lvl].get(s, ())}
-        ensure(n)
-        f = top(n, HNSW_SEEDS)
-    visited = set(f)
-    for h in range(hops):
-        n = visited | {d for s in f for d in adj[0].get(s, ())}
-        if h % 2 == 0:
-            # prefetch ONE hop of neighborhood into the same scoring
-            # job: the next hop's candidates are a subset, so every
-            # other ensure() is a no-op — pure job-count reduction,
-            # zero semantic change (ensure skips known ids; the beam
-            # still only ever ranks `n`).
-            ensure(n | {d2 for i in n for d2 in adj[0].get(i, ())})
-        else:
-            ensure(n)
-        f = top(n, ef)
-        visited = n
-    pool = visited if keep is None else {i for i in visited if i in keep}
-    res = top(pool, k)
-    return spark.createDataFrame([(i, scores[i]) for i in res],
-                                 "vec_id bigint, score double")
+def _probe(spark: SparkSession, state: dict, corpus: DataFrame,
+           queries: DataFrame, k: int,
+           keep: DataFrame | None = None) -> DataFrame:
+    """The size switch (the D12 route pattern): a resident state that
+    holds the collected artifact ("plain", present only when n ≤
+    DRIVER_BEAM_MAX_NODES) runs the driver-side beam over it; a larger
+    one keeps every edge distributed. Both routes return the same rows
+    (pinned in tests/test_hnsw.py)."""
+    if "plain" in state:
+        return hnsw_probe_batch_driver(spark, corpus, state["plain"],
+                                       queries, k, keep=keep)
+    return hnsw_probe_batch(spark, corpus, state, queries, k, keep=keep)
 
 
 @register("hnsw_knn", oracle=lambda: _hnsw_oracle())
@@ -591,23 +486,15 @@ def hnsw_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
     """HNSW probe for query vec_id=0: graph beam search + exact rerank
     of the visited set. The graph build is amortized via art_for /
     session_art; the oracle unrolls the identical beam over the numpy
-    twin's adjacency (bit-parity asserted in tests/test_hnsw.py).
-    Route is size-switched: the driver-side beam over the collected
-    (bounded) artifact when n ≤ DRIVER_BEAM_MAX_NODES, else the
-    distributed hnsw_probe over the written artifact handles — route
-    equality pinned in tests/test_hnsw.py."""
+    twin's adjacency (bit-parity asserted in tests/test_hnsw.py). The
+    query runs as a one-row panel through the size switch (`_probe`):
+    the driver-side beam over the collected artifact when n ≤
+    DRIVER_BEAM_MAX_NODES, else the distributed hnsw_probe_batch over
+    the written artifact handles."""
     sart = session_art(spark, sf_dir)
-    qrow = sart["corpus"].where(F.col("vec_id") == 0).first()
-    if qrow is None:
-        raise ValueError(
-            f"hnsw_knn: query vector vec_id=0 not present in "
-            f"{sf_dir}/embeddings — the query-id convention needs it")
-    qvec = [float(v) for v in qrow.vec]
-    if "plain" in sart:
-        return hnsw_probe_driver(spark, sart["corpus"], sart["plain"],
-                                 qvec, k=10)
-    qdf = spark.createDataFrame([(qvec,)], "qvec array<double>")
-    return hnsw_probe(spark, sart["corpus"], sart, qdf, k=10)
+    queries = _query_panel(sart["corpus"], sf_dir, "hnsw_knn")
+    return _probe(spark, sart, sart["corpus"], queries, 10) \
+        .select("vec_id", "score")
 
 
 @register("hnsw_knn_dist", oracle=lambda: _hnsw_oracle())
@@ -616,25 +503,19 @@ def hnsw_knn_dist(spark: SparkSession, sf_dir: str) -> DataFrame:
     at 100 TB. The size-switched hnsw_knn entry always takes the
     driver-side beam at driver-checkable corpus sizes, so its green
     CORRECTNESS row never certifies the scale route (VERDICT r8 #2);
-    this entry runs hnsw_probe over the written bucket-partitioned
-    artifact handles unconditionally (no edge ever reaches the
-    driver), asserts the executed route, and shares hnsw_knn's exact
-    oracle — the result is route-invariant by construction, and the
-    driver hash row now proves it."""
+    this entry runs the one-row panel through hnsw_probe_batch over
+    the written bucket-partitioned artifact handles unconditionally
+    (no edge ever reaches the driver), asserts the executed route, and
+    shares hnsw_knn's exact oracle — the result is route-invariant by
+    construction, and the driver hash row proves it."""
     sart = session_art(spark, sf_dir)
-    qrow = sart["corpus"].where(F.col("vec_id") == 0).first()
-    if qrow is None:
-        raise ValueError(
-            f"hnsw_knn_dist: query vector vec_id=0 not present in "
-            f"{sf_dir}/embeddings — the query-id convention needs it")
-    qvec = [float(v) for v in qrow.vec]
-    qdf = spark.createDataFrame([(qvec,)], "qvec array<double>")
-    out = hnsw_probe(spark, sart["corpus"], sart, qdf, k=10)
-    if LAST_ROUTE != "hnsw_probe":
+    queries = _query_panel(sart["corpus"], sf_dir, "hnsw_knn_dist")
+    out = hnsw_probe_batch(spark, sart["corpus"], sart, queries, 10)
+    if LAST_ROUTE != "hnsw_probe_batch":
         raise AssertionError(
             f"hnsw_knn_dist executed route {LAST_ROUTE!r}, expected "
-            "the distributed 'hnsw_probe'")
-    return out
+            "the distributed 'hnsw_probe_batch'")
+    return out.select("vec_id", "score")
 
 
 # -------------------------------------------------------- batch probe
@@ -670,7 +551,7 @@ def _batch_visited(spark: SparkSession, corpus: DataFrame, art: dict,
     a0 = _adj_df(spark, art["adj"][0])
     visited = f.localCheckpoint(eager=False) if art["L"] > 1 else f
     f = visited
-    # Lineage cuts on the MULTI-CONSUMER state only (see hnsw_probe):
+    # Lineage cuts on the MULTI-CONSUMER state only:
     # visited/n feeds two consumers per hop, so it checkpoints —
     # without that cut each branch re-evaluates the whole beam prefix
     # and the probe re-scores hop 1 exponentially often (measured
@@ -689,10 +570,11 @@ def _batch_visited(spark: SparkSession, corpus: DataFrame, art: dict,
 
 def hnsw_probe_batch(spark: SparkSession, corpus: DataFrame, art: dict,
                      queries: DataFrame, k: int,
-                     ef: int = HNSW_EF, hops: int = HNSW_HOPS) -> DataFrame:
+                     ef: int = HNSW_EF, hops: int = HNSW_HOPS,
+                     keep: DataFrame | None = None) -> DataFrame:
     """Multi-query beam search — the HNSW twin of ivf_batch_knn (I11),
     and the engine's actual deployment shape at scale: retrieval runs
-    as query BATCHES, not one driver-side beam per call.
+    as query BATCHES, and a single query is a batch of one.
 
     `queries` = (qid, qvec). Beam state is a distributed (qid, vec_id)
     frame — every query's frontier advances in the SAME jobs: one
@@ -702,10 +584,22 @@ def hnsw_probe_batch(spark: SparkSession, corpus: DataFrame, art: dict,
     |Q|·ef·M rows, broadcastable into the expansion/scoring joins at
     any corpus size; per-hop localCheckpoint keeps the iterative plan
     tree flat (the dedup_clusters fixpoint convention). Hop count and
-    tie-breaks are identical to hnsw_probe — per-query equality is
-    pinned in tests/test_hnsw.py."""
+    (score DESC NULLS LAST, vec_id) tie-breaks are identical to
+    hnsw_probe_batch_driver — equality pinned in tests/test_hnsw.py.
+
+    `keep` (optional (vec_id) frame of distinct ids) is the ES
+    `knn.filter` contract at fixed beam depth: traversal is
+    UNRESTRICTED (failing nodes still route the beam), only the final
+    result collection is filtered — visited ∩ keep before the top-k."""
     _mark_route("hnsw_probe_batch")
     visited = _batch_visited(spark, corpus, art, queries, ef, hops)
+    if keep is not None:
+        # broadcast the BOUNDED side: visited is |Q|·ef·M ids, keep can
+        # be a large filtered scan — joining keep against the broadcast
+        # visited set yields the identical intersection without ever
+        # broadcasting the predicate side, which at the distributed
+        # route's scale is exactly the side that doesn't fit
+        visited = keep.select("vec_id").join(F.broadcast(visited), "vec_id")
     score = D.cosine("vec", "qvec").alias("score")
     wq = W.partitionBy("qid").orderBy(F.col("score").desc(), "vec_id")
     return (corpus.join(F.broadcast(visited), "vec_id")
@@ -718,52 +612,79 @@ def hnsw_probe_batch(spark: SparkSession, corpus: DataFrame, art: dict,
                   .orderBy("qid", "rank"))
 
 
-def _score_pairs(corpus: DataFrame, queries: DataFrame,
-                 pairs: list[tuple[int, int]]) -> dict:
-    """Cosine for a bounded (qid, vec_id) pair set in ONE job — the
-    batch twin of _score_ids: same JVM fold, same operand order, so
-    the collected doubles are bit-identical to the distributed
-    probe's window inputs."""
-    spark = corpus.sparkSession
-    pdf = spark.createDataFrame([(int(q), int(v)) for q, v in pairs],
-                                "qid bigint, vec_id bigint")
-    rows = (corpus.join(F.broadcast(pdf), "vec_id")
-                  .join(F.broadcast(queries), "qid")
+def _adj_lists(art: dict) -> dict[int, dict[int, list[int]]]:
+    """A collected artifact's layers as src -> [dst, ...] maps."""
+    adj: dict[int, dict[int, list[int]]] = {}
+    for lvl, pairs in art["adj"].items():
+        m: dict[int, list[int]] = {}
+        for s, d in pairs:
+            m.setdefault(s, []).append(d)
+        adj[lvl] = m
+    return adj
+
+
+def _rank_key(score: float | None, vec_id: int) -> tuple:
+    """Spark's `score DESC NULLS LAST, vec_id` as a Python sort key:
+    NaN sorts above every number and NULL (the cosine of a zero
+    vector) after all of them."""
+    if score is None:
+        return (2, 0.0, vec_id)
+    if math.isnan(score):
+        return (0, 0.0, vec_id)
+    return (1, -score, vec_id)
+
+
+def _score_pairs(corpus: DataFrame, qvecs: dict[int, str],
+                 want: dict[int, list[int]]) -> dict:
+    """Cosine of each query against its bounded id list, in ONE job.
+    The pairs travel as one VALUES relation, a row per query holding
+    its vector literal (`qvecs`, `D.vector_sql` text) and its ids as
+    one string, exploded after the parse. Built in the driver's JVM, it
+    costs no Python-side createDataFrame, and the query vectors ride
+    the same broadcast as the ids (a query frame of its own was a
+    broadcast job per call). Same JVM fold, same operands as the
+    distributed probe's window inputs, so the collected doubles are
+    bit-identical to them; a zero vector scores NULL (None)."""
+    vals = ", ".join(f"({q}L, {qvecs[q]}, '{','.join(map(str, ids))}')"
+                     for q, ids in want.items() if ids)
+    pairs = corpus.sparkSession.sql(
+        "SELECT qid, qvec, explode(transform(split(ids, ','), "
+        "x -> CAST(x AS BIGINT))) AS vec_id "
+        f"FROM VALUES {vals} AS t(qid, qvec, ids)")
+    rows = (corpus.join(F.broadcast(pairs), "vec_id")
                   .select("qid", "vec_id",
                           D.cosine("vec", "qvec").alias("score"))
                   .collect())
-    return {(int(r.qid), int(r.vec_id)): float(r.score) for r in rows}
+    return {(r.qid, r.vec_id): r.score for r in rows}
 
 
 def hnsw_probe_batch_driver(spark: SparkSession, corpus: DataFrame,
                             art: dict, queries: DataFrame, k: int,
-                            ef: int = HNSW_EF,
-                            hops: int = HNSW_HOPS) -> DataFrame:
-    """Batch probe with the beam state driver-side — the multi-query
-    twin of hnsw_probe_driver, used on the size-switched small-corpus
-    route where the artifact is already collected: every hop advances
-    ALL queries' beams with ONE bounded pair-scoring job (≤ |Q|·ef·M
-    rows), ~L+hops jobs total vs the distributed form's per-hop
-    materializations. Hop order and (-score, id) tie-breaks are
-    identical to hnsw_probe_batch; equality pinned in tests."""
+                            ef: int = HNSW_EF, hops: int = HNSW_HOPS,
+                            keep: DataFrame | None = None) -> DataFrame:
+    """Batch probe with the beam state driver-side, used on the
+    size-switched small-corpus route where the artifact is already
+    collected: the query panel is collected once, and every hop
+    advances ALL queries' beams with ONE bounded pair-scoring job
+    (≤ |Q|·ef·M pairs), ~L+hops jobs total vs the distributed form's
+    per-hop materializations. Hop order and (score DESC NULLS LAST,
+    vec_id) tie-breaks are identical to hnsw_probe_batch; equality
+    pinned in tests. `keep` is hnsw_probe_batch's result filter; its
+    ids are collected, which the size switch bounds by the corpus."""
     _mark_route("hnsw_probe_batch_driver")
-    adj: dict[int, dict[int, list[int]]] = {}
-    for lvl, prs in art["adj"].items():
-        m: dict[int, list[int]] = {}
-        for s, d in prs:
-            m.setdefault(s, []).append(d)
-        adj[lvl] = m
-    qids = [int(r.qid) for r in queries.select("qid").collect()]
-    scores: dict[tuple[int, int], float] = {}
+    adj = _adj_lists(art)
+    qvecs = {r.qid: D.vector_sql(r.qvec) for r in queries.collect()}
+    qids = sorted(qvecs)
+    scores: dict[tuple[int, int], float | None] = {}
 
     def ensure(state: dict[int, set]) -> None:
-        new = [(q, v) for q, ids in state.items() for v in ids
-               if (q, v) not in scores]
-        if new:
-            scores.update(_score_pairs(corpus, queries, new))
+        new = {q: [v for v in ids if (q, v) not in scores]
+               for q, ids in state.items()}
+        if any(new.values()):
+            scores.update(_score_pairs(corpus, qvecs, new))
 
     def top(q: int, ids, lim: int) -> list[int]:
-        return sorted(ids, key=lambda i: (-scores[(q, i)], i))[:lim]
+        return sorted(ids, key=lambda i: _rank_key(scores[(q, i)], i))[:lim]
 
     tops = set(art["tops"])
     ensure({q: tops for q in qids})
@@ -778,11 +699,10 @@ def hnsw_probe_batch_driver(spark: SparkSession, corpus: DataFrame,
         n = {q: visited[q] | {d for s in f[q]
                               for d in adj[0].get(s, ())} for q in qids}
         if h % 2 == 0:
-            # the hnsw_probe_driver prefetch: pull one extra hop of
-            # neighborhood into the same scoring job — every other
-            # ensure() is then a no-op (subset), pure job-count
-            # reduction, zero semantic change (the beam still only
-            # ranks n[q])
+            # prefetch: pull one extra hop of neighborhood into the
+            # same scoring job — every other ensure() is then a no-op
+            # (subset), pure job-count reduction, zero semantic change
+            # (the beam still only ranks n[q])
             ensure({q: n[q] | {d2 for i in n[q]
                                for d2 in adj[0].get(i, ())}
                     for q in qids})
@@ -790,10 +710,11 @@ def hnsw_probe_batch_driver(spark: SparkSession, corpus: DataFrame,
             ensure(n)
         f = {q: top(q, n[q], ef) for q in qids}
         visited = n
-    out = []
-    for q in sorted(qids):
-        for rank, v in enumerate(top(q, visited[q], k), start=1):
-            out.append((q, v, scores[(q, v)], rank))
+    if keep is not None:
+        ids = {r.vec_id for r in keep.select("vec_id").collect()}
+        visited = {q: visited[q] & ids for q in qids}
+    out = [(q, v, scores[(q, v)], rank) for q in qids
+           for rank, v in enumerate(top(q, visited[q], k), start=1)]
     return spark.createDataFrame(
         out, "qid bigint, vec_id bigint, score double, rank int")
 
@@ -813,7 +734,7 @@ _COS_B = ("list_dot_product(e.vec, qs.qvec)"
 
 
 def _hnsw_batch_oracle() -> str:
-    """The single-query oracle's unrolled beam, lifted per-qid: every
+    """The vec_id=0 oracle's unrolled beam, lifted per-qid: every
     `best` stage becomes a row_number window partitioned by qid."""
     art = _twin_build()
     _guard_oracle_edges(art, "_hnsw_batch_oracle")
@@ -868,15 +789,13 @@ def hnsw_batch_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
     expansion join + one scoring join + one qid window per hop for
     ALL queries. Graph amortized via session_art; oracle unrolls the
     same per-qid beam over the twin's embedded adjacency. Route is
-    size-switched like hnsw_knn: small corpora run the batched
-    driver beam (one pair-scoring job per hop), large ones the fully
-    distributed hnsw_probe_batch — route equality pinned in tests."""
+    size-switched like hnsw_knn (`_probe`): small corpora run the
+    batched driver beam (one pair-scoring job per hop), large ones the
+    fully distributed hnsw_probe_batch — route equality pinned in
+    tests."""
     sart = session_art(spark, sf_dir)
-    queries = _batch_queries(sart["corpus"])
-    if "plain" in sart:
-        return hnsw_probe_batch_driver(spark, sart["corpus"],
-                                       sart["plain"], queries, k=10)
-    return hnsw_probe_batch(spark, sart["corpus"], sart, queries, k=10)
+    return _probe(spark, sart, sart["corpus"],
+                  _batch_queries(sart["corpus"]), 10)
 
 
 @register("hnsw_batch_knn_dist", oracle=lambda: _hnsw_batch_oracle())
@@ -922,30 +841,20 @@ def hnsw_filtered_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
     can return fewer than k — documented, and the oracle mirrors the
     exact same contract.
 
-    Scale shape: the filter is a semi join of the BOUNDED visited set
-    (ef·M ids) against the predicate — at scale that is an id-join
-    that prunes to the visited rows, never a corpus scan beyond the
-    probe's own lookups; the label predicate itself pushes down to
-    the embeddings scan."""
+    Scale shape: the query runs as a one-row panel through the size
+    switch with the predicate as `keep`. On the distributed route the
+    filter joins the predicate against the BOUNDED, broadcast visited
+    set (ef·M ids) — an id-join that prunes to the visited rows, never
+    a corpus scan beyond the probe's own lookups; the label predicate
+    itself pushes down to the embeddings scan. The driver route
+    collects the allowed ids, bounded by the same cap as the corpus."""
     sart = session_art(spark, sf_dir)
-    qrow = sart["corpus"].where(F.col("vec_id") == 0).first()
-    if qrow is None:
-        raise ValueError(
-            f"hnsw_filtered_knn: query vector vec_id=0 not present in "
-            f"{sf_dir}/embeddings — the query-id convention needs it")
-    qvec = [float(v) for v in qrow.vec]
+    queries = _query_panel(sart["corpus"], sf_dir, "hnsw_filtered_knn")
     emb = tables.load_parallel(spark, sf_dir, "embeddings", "vec_id")
     allowed = emb.where(F.col("label").isin(*FILTER_LABELS)) \
                  .select("vec_id")
-    if "plain" in sart:
-        # "plain" exists only when n <= DRIVER_BEAM_MAX_NODES, so the
-        # collected filter id set is bounded by the same cap
-        keep = {int(r.vec_id) for r in allowed.collect()}
-        return hnsw_probe_driver(spark, sart["corpus"], sart["plain"],
-                                 qvec, k=10, keep=keep)
-    qdf = spark.createDataFrame([(qvec,)], "qvec array<double>")
-    return hnsw_probe(spark, sart["corpus"], sart, qdf, k=10,
-                      keep=allowed)
+    return _probe(spark, sart, sart["corpus"], queries, 10,
+                  keep=allowed).select("vec_id", "score")
 
 
 # --------------------------------------------- quantized beam (SQ8)
@@ -1007,28 +916,17 @@ def hnsw_sq8_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
     read touches 64 bytes of codes instead of 512 bytes of float64 —
     the memory story that lets the graph's working set stay resident;
     the exact vectors are read for the shortlist rows alone. Route is
-    size-switched like hnsw_knn (driver beam at driver-checkable
-    sizes, distributed hnsw_probe above the cap — equality pinned in
-    tests); the oracle unrolls the identical beam with the decode
+    size-switched like hnsw_knn (`_probe`: driver beam at driver-
+    checkable sizes, distributed hnsw_probe_batch above the cap —
+    equality pinned in tests); the oracle unrolls the identical beam with the decode
     spelled out in SQL over the twin's embedded adjacency."""
     sart = session_art(spark, sf_dir)
-    corpus_q = sq8_corpus(spark, sf_dir)
-    qrow = sart["corpus"].where(F.col("vec_id") == 0).first()
-    if qrow is None:
-        raise ValueError(
-            f"hnsw_sq8_knn: query vector vec_id=0 not present in "
-            f"{sf_dir}/embeddings — the query-id convention needs it")
-    qvec = [float(v) for v in qrow.vec]
-    shortlist_k = 10 * HNSW_SQ8_OVERSAMPLE
-    qdf = spark.createDataFrame([(qvec,)], "qvec array<double>")
-    if "plain" in sart:
-        short = hnsw_probe_driver(spark, corpus_q, sart["plain"],
-                                  qvec, k=shortlist_k)
-    else:
-        short = hnsw_probe(spark, corpus_q, sart, qdf, k=shortlist_k)
-    short = short.select("vec_id", F.col("score").alias("approx"))
+    queries = _query_panel(sart["corpus"], sf_dir, "hnsw_sq8_knn")
+    short = _probe(spark, sart, sq8_corpus(spark, sf_dir), queries,
+                   10 * HNSW_SQ8_OVERSAMPLE)
+    short = short.select("qid", "vec_id", F.col("score").alias("approx"))
     return (sart["corpus"].join(F.broadcast(short), "vec_id")
-            .crossJoin(F.broadcast(qdf))
+            .join(F.broadcast(queries), "qid")
             .select("vec_id", "approx",
                     D.cosine("vec", "qvec").alias("score"))
             .orderBy(F.col("score").desc(), "vec_id").limit(10))
@@ -1174,17 +1072,9 @@ def hnsw_merge_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
     as hnsw_knn; oracle unrolls the identical beam over the twin
     merge's embedded adjacency."""
     mart = merged_art_for(spark, sf_dir)
-    qrow = mart["corpus"].where(F.col("vec_id") == 0).first()
-    if qrow is None:
-        raise ValueError(
-            f"hnsw_merge_knn: query vector vec_id=0 not present in "
-            f"{sf_dir}/embeddings — the query-id convention needs it")
-    qvec = [float(v) for v in qrow.vec]
-    if "plain" in mart:
-        return hnsw_probe_driver(spark, mart["corpus"], mart["plain"],
-                                 qvec, k=10)
-    qdf = spark.createDataFrame([(qvec,)], "qvec array<double>")
-    return hnsw_probe(spark, mart["corpus"], mart, qdf, k=10)
+    queries = _query_panel(mart["corpus"], sf_dir, "hnsw_merge_knn")
+    return _probe(spark, mart, mart["corpus"], queries, 10) \
+        .select("vec_id", "score")
 
 
 # ----------------------------------------------------- numpy twin
@@ -1320,12 +1210,7 @@ def _twin_visited(art: dict, X, nrm, idx_of, q: int,
     identical hops, identical (-score, id) tie-breaks, scores from
     the same dimension-ordered fold — so the visited set is exactly
     what the distributed beam produces."""
-    adj: dict[int, dict[int, list[int]]] = {}
-    for lvl, pairs in art["adj"].items():
-        m: dict[int, list[int]] = {}
-        for s, d in pairs:
-            m.setdefault(s, []).append(d)
-        adj[lvl] = m
+    adj = _adj_lists(art)
     scores: dict[int, float] = {}
 
     def sc(i: int) -> float:
