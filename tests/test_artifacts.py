@@ -334,6 +334,40 @@ def test_load_parallel_shuffles_once_per_table(spark, write_embeddings):
     assert sorted(r.vec_id for r in first.collect()) == list(range(len(x)))
 
 
+def _partitions_with_rows(df) -> int:
+    from pyspark.sql import functions as F
+    return df.select(F.spark_partition_id().alias("p")).distinct().count()
+
+
+def test_load_parallel_spreads_a_one_row_group_file(spark, tmp_path):
+    """A file past the 4 MB open cost is cut into several byte-range
+    splits, but its one row group is read by one of them: the table
+    still runs on one core. load_parallel counts files, not splits."""
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from unified_vector_database_spark import tables
+
+    cores = spark.sparkContext.defaultParallelism
+    n = (max(2, cores // 2) * (4 << 20) + (1 << 20)) // 256
+    x = np.random.default_rng(0).standard_normal((n, 64)).astype(np.float32)
+    path = str(tmp_path / "embeddings.parquet")
+    pq.write_table(pa.table({
+        "vec_id": pa.array(range(n), pa.int64()),
+        "embedding": pa.array(list(x), pa.list_(pa.float32()))}),
+        path, row_group_size=n, compression="none")
+    assert pq.ParquetFile(path).metadata.num_row_groups == 1
+    raw = spark.read.parquet(path)
+    # the split count passes a "one split per two cores" check ...
+    assert raw.rdd.getNumPartitions() >= max(2, cores // 2)
+    # ... while one split holds every row
+    assert _partitions_with_rows(raw) == 1
+    df = tables.load_parallel(spark, str(tmp_path), "embeddings", "vec_id")
+    assert _partitions_with_rows(df) == cores
+    assert df.count() == n
+
+
 def test_load_parallel_rebuilds_on_overwrite(spark, write_embeddings,
                                              tmp_path, monkeypatch):
     """An overwritten table gets a new copy; the old copy is removed and

@@ -177,6 +177,11 @@ def test_partitioned_collection_prunes_metadata_scans(spark, sf_dir, tmp_path):
     assert sorted(e for e in os.listdir(data_dir)
                   if e.startswith("lang=")) == sorted(
         f"lang={v}" for v in langs)
+    # each hive directory holds at most one file per core
+    cores = spark.sparkContext.defaultParallelism
+    assert all(len([f for f in os.listdir(os.path.join(data_dir, d))
+                    if f.endswith(".parquet")]) <= cores
+               for d in os.listdir(data_dir) if d.startswith("lang="))
 
     scan = col.read().where(F.col("lang") == "en")
     assert_partition_pruned(scan, "lang")
@@ -338,8 +343,8 @@ def test_restore_to_version_without_norms(spark, tmp_path):
     assert col.count() == 11
 
 
-def _jobs(spark, fn):
-    """(fn(), number of Spark jobs it ran), counted by job group."""
+def _job_ids(spark, fn):
+    """(fn(), ids of the Spark jobs it ran), by job group."""
     import time
     import uuid
     sc = spark.sparkContext
@@ -351,7 +356,13 @@ def _jobs(spark, fn):
         sc.setLocalProperty("spark.jobGroup.id", None)
         sc.setLocalProperty("spark.job.description", None)
     time.sleep(0.5)  # job-start events reach the status store async
-    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+    return out, sc.statusTracker().getJobIdsForGroup(group)
+
+
+def _jobs(spark, fn):
+    """(fn(), number of Spark jobs it ran), counted by job group."""
+    out, ids = _job_ids(spark, fn)
+    return out, len(ids)
 
 
 def test_read_fires_no_job_and_infers_the_same_schema(spark, tmp_path):
@@ -399,3 +410,134 @@ def test_wrong_dim_upsert_changes_nothing(spark, tmp_path):
         col.upsert(_vec_rows(spark, range(5), 7).unionByName(bad))
     assert files() == before and col.describe() == m
     assert col.count() == 10 and col.read().count() == 10
+
+
+def _data_files(col) -> tuple[list[int], int]:
+    """(row count of each parquet file holding rows, number of parquet
+    files) of the current version, hive directories included."""
+    import glob
+    import os
+
+    import pyarrow.parquet as pq
+    files = glob.glob(os.path.join(col._data_path(col.describe().version),
+                                   "**", "*.parquet"), recursive=True)
+    rows = [pq.ParquetFile(f).metadata.num_rows for f in files]
+    return [n for n in rows if n], len(files)
+
+
+def _max_tasks(spark, fn):
+    """(fn(), the largest task count of a stage its Spark jobs ran)."""
+    out, ids = _job_ids(spark, fn)
+    tracker = spark.sparkContext.statusTracker()
+    return out, max(tracker.getStageInfo(s).numTasks for j in ids
+                    for s in tracker.getJobInfo(j).stageIds)
+
+
+def test_commit_spreads_one_file_over_the_cores(spark, tmp_path):
+    """A one-file, one-row-group upsert is written as one file with rows
+    per core, and a cosine search scans them with one task each."""
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from unified_vector_database_spark import api
+
+    cores = spark.sparkContext.defaultParallelism
+    n = 2000
+    x = np.random.default_rng(1).standard_normal((n, VDIM)).astype(np.float32)
+    src = str(tmp_path / "batch.parquet")
+    pq.write_table(pa.table({
+        "id": pa.array(range(n), pa.int64()),
+        "embedding": pa.array(list(x), pa.list_(pa.float32()))}),
+        src, row_group_size=n)
+    assert pq.ParquetFile(src).metadata.num_row_groups == 1
+    col = Collection.create(spark, str(tmp_path), "spread", id_col="id",
+                            dim=VDIM)
+    assert col.upsert(spark.read.parquet(src)) == n
+    full, files = _data_files(col)
+    assert len(full) == files == min(n, cores) and sum(full) == n
+    rows, tasks = _max_tasks(spark, lambda: api.search(
+        col.read(), {"vector": x[7].tolist(), "limit": 3},
+        id_col="id").collect())
+    assert tasks == min(n, cores)
+    assert rows[0].id == 7
+
+
+def test_commit_file_count_is_constant_over_cycles(spark, tmp_path):
+    """Upserts, deletes and updates each rewrite the version into the
+    same number of files: no tail of small files grows."""
+    cores = spark.sparkContext.defaultParallelism
+    col = Collection.create(spark, str(tmp_path), "cycles", id_col="id",
+                            dim=VDIM)
+    col.upsert(_vec_rows(spark, range(400), 0))
+    counts = [_data_files(col)[1]]
+    for cycle in range(10):
+        lo = 400 + 40 * cycle
+        col.upsert(_vec_rows(spark, range(lo - 20, lo + 20), cycle))
+        col.delete(F.col("id") < lo - 380)
+        col.update(F.col("id") % 7 == cycle % 7, label=cycle)
+        counts.append(_data_files(col)[1])
+    assert counts == [cores] * 11
+    assert col.count() == 400 == col.read().count()
+
+
+def test_fewer_rows_than_cores(spark, tmp_path):
+    from unified_vector_database_spark import api
+
+    col = Collection.create(spark, str(tmp_path), "tiny", id_col="id",
+                            dim=VDIM)
+    assert col.upsert(_vec_rows(spark, range(3), 8)) == 3
+    full, _ = _data_files(col)
+    assert 1 <= len(full) <= 3 and sum(full) == 3
+    got = api.search(col.read(), {"vector": [1.0, 0.0, 0.0, 0.0],
+                                  "limit": 10}, id_col="id").collect()
+    assert sorted(r.id for r in got) == [0, 1, 2]
+
+
+def test_every_row_deleted(spark, tmp_path):
+    """A version with no rows reads, counts and searches as empty."""
+    from unified_vector_database_spark import api
+
+    col = Collection.create(spark, str(tmp_path), "empty", id_col="id",
+                            dim=VDIM)
+    col.upsert(_vec_rows(spark, range(20), 9))
+    assert col.delete(F.lit(True)) == 0
+    full, files = _data_files(col)
+    assert full == [] and files >= 1
+    assert col.count() == 0 and col.read().count() == 0
+    assert col.stats()["rows"] == 0
+    specs = [{"vector": [1.0, 0.0, 0.0, 0.0], "limit": 5},
+             {"filter": {"must": [{"key": "id", "match": 3}]}},
+             {"filter": {"must_not": [{"key": "label", "match": 1}]},
+              "limit": 5}]
+    for spec in specs:
+        assert api.search(col.read(), spec, id_col="id").collect() == []
+    # the next upsert brings the collection back
+    assert col.upsert(_vec_rows(spark, range(5), 10)) == 5
+
+
+def test_restore_reinstates_count_and_schema(spark, tmp_path):
+    """restore() and a read by tag take the pinned version's recorded
+    row count and schema: no count job, no schema inference. A pin
+    stored as a bare version number still restores."""
+    col = Collection.create(spark, str(tmp_path), "r", id_col="id",
+                            dim=VDIM)
+    col.upsert(_vec_rows(spark, range(12), 11))
+    col.snapshot("twelve")
+    schema = col.read().schema
+    col.upsert(_vec_rows(spark, range(12, 20), 12))
+    assert col.count() == 20
+    col.restore("twelve")
+    n, jobs = _jobs(spark, col.count)
+    assert (n, jobs) == (12, 0)
+    df, jobs = _jobs(spark, col.read)
+    assert jobs == 0 and df.schema == schema
+    tagged, jobs = _jobs(spark, lambda: col.read(tag="twelve"))
+    assert jobs == 0 and tagged.schema == schema
+    assert df.count() == 12
+
+    from unified_vector_database_spark.sources import fsio
+    fsio.write_json(col._snapshots_path, {"old": 1})
+    col.restore("old")
+    assert col.describe().rows is None
+    assert col.count() == 12 and col.read().schema == schema

@@ -539,10 +539,10 @@ def test_hnsw_probe_hops_prune_artifact_partitions(spark, sf_dir):
 
     art = hnsw.art_for(spark, sf_dir)
     corpus = hnsw._corpus_for(spark, sf_dir)
-    frontier = corpus.where(F.col("vec_id") < 8).select("vec_id")
+    frontier = corpus.where(F.col("vec_id") < 8).select(
+        F.col("vec_id").alias("qid"), "vec_id", F.col("vec").alias("qvec"))
     nb = art.get("buckets", hnsw.ADJ_BUCKETS)
-    hop = hnsw._expand(hnsw._adj_df(spark, art["adj"][0]), frontier,
-                       buckets=nb)
+    hop = hnsw._expand(hnsw._adj_df(spark, art["adj"][0]), frontier, nb)
     txt = plan_text(hop)
     assert "dynamicpruning" in txt.lower(), "hop scans read all buckets"
     # and the probe built on those hops still answers over the

@@ -16,10 +16,9 @@ so they survive a session restart.
 
 Loader frames are worth caching even though they hold no data:
 `spark.read.parquet` re-reads footers for schema inference (~0.1 s)
-and `tables.load_parallel`'s partition probe forces a full physical
-planning of the scan (~0.15 s). Most registered queries load 1-3
-tables, so that was ~0.2-0.3 s on nearly every query. The frames stay
-lazy, with one exception: a `tables.load_parallel` frame reads the
+and `tables.load_parallel` plans the scan to size its copy. Most
+registered queries load 1-3 tables, so that was ~0.2-0.3 s on nearly
+every query. The frames stay lazy, with one exception: a `tables.load_parallel` frame reads the
 table's hash-partitioned copy, which its build writes through
 `persisted` the first time, so the repartition shuffle is paid once
 per table and not by every action.

@@ -365,27 +365,24 @@ def _adj_df(spark: SparkSession, pairs) -> DataFrame:
     return spark.createDataFrame(pairs or [], "src bigint, dst bigint")
 
 
-def _expand(adj: DataFrame, frontier: DataFrame, qid: bool = False,
+def _expand(adj: DataFrame, frontier: DataFrame,
             buckets: int = ADJ_BUCKETS) -> DataFrame:
-    """One hop: frontier ids -> their out-neighbors. The frontier is
-    bounded (ef·M ids per query) so it broadcasts; when the adjacency
-    is the bucket-partitioned artifact the join carries the bucket
-    key too, so the artifact scan prunes to the frontier's buckets
-    instead of listing every partition. `buckets` MUST be the modulus
-    the artifact was WRITTEN with (persisted in meta, threaded from
-    art['buckets']) — recomputing with a different modulus would
-    silently drop valid edges."""
-    cols = [frontier["qid"], adj["dst"].alias("vec_id")] if qid else \
-        [adj["dst"].alias("vec_id")]
+    """One hop: frontier (qid, vec_id, qvec) -> each query's out-
+    neighbors (qid, vec_id, qvec). The frontier is bounded (ef·M ids
+    per query) so it broadcasts; when the adjacency is the bucket-
+    partitioned artifact the join carries the bucket key too, so the
+    artifact scan prunes to the frontier's buckets instead of listing
+    every partition. `buckets` MUST be the modulus the artifact was
+    WRITTEN with (persisted in meta, threaded from art['buckets']) —
+    recomputing with a different modulus would silently drop valid
+    edges."""
+    f = frontier
+    cond = adj["src"] == f["vec_id"]
     if "bucket" in adj.columns:
-        f = frontier.withColumn(
-            "_b", F.pmod("vec_id", F.lit(buckets)).cast("int"))
+        f = f.withColumn("_b", F.pmod("vec_id", F.lit(buckets)).cast("int"))
         cond = (adj["bucket"] == f["_b"]) & (adj["src"] == f["vec_id"])
-        if qid:
-            cols = [f["qid"], adj["dst"].alias("vec_id")]
-        return adj.join(F.broadcast(f), cond).select(*cols)
-    return (adj.join(F.broadcast(frontier), adj["src"] == frontier["vec_id"])
-               .select(*cols))
+    return (adj.join(F.broadcast(f), cond)
+               .select(f["qid"], adj["dst"].alias("vec_id"), f["qvec"]))
 
 
 def _corpus_for(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -524,47 +521,49 @@ def _batch_visited(spark: SparkSession, corpus: DataFrame, art: dict,
                    queries: DataFrame, ef: int, hops: int) -> DataFrame:
     """The shared beam engine of the batch probe AND the ingest merge:
     advance every query's frontier in the same jobs, return the final
-    per-query visited candidate set (qid, vec_id). State is bounded by
-    |Q|·ef·M rows; per-hop localCheckpoint keeps the iterative plan
-    flat (the dedup_clusters fixpoint convention)."""
+    per-query visited candidate set (qid, vec_id, qvec). State is
+    bounded by |Q|·ef·M rows; per-hop localCheckpoint keeps the
+    iterative plan flat (the dedup_clusters fixpoint convention).
+
+    Every state row carries its query's vector, so each scoring stage
+    broadcasts the one candidate frame: a second broadcast of the query
+    panel would be a Spark job of its own in every stage."""
     score = D.cosine("vec", "qvec").alias("score")
     wq = W.partitionBy("qid").orderBy(F.col("score").desc(), "vec_id")
+    nb = art.get("buckets", ADJ_BUCKETS)
 
     def best(cand: DataFrame, limit: int) -> DataFrame:
         return (corpus.join(F.broadcast(cand), "vec_id")
-                      .join(F.broadcast(queries), "qid")
-                      .select("qid", "vec_id", score)
+                      .select("qid", "vec_id", "qvec", score)
                       .withColumn("rn", F.row_number().over(wq))
                       .where(F.col("rn") <= limit)
-                      .select("qid", "vec_id"))
+                      .select("qid", "vec_id", "qvec"))
 
-    nb = art.get("buckets", ADJ_BUCKETS)
-    seeds = (queries.select("qid")
+    def grow(state: DataFrame, frontier: DataFrame, adj) -> DataFrame:
+        return (state.union(_expand(_adj_df(spark, adj), frontier, nb))
+                .dropDuplicates(["qid", "vec_id"])
+                .localCheckpoint(eager=False))
+
+    seeds = (queries.select("qid", "qvec")
              .crossJoin(F.broadcast(_ids_df(spark, art["tops"])
                                     .select("vec_id"))))
     f = best(seeds, HNSW_SEEDS).localCheckpoint(eager=False)
     for lvl in range(art["L"] - 1, 0, -1):
-        a = _adj_df(spark, art["adj"][lvl])
-        n = (f.union(_expand(a, f, qid=True, buckets=nb)).distinct()
-             .localCheckpoint(eager=False))
-        f = best(n, HNSW_SEEDS)
-    a0 = _adj_df(spark, art["adj"][0])
+        f = best(grow(f, f, art["adj"][lvl]), HNSW_SEEDS)
     visited = f.localCheckpoint(eager=False) if art["L"] > 1 else f
     f = visited
     # Lineage cuts on the MULTI-CONSUMER state only:
-    # visited/n feeds two consumers per hop, so it checkpoints —
+    # visited feeds two consumers per hop, so it checkpoints —
     # without that cut each branch re-evaluates the whole beam prefix
     # and the probe re-scores hop 1 exponentially often (measured
     # 14.7 s vs 5.0 s at sf0.1 with a sparser cadence). The per-hop
-    # frontier best(n) reads a checkpointed n and has ONE consumer
-    # (the next expansion), so its former checkpoint was pure
+    # frontier best(visited) reads the checkpointed state and has ONE
+    # consumer (the next expansion), so its former checkpoint was pure
     # planning overhead (~60-100 ms per lazy localCheckpoint call,
     # measured).
     for _ in range(hops):
-        n = (visited.union(_expand(a0, f, qid=True, buckets=nb))
-             .distinct().localCheckpoint(eager=False))
-        f = best(n, ef)
-        visited = n
+        visited = grow(visited, f, art["adj"][0])
+        f = best(visited, ef)
     return visited
 
 
@@ -576,14 +575,14 @@ def hnsw_probe_batch(spark: SparkSession, corpus: DataFrame, art: dict,
     and the engine's actual deployment shape at scale: retrieval runs
     as query BATCHES, and a single query is a batch of one.
 
-    `queries` = (qid, qvec). Beam state is a distributed (qid, vec_id)
-    frame — every query's frontier advances in the SAME jobs: one
-    bucket-pruned adjacency join expands all frontiers at once, one
-    corpus id-join scores all candidates, one qid-partitioned window
-    (WindowGroupLimit) keeps each query's best ef. State is bounded by
-    |Q|·ef·M rows, broadcastable into the expansion/scoring joins at
-    any corpus size; per-hop localCheckpoint keeps the iterative plan
-    tree flat (the dedup_clusters fixpoint convention). Hop count and
+    `queries` = (qid, qvec). Beam state is a distributed
+    (qid, vec_id, qvec) frame — every query's frontier advances in the
+    SAME jobs: one bucket-pruned adjacency join expands all frontiers
+    at once, one corpus id-join scores all candidates, one
+    qid-partitioned window (WindowGroupLimit) keeps each query's best
+    ef. State is bounded by |Q|·ef·M rows, broadcastable into the
+    expansion/scoring joins at any corpus size; per-hop
+    localCheckpoint keeps the iterative plan tree flat (the dedup_clusters fixpoint convention). Hop count and
     (score DESC NULLS LAST, vec_id) tie-breaks are identical to
     hnsw_probe_batch_driver — equality pinned in tests/test_hnsw.py.
 
@@ -603,7 +602,6 @@ def hnsw_probe_batch(spark: SparkSession, corpus: DataFrame, art: dict,
     score = D.cosine("vec", "qvec").alias("score")
     wq = W.partitionBy("qid").orderBy(F.col("score").desc(), "vec_id")
     return (corpus.join(F.broadcast(visited), "vec_id")
-                  .join(F.broadcast(queries), "qid")
                   .select("qid", "vec_id", score)
                   .withColumn("rank", F.row_number().over(wq))
                   .where(F.col("rank") <= k)

@@ -11,6 +11,20 @@ all recorded by the commit's write job: `count()` needs no scan and
 fires no Spark job (a manifest without a schema, written before the
 schema was recorded, is read with schema inference).
 
+File layout: every commit writes its version hash-partitioned on the
+collection's id column into `tables.spread_files` files — one per
+core (the session's default parallelism), or the smallest multiple of
+the core count that keeps files within
+`spark.sql.files.maxPartitionBytes` of the optimizer's size estimate,
+so scan tasks run in full waves. A scan of the version then has one split with rows
+per core, so a search scores the collection on every core, where one
+file with one row group is read by a single task however many byte
+ranges it is cut into (the reference backends' segments/shards).
+Every commit rewrites the version, so the count stays the same from
+commit to commit: no tail of small files grows. A `partition_by`
+collection has at most that many files in each hive directory.
+`compact()` alone writes the file count it is asked for.
+
 Every vector column `<vec>` (array<float|double>) has a double column
 `_norm_<vec>` beside it: `D.norm(<vec>)`, computed in the
 commit's write job for the rows the commit brings in (an upsert batch,
@@ -41,6 +55,7 @@ from dataclasses import dataclass
 from pyspark.sql import Column, DataFrame, SparkSession, functions as F
 from pyspark.sql.types import ArrayType, DoubleType, FloatType, StructType
 
+from .. import tables
 from ..functions import distance as D
 from . import fsio
 
@@ -57,16 +72,17 @@ class Manifest:
     # hot metadata columns the data layout partitions on (hive-style
     # dirs): filtered scans on these prune at the FILE LISTING — the
     # metadata analog of the IVF cid layout (operators/index.py).
-    # None = unpartitioned. Absent in pre-r2 manifests -> default.
+    # None = unpartitioned, also in manifests written before the field.
     partition_by: list[str] | None = None
     # Row count of the CURRENT version, recorded at commit time from
-    # the write job's observed metrics (r9 opt): count()/stats()/
-    # compact() read it instead of re-scanning parquet footers. None
-    # (pre-r9 manifests) -> callers fall back to a Spark count.
+    # the write job's observed metrics: count()/stats()/compact() read
+    # it instead of re-scanning parquet footers. None (manifests
+    # written before the field) -> callers fall back to a Spark count.
     rows: int | None = None
     # Schema of the CURRENT version as a read returns it (StructType
     # JSON), recorded at commit time so read() infers nothing. None
-    # (older manifests, or after restore) -> schema inference.
+    # (older manifests, or a restored version that had none) ->
+    # schema inference.
     schema: dict | None = None
     # Highest version ever published. A commit after restore() writes
     # the version above it, never over a directory a snapshot may pin.
@@ -269,12 +285,13 @@ class Collection:
         pointer (restore() moves it; this never mutates). Data dirs
         are immutable, so a historical read is just a different scan
         path — concurrent writers are unaffected."""
-        if tag is not None:
-            snaps = self._read_snapshots()
-            if tag not in snaps:
-                raise ValueError(f"no snapshot {tag!r}")
-            version = snaps[tag]
         m = self.describe()
+        schema = m.schema
+        if tag is not None:
+            pin = self._pin(tag)
+            version, schema = pin["version"], pin.get("schema")
+        elif version is not None and version != m.version:
+            schema = None
         v = m.version if version is None else version
         if v == 0:
             return None
@@ -282,8 +299,8 @@ class Collection:
         if not fsio.isdir(path):
             raise ValueError(f"version {v} does not exist (vacuumed?)")
         reader = self.spark.read
-        if v == m.version and m.schema is not None:
-            reader = reader.schema(StructType.fromJson(m.schema))
+        if schema is not None:
+            reader = reader.schema(StructType.fromJson(schema))
         return reader.parquet(path)
 
     def count(self) -> int:
@@ -299,8 +316,9 @@ class Collection:
         _stats): row count, current-version file count and bytes,
         retained versions, snapshots. File-level numbers come from the
         directory listing — the same metadata a SHOW TABLE EXTENDED
-        reports — so the call is O(files), not O(rows), except for the
-        row count which is one parquet-footer-only Spark count."""
+        reports — and the row count from the manifest, so the call is
+        O(files), not O(rows), and fires no Spark job (a manifest
+        without a recorded count falls back to a Spark count)."""
         m = self.describe()
         files, nbytes = 0, 0
         if m.version:
@@ -322,28 +340,33 @@ class Collection:
 
     # ----------------------------------------------------- maintenance
     def compact(self, target_rows_per_file: int = 1_000_000) -> int:
-        """OPTIMIZE: rewrite the current version into right-sized files.
-        Micro-batch streaming ingest and trickle upserts leave a long
-        tail of small files; scans then pay one task + one object-store
-        request per file. Compaction is a coalesce-style rewrite into
-        ceil(n / target) files — copy-on-write like every commit, so
-        concurrent readers of the old version are undisturbed. (On a
-        real deployment size by bytes via maxPartitionBytes; rows are
-        the deterministic local proxy.)"""
+        """OPTIMIZE: rewrite the current version into ceil(n / target)
+        files. Scans pay one task + one object-store request per file.
+        Every commit writes `tables.spread_files` files (module
+        docstring), so trickle upserts no longer leave a long tail of
+        small files; one remains where files are many and small anyway:
+        a `partition_by` collection (up to that many files in each hive
+        directory) or a version written before the layout rule. For a
+        small collection the rewrite holds fewer files than cores,
+        trading scan parallelism for fewer tasks, and the next ordinary
+        commit writes the default layout again. Copy-on-write like
+        every commit, so concurrent readers of the old version are
+        undisturbed. (On a real deployment size by bytes via
+        maxPartitionBytes; rows are the deterministic local proxy.)"""
         m = self.describe()
         current = self.read()
         if current is None:
             return 0
         n = m.rows if m.rows is not None else current.count()
         files = max(1, -(-n // target_rows_per_file))
-        return self._commit(current.repartition(files), m)
+        return self._commit(current, m, files=files)
 
     def vacuum(self) -> list[int]:
         """Drop data versions no longer reachable from the manifest or
         any snapshot tag — the GC half of copy-on-write. Returns the
         versions removed."""
         m = self.describe()
-        keep = {m.version} | set(self._read_snapshots().values())
+        keep = {m.version} | {p["version"] for p in self._pins().values()}
         removed = []
         for entry in fsio.listdir(self.path):
             if not entry.startswith("data_v"):
@@ -357,24 +380,21 @@ class Collection:
     # ------------------------------------------------------- snapshots
     def snapshot(self, tag: str) -> str:
         """Pin the current version under a tag (pointer copy, O(1) —
-        data directories are immutable)."""
+        data directories are immutable). The pin carries the row count
+        and schema the version's commit recorded, so restore() and a
+        read by tag need no scan and no schema inference."""
         m = self.describe()
-        snaps = self._read_snapshots()
-        snaps[tag] = m.version
-        fsio.write_json(self._snapshots_path, snaps)
+        pins = self._read_snapshots()
+        pins[tag] = {"version": m.version, "rows": m.rows,
+                     "schema": m.schema}
+        fsio.write_json(self._snapshots_path, pins)
         return tag
 
     def restore(self, tag: str) -> None:
-        snaps = self._read_snapshots()
-        if tag not in snaps:
-            raise ValueError(f"no snapshot {tag!r}")
+        pin = self._pin(tag)
         m = self.describe()
-        m.version = snaps[tag]
-        # the recorded count and schema belong to the version being
-        # abandoned; the restored version's are unknown here (None ->
-        # scan and schema inference)
-        m.rows = None
-        m.schema = None
+        m.version = pin["version"]
+        m.rows, m.schema = pin.get("rows"), pin.get("schema")
         self._write_manifest(m)
 
     # --------------------------------------------------------- private
@@ -391,6 +411,19 @@ class Collection:
             return {}
         return fsio.read_json(self._snapshots_path)
 
+    def _pins(self) -> dict[str, dict]:
+        """tag -> {"version", "rows", "schema"}. A pin written as a
+        bare version number, before pins carried the version's record,
+        has no rows or schema (None -> scan and schema inference)."""
+        return {t: p if isinstance(p, dict) else {"version": p}
+                for t, p in self._read_snapshots().items()}
+
+    def _pin(self, tag: str) -> dict:
+        pins = self._pins()
+        if tag not in pins:
+            raise ValueError(f"no snapshot {tag!r}")
+        return pins[tag]
+
     def _data_path(self, version: int) -> str:
         return fsio.join(self.path, f"data_v{version}")
 
@@ -404,7 +437,12 @@ class Collection:
     def _write_manifest(self, m: Manifest) -> None:
         fsio.write_json(self._manifest_path, m.to_json())
 
-    def _commit(self, df: DataFrame, m: Manifest) -> int:
+    def _commit(self, df: DataFrame, m: Manifest,
+                files: int | None = None) -> int:
+        """Write `df` as the next version and move the manifest to it:
+        hash-partitioned on the id column into `tables.spread_files`
+        files (module docstring), or round-robin into `files` files
+        when the caller sizes the version itself (compact)."""
         from pyspark.sql import Observation
 
         new_version = self._published(m) + 1
@@ -419,9 +457,11 @@ class Collection:
         bad = (F.size(vecs[0]) != m.dim if m.dim is not None and vecs
                else F.lit(False))
         obs = Observation()
-        writer = (df.observe(obs, F.count(F.lit(1)).alias("n"),
-                             F.count(F.when(bad, 1)).alias("bad"))
-                  .write.mode("overwrite"))
+        out = df.observe(obs, F.count(F.lit(1)).alias("n"),
+                         F.count(F.when(bad, 1)).alias("bad"))
+        out = (out.repartition(files) if files else
+               out.repartition(tables.spread_files(df), m.id_col))
+        writer = out.write.mode("overwrite")
         if m.partition_by:
             writer = writer.partitionBy(*m.partition_by)
         path = self._data_path(new_version)

@@ -27,33 +27,55 @@ def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
                          spark)
 
 
+def spread_files(df: DataFrame) -> int:
+    """How many files `df` is written as, so that a scan of them runs
+    on every core of the session: one file per core, or, when the
+    optimizer's size estimate is more than one
+    `spark.sql.files.maxPartitionBytes` per core, the smallest multiple
+    of the core count that keeps files within that size. A multiple,
+    because scan tasks run in waves of one per core: 4 files on 3
+    cores take two waves, the second one a third full. The estimate is
+    plan statistics and fires no job. A plan the optimizer cannot size
+    (an RDD source: `spark.sql.defaultSizeInBytes`) counts as small."""
+    spark = df.sparkSession
+    conf = spark._jsparkSession.sessionState().conf()
+    size = int(str(df._jdf.queryExecution().optimizedPlan().stats()
+                   .sizeInBytes()))
+    if size >= conf.defaultSizeInBytes():
+        size = 0
+    cores = spark.sparkContext.defaultParallelism
+    return cores * max(1, -(-size // (cores * conf.filesMaxPartitionBytes())))
+
+
 def load_parallel(spark: SparkSession, sf_dir: str, name: str,
                   key: str) -> DataFrame:
     """The table spread over the session's parallelism: a copy of it
-    hash-partitioned on `key` into that many parquet files.
+    hash-partitioned on `key` into `spread_files` parquet files.
 
-    The local test tables are single parquet files, i.e. one input
-    split — compute-heavy per-row operators (shingling, fingerprints,
-    per-pair vector math) would otherwise run on one core. The copy is
-    written once per input fingerprint (`artifacts.persisted`, so an
-    overwritten table gets a new copy and the old one is removed), and
-    every frame over the table scans it: the repartition shuffle is
-    paid once per table, not once per query, and filters still push
-    into the scan. On a real cluster the scan has one split per 128 MB
-    and the table is returned as it is — hence a distinct entry point
-    rather than a default: operators opt in only where per-row work
-    dominates scan cost."""
+    The local test tables are single parquet files with one row group,
+    and a row group is read by one split however many byte ranges the
+    file is cut into — compute-heavy per-row operators (shingling,
+    fingerprints, per-pair vector math) would otherwise run on one
+    core. The copy is written once per input fingerprint
+    (`artifacts.persisted`, so an overwritten table gets a new copy
+    and the old one is removed), and every frame over the table scans
+    it: the repartition shuffle is paid once per table, not once per
+    query, and filters still push into the scan. A table stored as at
+    least that many files already spreads (each file holds rows, so
+    each is a split with rows) and is returned as it is — hence a
+    distinct entry point rather than a default: operators opt in only
+    where per-row work dominates scan cost."""
     path = table_path(sf_dir, name)
 
     def build() -> DataFrame:
         df = load(spark, sf_dir, name)
-        target = spark.sparkContext.defaultParallelism
-        if df.rdd.getNumPartitions() >= max(2, target // 2):
+        files = spread_files(df)
+        if len(df.inputFiles()) >= files:
             return df
         # the copy keeps the table's file name, so plans name the table
         out = artifacts.persisted(
-            ("load_parallel", key, target), path,
-            lambda d: df.repartition(target, key).write.parquet(
+            ("load_parallel", key, files), path,
+            lambda d: df.repartition(files, key).write.parquet(
                 table_path(d, name)))
         return spark.read.parquet(table_path(out, name))
 
